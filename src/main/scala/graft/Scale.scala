@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Data-sized parallelism dials — the generalization of
@@ -109,21 +111,56 @@ object Scale {
     * small SF), capped at [[DefaultMaxPartitions]]. Call at session build,
     * before a SparkSession exists — hence the raw-file walk and the
     * default cap. */
-  def initialShufflePartitions(sfDir: String, floor: Int): Int = {
-    val bytes =
-      try {
-        val root = java.nio.file.Paths.get(sfDir)
-        if (!java.nio.file.Files.isDirectory(root)) 0L
-        else {
-          val s = java.nio.file.Files.walk(root)
-          try s.filter(java.nio.file.Files.isRegularFile(_))
-            .mapToLong(java.nio.file.Files.size(_)).sum()
-          finally s.close()
-        }
-      } catch { case _: Throwable => 0L }
+  def initialShufflePartitions(sfDir: String, floor: Int): Int =
     deadbandThenClamp(
-      (bytes * MaxExpansion + BytesPerPartition - 1) / BytesPerPartition,
+      (dirBytes(sfDir) * MaxExpansion + BytesPerPartition - 1) / BytesPerPartition,
       floor, DefaultMaxPartitions)
+
+  /** On-disk bytes of every regular file under `sfDir` — 0 for a missing
+    * dir, and 0 (logged) when the walk fails. */
+  private def dirBytes(sfDir: String): Long =
+    try {
+      val root = java.nio.file.Paths.get(sfDir)
+      if (!java.nio.file.Files.isDirectory(root)) 0L
+      else {
+        val s = java.nio.file.Files.walk(root)
+        try s.filter(java.nio.file.Files.isRegularFile(_))
+          .mapToLong(java.nio.file.Files.size(_)).sum()
+        finally s.close()
+      }
+    } catch {
+      case NonFatal(e) =>
+        System.err.println(s"[scale] byte walk failed for $sfDir: $e; counting 0 bytes")
+        0L
+    }
+
+  /** Spark's file-index rule for names that are not data: `_`-prefixed
+    * (`_SUCCESS`, `_metadata`) unless a partition dir (`k=v`),
+    * `.`-prefixed (`.crc` checksums) and in-flight `._COPYING_` copies. */
+  private def hiddenName(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
+
+  /** Rows in one parquet table — a single file or a Spark-written
+    * directory (partition subdirs included) — summed from the record
+    * counts in its data files' footers. No Spark job runs, and the sum
+    * equals `spark.read.parquet(path).count()`: the same files are
+    * counted, since names Spark's file index skips are skipped here. */
+  private[graft] def footerRows(path: String,
+      conf: org.apache.hadoop.conf.Configuration): Long = {
+    import org.apache.hadoop.fs.FileStatus
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(conf)
+    def dataFiles(st: FileStatus): Iterator[FileStatus] =
+      if (st.isDirectory)
+        fs.listStatus(st.getPath).iterator
+          .filterNot(c => hiddenName(c.getPath.getName)).flatMap(dataFiles)
+      else Iterator(st)
+    dataFiles(fs.getFileStatus(root)).map { st =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum
   }
 
   /** Row-based dial for OBJECT-HEAVY aggregation barriers (collect_list /
@@ -134,10 +171,10 @@ object Scale {
     * 127 MB on disk, so every byte dial sat at the 32-partition floor and
     * the collect_list stage collapsed to one 95 GB task), and a collected
     * group lives as BOXED rows at ~15× its shuffled bytes. Row count is
-    * the one statistic that survives both distortions; callers fetch it
-    * with a footer-served `count()` on the base table (the eager staging
-    * pattern — milliseconds on parquet, and these are multi-minute ETL
-    * stages). `rowsPerTask` ≈ 64 MB / boxed-row-bytes. */
+    * the one statistic that survives both distortions. A raw parquet
+    * table's count comes from [[footerRows]] (no job); a derived frame's
+    * from an eager `count()` (the staging pattern — cheap next to these
+    * multi-minute ETL stages). `rowsPerTask` ≈ 64 MB / boxed-row-bytes. */
   def partitionsForRows(spark: SparkSession, rows: Long, rowsPerTask: Long): Int =
     clamp((rows + rowsPerTask - 1) / rowsPerTask,
       spark.sessionState.conf.numShufflePartitions, cap(spark))
@@ -220,7 +257,9 @@ object Scale {
 
   /** Re-size the session's scan and shuffle geometry from parquet ROW
     * counts once a session exists (all three knobs are runtime-settable
-    * SQL confs read at each query's planning). The pre-session byte walk
+    * SQL confs read at each query's planning). The counts are summed from
+    * every table's footers ([[footerRows]]), so tuning submits no Spark
+    * job. The pre-session byte walk
     * ([[initialShufflePartitions]]) is encoding-blind — dictionary/RLE
     * packs low-entropy columns 10–20× below their in-memory rows (the
     * round-10 sf10 rehearsal: 86.6 M rows in 274 MB of files, 3.2 B/row),
@@ -231,17 +270,21 @@ object Scale {
     * sets the three scan/shuffle knobs when the regime carries values,
     * restores their captured stock values on a MEASURED knobs-off input,
     * and leaves the session entirely untouched when the input is
-    * unmeasurable (missing dir / failed probes → rows = 0).
+    * unmeasurable (missing dir / failed probes → rows = 0; every failed
+    * table probe is logged to stderr with its cause).
     * `SPARK_GRAFT_FORCE_TUNE=1/0` forces knobs both ways (the A/B lever).
     * Floors/caps keep sf ≤ 0.1 on today's plans; results are
     * partition-independent regardless. Returns the grid. */
   def tuneSessionGrid(spark: SparkSession, sfDir: String): Int = {
+    val conf = spark.sessionState.newHadoopConf()
     val rows = graft.sources.Tables.names.map { n =>
-      try {
-        val df = if (n == "events") graft.sources.Tables.events(spark, sfDir)
-                 else spark.read.parquet(s"$sfDir/$n.parquet")
-        df.count()
-      } catch { case _: Throwable => 0L }
+      val path = s"$sfDir/$n.parquet"
+      try footerRows(path, conf)
+      catch {
+        case NonFatal(e) =>
+          System.err.println(s"[scale] row probe failed for $n at $path: $e; counting 0 rows")
+          0L
+      }
     }.sum
     // UNMEASURABLE input (missing dir, or every per-table probe failed) is
     // a full session no-op — grid conf and knobs exactly as they were.
@@ -256,17 +299,7 @@ object Scale {
       if (spark.conf.getOption(stockKey(k)).isEmpty)
         spark.conf.set(stockKey(k), spark.conf.get(k))
     }
-    val bytes =
-      try {
-        val root = java.nio.file.Paths.get(sfDir)
-        if (!java.nio.file.Files.isDirectory(root)) 0L
-        else {
-          val s = java.nio.file.Files.walk(root)
-          try s.filter(java.nio.file.Files.isRegularFile(_))
-            .mapToLong(java.nio.file.Files.size(_)).sum()
-          finally s.close()
-        }
-      } catch { case _: Throwable => 0L }
+    val bytes = dirBytes(sfDir)
     val force = sys.env.get("SPARK_GRAFT_FORCE_TUNE") match {
       case Some("1") => Some(true)
       case Some("0") => Some(false)

@@ -184,8 +184,10 @@ object HttpServe {
     * can change the store under a running listener — [[refresh]] is the
     * documented invalidation hook: hand it the post-upsert store and it
     * re-probes, re-decides cache-vs-live under the SAME mode the listener
-    * was started with, rebuilds the maps (two grouped jobs — the same
-    * cost as startup), and swaps atomically. Until refresh returns, the
+    * was started with, rebuilds the maps (the same jobs as startup: the
+    * entry probe, the stops list, two whole-store grouped jobs and one
+    * collect per analytic query — see [[ServingCache]]), and swaps
+    * atomically. Until refresh returns, the
     * listener keeps serving the pre-upsert snapshot — stale-but-consistent,
     * never mixed. */
   final class ServingHandle private[tools] (

@@ -16,9 +16,11 @@ import graft.transit._
   * architecture (it slices pre-generated CSV snapshots per request,
   * `SQL/csv_backend.py:42-58`, and reads pre-denormalized Mongo documents,
   * `Mongo/app.py:64-244`). So the listener collects that superset ONCE at
-  * startup — two whole-store grouped jobs plus the 16 unlimited snapshot
-  * slices — and a request becomes an in-memory lookup + O(response bytes)
-  * of string assembly. No Spark job runs on the request path.
+  * startup — the stops list, two whole-store grouped jobs, and one
+  * collect per analytic query whose rows split into its four service
+  * tags on the driver — and a request becomes an in-memory lookup +
+  * O(response bytes) of string assembly. No Spark job runs on the
+  * request path.
   *
   * Memory: the collected state is ~the rendered schedule text (every
   * departure-time string once for the timetable frame, once more for the
@@ -130,14 +132,22 @@ object ServingCache {
     * the reference's sentinel, `SQL/csv_backend.py:44`). */
   def tagOf(s: ServiceFilter): String = s.sid.getOrElse("4")
 
+  /** The `/api/q1..q4` maps: one collect per query over its tagged
+    * superset ([[QueryService.taggedJson]]), split by service tag on the
+    * driver. A tag the superset has no rows for (a service with no trips)
+    * serves an empty list, exactly as its live slice would. */
+  private[tools] def buildApi(svc: QueryService): Map[(String, String), Vector[String]] =
+    Seq("q1" -> QueryService.Q1, "q2" -> QueryService.Q2,
+        "q3" -> QueryService.Q3, "q4" -> QueryService.Q4).flatMap { case (q, name) =>
+      val byTag = svc.taggedJson(name)
+      allServices.map { s =>
+        val tag = tagOf(s)
+        (q, tag) -> byTag.getOrElse(tag, Vector.empty)
+      }
+    }.toMap
+
   def build(svc: QueryService, timetables: DataFrame): ServingCache = {
-    val analytic: Seq[(String, (ServiceFilter, Limit) => DataFrame)] = Seq(
-      "q1" -> (svc.q1(_, _)), "q2" -> (svc.q2(_, _)),
-      "q3" -> (svc.q3(_, _)), "q4" -> (svc.q4(_, _)))
-    val api = (for {
-      (name, f) <- analytic
-      s <- allServices
-    } yield (name, tagOf(s)) -> f(s, Limit.All).toJSON.collect().toVector).toMap
+    val api = buildApi(svc)
 
     val stopsBody = Timetable.getStops(timetables)
       .toJSON.collect().mkString("[", ",", "]")

@@ -1,6 +1,6 @@
 package graft.transit
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.sources.Writers
 
@@ -61,41 +61,54 @@ final class QueryService(val t: TransitTables, snapshotDir: Option[String] = Non
 
   /** Snapshot slice: prune to the requested service partition, restore the
     * query's canonical presentation (column order, sort, limit). */
-  private def slice(df: DataFrame, service: ServiceFilter, cols: Seq[String],
-      sort: Seq[org.apache.spark.sql.Column], limit: Limit): DataFrame =
+  private def slice(name: String, df: DataFrame, service: ServiceFilter,
+      limit: Limit): DataFrame = {
+    val p = presentations(name)
     df.filter(col(TAG).cast("string") === serviceTag(service))
-      .select(cols.map(col): _*)
-      .orderBy(sort: _*)
+      .select(p.cols.map(col): _*)
+      .orderBy(p.sort: _*)
       .transform(limit.apply)
+  }
 
   def q1(service: ServiceFilter, limit: Limit = Limit.default): DataFrame =
-    snapshot(Q1).map(slice(_, service,
-        Seq("stop_id", "stop_code", "stop_name", "stop_lat", "stop_lon",
-          "total_trip_events", "num_unique_routes"),
-        Seq(col("total_trip_events").desc, col("stop_id")), limit))
+    snapshot(Q1).map(slice(Q1, _, service, limit))
       .getOrElse(Queries.q1BusiestStops(t, service, limit))
 
   def q2(service: ServiceFilter, limit: Limit = Limit.default): DataFrame =
-    snapshot(Q2).map(slice(_, service,
-        Seq("route_id", "route_long_name", "route_short_name", "num_trips",
-          "avg_trip_distance_km", "avg_duration_min", "duration_stddev_min",
-          "avg_speed_kmh"),
-        Seq(col("avg_duration_min").desc, col("route_id")), limit))
+    snapshot(Q2).map(slice(Q2, _, service, limit))
       .getOrElse(Queries.q2RouteStats(t, service, limit))
 
   def q3(service: ServiceFilter, limit: Limit = Limit.default): DataFrame =
-    snapshot(Q3).map(slice(_, service,
-        Seq("stop_id", "stop_name", "stop_lat", "stop_lon", "num_unique_routes"),
-        Seq(col("num_unique_routes").desc, col("stop_id")), limit))
+    snapshot(Q3).map(slice(Q3, _, service, limit))
       .getOrElse(Queries.q3TransferPoints(t, service, limit))
 
   def q4(service: ServiceFilter, limit: Limit = Limit.default): DataFrame =
-    snapshot(Q4).map(slice(_, service,
-        Seq("route_id", "route_long_name", "route_short_name",
-          "total_daily_trips", "hourly_profile"),
-        Seq(col("total_daily_trips").desc, col("route_id")), limit))
+    snapshot(Q4).map(slice(Q4, _, service, limit))
       .getOrElse(
         Queries.q4ServiceFrequencyFrom(hourlyFrequencyView, t.routes, service, limit))
+
+  /** Every service tag's UNLIMITED response rows for one query, each row
+    * rendered as JSON with the same generator `Dataset.toJSON` uses, in
+    * the query's canonical order: tag → rows. What [[slice]] serves per
+    * tag, but from ONE collect over the tagged superset (the snapshot —
+    * one Spark job once it is pinned — or [[QueryService.snapshotFrame]]
+    * when none is on disk) instead of a range-partitioned sort per tag
+    * (a sampling job plus the sort per slice): the superset is a few thousand
+    * aggregated rows, so it is sorted in one partition by (tag, canonical
+    * sort) and split by tag on the driver. The canonical sort is total
+    * per tag, so each tag's rows come out in exactly the slice's order. */
+  def taggedJson(name: String): Map[String, Vector[String]] = {
+    val p = presentations(name)
+    val tag = col(TAG).cast("string")
+    snapshot(name).getOrElse(snapshotFrame(t, name))
+      .coalesce(1)
+      .sortWithinPartitions(tag +: p.sort: _*)
+      .select(tag, to_json(struct(p.cols.map(col): _*)))
+      .collect()
+      .toVector
+      .groupBy(_.getString(0))
+      .map { case (k, rows) => k -> rows.map(_.getString(1)) }
+  }
 
   /** The nested Q4 response face always serves live off the cached view
     * (the reference has no CSV for it either — `SQL/app.py:118-125`). */
@@ -135,6 +148,31 @@ object QueryService {
   val Q4 = "q4_service_frequency"
 
   private def serviceTag(s: ServiceFilter): String = s.sid.getOrElse("4")
+
+  /** One query's response shape: its columns in order and its canonical
+    * sort, total within a service tag (the key column breaks every tie). */
+  private final case class Presentation(cols: Seq[String], sort: Seq[Column])
+
+  /** The one definition of each query's presentation, shared by the
+    * per-request [[QueryService.slice]] and the whole-superset
+    * [[QueryService.taggedJson]]. */
+  private val presentations: Map[String, Presentation] = Map(
+    Q1 -> Presentation(
+      Seq("stop_id", "stop_code", "stop_name", "stop_lat", "stop_lon",
+        "total_trip_events", "num_unique_routes"),
+      Seq(col("total_trip_events").desc, col("stop_id"))),
+    Q2 -> Presentation(
+      Seq("route_id", "route_long_name", "route_short_name", "num_trips",
+        "avg_trip_distance_km", "avg_duration_min", "duration_stddev_min",
+        "avg_speed_kmh"),
+      Seq(col("avg_duration_min").desc, col("route_id"))),
+    Q3 -> Presentation(
+      Seq("stop_id", "stop_name", "stop_lat", "stop_lon", "num_unique_routes"),
+      Seq(col("num_unique_routes").desc, col("stop_id"))),
+    Q4 -> Presentation(
+      Seq("route_id", "route_long_name", "route_short_name",
+        "total_daily_trips", "hourly_profile"),
+      Seq(col("total_daily_trips").desc, col("route_id"))))
 
   /** One tagged superset frame per query: per-service rows ('1'/'2'/'3')
     * plus the whole-week '4' rows, UNLIMITED — serving slices later,

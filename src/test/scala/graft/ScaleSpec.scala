@@ -8,6 +8,20 @@ package graft
   * task). */
 class ScaleSpec extends SparkSpec {
 
+  /** A Spark-written, multi-file `orders.parquet` of 2.05 M rows in a
+    * fresh temp dir (the only table there): above KnobRowsFloor (2 M)
+    * while the rows-sized grid (2.05M*64*8/64MB = 15) still sits under
+    * this session's deadband (4*floor=16 at the test floor of 4). */
+  private def withOrdersDir(prefix: String)(f: String => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    try {
+      spark.range(2050000L).selectExpr("id as o_orderkey",
+        "cast(id % 997 as string) as o_comment")
+        .write.parquet(s"$dir/orders.parquet")
+      f(dir)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("partitionsForRows: floor at session grid, linear above, capped") {
     val floor = spark.sessionState.conf.numShufflePartitions
     // small inputs stay on the session grid — today's plans bit-for-bit
@@ -80,15 +94,9 @@ class ScaleSpec extends SparkSpec {
       "spark.sql.sources.fileCompressionFactor",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes")
     val stock = keys.map(k => k -> spark.conf.get(k))
-    val dir = java.nio.file.Files.createTempDirectory("scale_knobs").toString
-    try {
-      // 2.05 M rows: above KnobRowsFloor (2 M) while the rows-sized grid
-      // (2.05M*64*8/64MB = 15) still sits under this session's deadband
-      // (4*floor=16 at the test floor of 4) — the exact regime the fix
-      // exists for: knobs on, grid at the floor
-      spark.range(2050000L).selectExpr("id as o_orderkey",
-        "cast(id % 997 as string) as o_comment")
-        .write.parquet(s"$dir/orders.parquet")
+    // 2.05 M rows — the exact regime the fix exists for: knobs on, grid
+    // at the floor
+    try withOrdersDir("scale_knobs") { dir =>
       val floor = spark.sessionState.conf.numShufflePartitions
       val grid = Scale.tuneSessionGrid(spark, dir)
       assert(grid == floor, s"2.05 M rows must stay under the grid deadband, got $grid")
@@ -98,10 +106,7 @@ class ScaleSpec extends SparkSpec {
       assert(split >= (4L << 20) && split < (128L << 20), split.toString)
       assert(spark.conf.get(keys(1)).toDouble >= 1.0)
       assert(spark.conf.get(keys(2)).toLong <= (64L << 20))
-    } finally {
-      stock.foreach { case (k, v) => spark.conf.set(k, v) }
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
+    } finally stock.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   test("tuneSessionGrid: a missing dir is a safe no-op at the floor") {
@@ -221,11 +226,7 @@ class ScaleSpec extends SparkSpec {
       "spark.sql.sources.fileCompressionFactor",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes")
     val stock = keys.map(k => k -> spark.conf.get(k))
-    val dir = java.nio.file.Files.createTempDirectory("scale_restock").toString
-    try {
-      spark.range(2050000L).selectExpr("id as o_orderkey",
-        "cast(id % 997 as string) as o_comment")
-        .write.parquet(s"$dir/orders.parquet")
+    try withOrdersDir("scale_restock") { dir =>
       Scale.tuneSessionGrid(spark, dir)
       assert(spark.conf.get(keys.head) != stock.head._2,
         "the knobs-on leg must actually move a knob for this test to bite")
@@ -244,9 +245,56 @@ class ScaleSpec extends SparkSpec {
         assert(spark.conf.get(k) == v,
           s"$k must return to stock after a small-dir re-tune")
       }
-    } finally {
-      stock.foreach { case (k, v) => spark.conf.set(k, v) }
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    } finally stock.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  // ------------------------------------------------------------------
+  // The row probe reads parquet footers instead of running count(): the
+  // rows resolveRegime sees must not move, and tuning must run no job.
+  // ------------------------------------------------------------------
+
+  private def hadoopConf = spark.sessionState.newHadoopConf()
+
+  /** The smallest TESTDATA.md scale. */
+  private val sf = "/root/testdata/sf0.001"
+
+  test("footerRows equals count() on every sf0.001 table") {
+    graft.sources.Tables.names.foreach { n =>
+      val df = if (n == "events") graft.sources.Tables.events(spark, sf)
+               else spark.read.parquet(s"$sf/$n.parquet")
+      assert(Scale.footerRows(s"$sf/$n.parquet", hadoopConf) == df.count(), n)
     }
+  }
+
+  test("footerRows equals count() on a Spark-written multi-file dir") {
+    withOrdersDir("scale_footer") { dir =>
+      val p = s"$dir/orders.parquet"
+      val names = new java.io.File(p).list().toSeq
+      // the dir must hold several data files AND the names Spark's file
+      // index skips (_SUCCESS, .crc checksums), or the skip goes untested
+      assert(names.count(_.endsWith(".parquet")) > 1, names.mkString(","))
+      assert(names.contains("_SUCCESS") && names.exists(_.startsWith(".")),
+        names.mkString(","))
+      assert(Scale.footerRows(p, hadoopConf) == spark.read.parquet(p).count())
+      assert(Scale.footerRows(p, hadoopConf) == 2050000L)
+    }
+  }
+
+  test("tuneSessionGrid submits zero Spark jobs") {
+    val keys = Seq("spark.sql.files.maxPartitionBytes",
+      "spark.sql.sources.fileCompressionFactor",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    val stock = keys.map(k => k -> spark.conf.get(k))
+    try {
+      val (_, small) = JobCount.of(spark)(Scale.tuneSessionGrid(spark, sf))
+      assert(small == 0, s"sf0.001 tuning ran $small Spark jobs")
+      withOrdersDir("scale_jobs") { dir =>
+        val (_, big) = JobCount.of(spark)(Scale.tuneSessionGrid(spark, dir))
+        assert(big == 0, s"2.05 M-row tuning ran $big Spark jobs")
+      }
+      // the counter itself must see jobs, or zero proves nothing
+      val (_, probe) = JobCount.of(spark)(spark.range(10).count())
+      assert(probe > 0)
+    } finally stock.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 }

@@ -23,6 +23,16 @@ class HttpServeParitySpec extends SparkSpec {
     HttpServe.start(svc, docs, 0, withCache = Some(false))
   }
 
+  /** The snapshot-backed service the production listeners run:
+    * analytics snapshots on disk, each read once and pinned. */
+  private lazy val snapSvc = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_parity_snap").toString
+    QueryService.buildAnalyticsSnapshots(t, dir)
+    new QueryService(t, Some(dir), cacheSnapshots = true)
+  }
+  private lazy val snapCached = HttpServe.start(snapSvc, docs, 0, withCache = Some(true))
+  private lazy val snapLive = HttpServe.start(snapSvc, docs, 0, withCache = Some(false))
+
   private def get(server: HttpServe.ServingHandle,
       path: String): (Int, String) = {
     val conn = new java.net.URI(
@@ -36,22 +46,41 @@ class HttpServeParitySpec extends SparkSpec {
     (code, body)
   }
 
-  private def assertParity(paths: Seq[String]): Unit =
+  private def assertParity(paths: Seq[String],
+      c: HttpServe.ServingHandle = cached,
+      l: HttpServe.ServingHandle = live): Unit =
     paths.foreach { p =>
-      val c = get(cached, p)
-      val l = get(live, p)
-      assert(c == l, s"cache/live divergence on $p:\ncached: $c\nlive:   $l")
+      val a = get(c, p)
+      val b = get(l, p)
+      assert(a == b, s"cache/live divergence on $p:\ncached: $a\nlive:   $b")
     }
 
   private val stops = Seq("A", "B", "C", "D", "E", "HUB", "NOPE")
 
-  test("/api/q1..q4: every service/limit face matches the live path") {
-    assertParity(for {
+  private val apiRoutes: Seq[String] = (for {
       q <- Seq("q1", "q2", "q3", "q4")
       s <- Seq("1", "2", "3", "4", "zzz", "")
       l <- Seq("3", "20", "all", "-7")
-    } yield s"/api/$q?service_id=$s&limit=$l")
-    assertParity(Seq("/api/q1", "/api/q2", "/api/q3", "/api/q4"))
+    } yield s"/api/$q?service_id=$s&limit=$l") ++
+    Seq("/api/q1", "/api/q2", "/api/q3", "/api/q4")
+
+  test("/api/q1..q4: every service/limit face matches the live path") {
+    assertParity(apiRoutes)
+  }
+
+  test("/api/q1..q4 over snapshots: the cached maps match the live snapshot slices") {
+    // the cache collects each snapshot once and splits it by tag on the
+    // driver; the live listener slices the same snapshot per request
+    assertParity(apiRoutes, snapCached, snapLive)
+  }
+
+  test("the analytic maps cost one Spark job per query, not one per slice") {
+    // snapCached's startup already read and pinned every snapshot, so a
+    // rebuild is exactly the four collects, not one per (query, service)
+    snapCached
+    val (api, jobs) = graft.JobCount.of(spark)(ServingCache.buildApi(snapSvc))
+    assert(jobs == 4, s"the analytic maps ran $jobs Spark jobs")
+    assert(api.size == 16)
   }
 
   test("/get_stops matches") {

@@ -8,6 +8,9 @@ runs the matching oracle_sql.json entry in DuckDB over the sfDir tables,
 then compares: column names (sorted), row count, and a value hash over
 rows sorted by all columns. Mirrors what we believe the driver does; used
 only for local iteration (driver-side python deps are allowed here).
+
+An oracle_sql.json key with no output dir (a face that failed in Verify
+writes none) prints MISSING and counts as a failure.
 """
 import sys, os, json, hashlib
 import duckdb
@@ -61,6 +64,10 @@ def main(sf_dir, out_dir):
             print(g[diff].head(3)); print(e[diff].head(3))
         elif not ok_cols:
             print(f"    got={sorted(got.columns)} exp={sorted(exp.columns)}")
+    for name in sorted(oracle):
+        if not os.path.isdir(os.path.join(out_dir, name)):
+            n_fail += 1
+            print(f"  {name}: MISSING (no output dir)")
     print(f"{n_pass} pass / {n_fail} fail")
     return 1 if n_fail else 0
 

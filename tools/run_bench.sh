@@ -6,7 +6,8 @@
 # on sbt's default 8 GiB and had to be stitched with a 96 GiB tail).
 #
 # Model, calibrated on the r11/r12 evidence: ~5 GiB per million input
-# rows, floored at 16 GiB (the sf0.1 board's envelope), CAPPED AT 48 GiB —
+# rows, floored at 16 GiB (the sf0.1 board's envelope), capped by physical
+# memory (tools/heap_cap.sh) and CAPPED AT 48 GiB —
 # the r12 sf10 board proved bigger heaps actively harmful (see the cap
 # comment below: 104 GiB inflated object-heavy faces 2-9x via accumulated
 # GC debt) while 48 GiB clears the worst collect_list ETL face with
@@ -42,8 +43,16 @@ EOF
 # runs the other way only for the collect_list ETL faces (8 GiB died
 # inside transit_mongo_export at sf10); 48 GiB clears them with margin.
 # SPARK_GRAFT_HEAP_G overrides for experiments.
+# The model's 16 GiB floor and 48 GiB ceiling both assume a large host; the
+# heap is also capped by physical memory (tools/heap_cap.sh), since a heap
+# the machine cannot back swaps or gets the JVM killed instead of failing
+# fast. The override is not capped.
 HEAP=${SPARK_GRAFT_HEAP_G:-$(python3 -c "import math,sys; r=int(sys.argv[1]); print(max(16, min(48, math.ceil(r/1e6*5))))" "$ROWS")}
-echo "[run_bench] $SFDIR rows=$ROWS heap=${HEAP}g only='$ONLY'"
+MEMCAP=$(tools/heap_cap.sh)
+if [ -z "$SPARK_GRAFT_HEAP_G" ] && [ -n "$MEMCAP" ] && [ "$HEAP" -gt "$MEMCAP" ]; then
+  HEAP=$MEMCAP
+fi
+echo "[run_bench] $SFDIR rows=$ROWS heap=${HEAP}g (physical cap ${MEMCAP:-none}g) only='$ONLY'"
 
 AO="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 
