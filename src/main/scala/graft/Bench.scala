@@ -3,14 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): times every registered query on
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
+  * the run's scale dir ([[Session.sfDir]]) and prints ONE JSON line.
   *
   * Measurement notes:
   *  - `write.format("noop")` fully materializes every output row through
   *    the physical plan (a bare `count()` would let Catalyst collapse
   *    aggregates-over-limit shortcuts and skip column evaluation).
-  *  - local[32] + 32 shuffle partitions mirrors the driver config; AQE is
-  *    left on (it's the production setting the 100 TB plans rely on).
+  *  - the session is [[Session.batch]] (`local[cpus]`, `cpus` shuffle
+  *    partitions, data-sized grid); AQE is left on (it's the production
+  *    setting the 100 TB plans rely on).
   */
 object Bench {
 
@@ -319,9 +320,13 @@ object Bench {
     else None
   }
 
+  /** `results` are the faces that ran; `failed` names the faces that
+    * threw. A failed face has no time to report, so it stays out of every
+    * total and map and is listed under `failed` on both lines instead. */
   private[graft] def writeArtifacts(results: Seq[(String, Double, Double)],
       sfDir: String, subset: Boolean, baseDir: String = ".",
-      probe: BoxProbe = BoxProbe(0.0, 0.0, 0.0, 0.0)): (String, String) = {
+      probe: BoxProbe = BoxProbe(0.0, 0.0, 0.0, 0.0),
+      failed: Seq[String] = Nil): (String, String) = {
     val totalWarm = results.map(_._3).sum
     val totalCold = results.map(_._2).sum
     val headline = Seq("q1" -> "transit_q1_weekday", "q2" -> "transit_q2_weekday",
@@ -336,6 +341,7 @@ object Bench {
     val full = results.map { case (n, c, w) =>
       "\"" + n + s"""":{"cold":${d3(c)},"warm":${d3(w)}}"""
     }.mkString("{", ",", "}")
+    val failedJson = failed.map(n => "\"" + jsonEscape(n) + "\"").mkString("[", ",", "]")
     // the probe rides BOTH lines: the contract line is what the driver
     // archives (BENCH_r{N}.json), the sidecar is what standing_scaling.py
     // reads — cross-epoch flagging needs it in the committed artifact
@@ -347,7 +353,7 @@ object Bench {
       s""","baseline_ratio":${d3(r)},"baseline_bar_sec":${d3(BaselineBarSec)}"""
     }.getOrElse("")
     val fullLine =
-      s"""{"metric":"total_query_time","value":${d3(totalWarm)},"unit":"sec","total_cold":${d3(totalCold)},"epoch_probe":$probeJson$baseJson,"sf":"$sfDir","queries":$full}"""
+      s"""{"metric":"total_query_time","value":${d3(totalWarm)},"unit":"sec","total_cold":${d3(totalCold)},"epoch_probe":$probeJson$baseJson,"sf":"$sfDir","queries":$full,"failed":$failedJson}"""
     val outs = sidecarPaths(sfDir, subset)
     for (path <- outs) {
       val out = java.nio.file.Paths.get(baseDir).resolve(path)
@@ -356,13 +362,55 @@ object Bench {
         (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
     val line =
-      s"""{"metric":"total_query_time","value":${d3(totalWarm)},"unit":"sec","total_cold":${d3(totalCold)},"n_queries":${results.size},"queries":$headMap,"families_warm":$famMap,"epoch_probe":$probeJson$baseJson,"full_map":"${outs.last}","full_map_sha256_8":"${sha8(fullLine)}","sf":"$sfDir"}"""
+      s"""{"metric":"total_query_time","value":${d3(totalWarm)},"unit":"sec","total_cold":${d3(totalCold)},"n_queries":${results.size},"queries":$headMap,"families_warm":$famMap,"epoch_probe":$probeJson$baseJson,"full_map":"${outs.last}","full_map_sha256_8":"${sha8(fullLine)}","sf":"$sfDir","failed":$failedJson}"""
     (line, fullLine)
   }
 
+  /** Measurement hygiene before every timed run. A GC first: eager
+    * localCheckpoint blocks from the PREVIOUS repetition are released by
+    * the ContextCleaner only after their RDD is GC'd, so without it the
+    * warm runs of checkpoint-bearing faces execute with storage memory
+    * full of dead blocks (observed at sf10: dedup_dup_spans warm 51.6 s vs
+    * cold 19.7 s — eviction/spill, not the plan; a real cluster's
+    * periodic-GC cleaner does this automatically between submissions).
+    * Then a sync(1): the r13 sf10 board billed transit_mongo_export 132.3 s
+    * on-board vs 83.1 s solo, the delta being PRIOR faces' dirty page-cache
+    * write-back competing with the face's own writes on the single local
+    * disk. Draining that debt in the UNTIMED window makes each face pay
+    * for its own garbage and I/O, not its predecessors'. */
+  private[graft] def quiesce(): Unit = {
+    System.gc()
+    Thread.sleep(200) // let the async cleaner drain the reference queue
+    try new ProcessBuilder("sync").start().waitFor()
+    catch { case _: Throwable => () } // no sync binary: GC quiesce only
+  }
+
+  /** One face's (name, cold, warm), or `Left(name)` when any run throws:
+    * the time up to a throw would count as a fast success in every total.
+    * warm = MIN of two post-cold runs: a single warm pass in a shared,
+    * 32-thread JVM still catches another query's GC/JIT tail often enough
+    * to flag phantom regressions (r8 had three; the r9 draft flagged
+    * timetable_flat at 11× whose true warm re-profile was 3.9×). The min
+    * of two is the standard steady-state estimator under one-sided noise.
+    * Progress goes to stderr as each face STARTS and FINISHES: a
+    * multi-hour rehearsal leg must be attributable mid-flight (the sf10
+    * straggler hunt needed a thread dump plus guesswork without this). */
+  private[graft] def timeFace(name: String)(
+      run: () => Double): Either[String, (String, Double, Double)] = {
+    System.err.println(s"[bench] start $name")
+    try {
+      val cold = run()
+      val warm = math.min(run(), run())
+      System.err.println(f"[bench] done  $name cold=$cold%.3f warm=$warm%.3f")
+      Right((name, cold, warm))
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] FAILED $name: $e")
+      Left(name)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = Session.sfDir
     // box-epoch probe FIRST — before Spark's threads exist, so the probe
     // sees the same idle-JVM box every board sees (untimed window)
     val probe = epochProbe()
@@ -370,25 +418,7 @@ object Bench {
       f"[bench] epoch_probe cpu=${probe.cpuSec}%.3f disk=${probe.diskSec}%.3f" +
         f" par_cpu=${probe.parCpuSec}%.3f rfsync=${probe.rfsyncSec}%.3f")
     appendEpochLedger(probe, s"bench:${sfName(sfDir)}")
-    // data-sized AQE starting grid (graft.Scale): identical to the fixed
-    // 32 grid at small SF (AQE coalesces down anyway), fans heavy
-    // shuffles out at sf10+ so per-task state fits its memory share
-    val initParts = Scale.initialShufflePartitions(sfDir, cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initParts.toString)
-      // local[32]/128GB: let mid-size dims (trips at sf0.1) broadcast; on a
-      // real cluster AQE re-decides per stage from runtime sizes
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // refine the grid from parquet ROW counts (byte walks are encoding-
-    // blind — see Scale.tuneSessionGrid); still the floor at small SF
-    Scale.tuneSessionGrid(spark, sfDir)
+    val spark = Session.batch(sfDir)
     // Unmeasured warmup: touch every table (parquet footers, FileIndex)
     // and run one small agg+join so JIT/codegen infra reaches steady state
     // before the first measured query — otherwise several seconds of
@@ -414,74 +444,22 @@ object Bench {
     // JVM flagged three ~2× "regressions" that a warm re-profile cleared —
     // all were first-run JIT/codegen-compile noise, not plan changes). The
     // cold run still carries codegen compile + page-cache fill; the warm
-    // run is the steady-state number regressions should be judged on. A GC
-    // quiesce before each query stops the previous query's garbage from
-    // billing its collection time to this one.
-    // SPARK_GRAFT_NO_QUIESCE=1 skips the per-run GC quiesce — the A/B
-    // lever for attributing small-board drift to the quiesce trade (the
-    // r11-accepted measurement-hygiene cost, ~2-4% on sub-second faces)
-    val quiesce = !sys.env.get("SPARK_GRAFT_NO_QUIESCE").contains("1")
-    // Page-cache quiesce rides the same flag with its own opt-out
-    // (SPARK_GRAFT_NO_SYNC=1) so its cost can be A/B'd in isolation. The
-    // r13 sf10 board billed transit_mongo_export 132.3 s on-board vs
-    // 83.1 s solo (own JVM, same code): the delta is PRIOR faces' dirty
-    // page-cache write-back competing with the face's own writes on the
-    // single local disk. A sync(1) before each timed run drains that debt
-    // in the UNTIMED window — the page-cache analog of the GC quiesce
-    // above, and the same attribution principle: each face pays for its
-    // own I/O, not its predecessors'.
-    val syncQuiesce = quiesce && !sys.env.get("SPARK_GRAFT_NO_SYNC").contains("1")
-    def diskQuiesce(): Unit =
-      if (syncQuiesce) {
-        try new ProcessBuilder("sync").start().waitFor()
-        catch { case _: Throwable => () } // no sync binary: GC quiesce only
-      }
-    def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      // GC before EVERY timed run, not just the query's first: eager
-      // localCheckpoint blocks from the PREVIOUS repetition are released
-      // by the ContextCleaner only after their RDD is GC'd, so without
-      // this the warm runs of checkpoint-bearing faces execute with
-      // storage memory full of dead blocks (observed at sf10:
-      // dedup_dup_spans warm 51.6 s vs cold 19.7 s — eviction/spill, not
-      // the plan; a real cluster's periodic-GC cleaner does this
-      // automatically between submissions)
-      if (quiesce) {
-        System.gc()
-        Thread.sleep(200) // let the async cleaner drain the reference queue
-      }
-      diskQuiesce()
+    // run is the steady-state number regressions should be judged on.
+    def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+      quiesce()
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
     // optional subset (comma-separated name prefixes) — sf1 rehearsals and
     // local iteration; the driver's full run leaves this unset
-    // set-but-EMPTY must mean "no subset" (a shell passing ONLY="" through
-    // is a full run): "".split(",") is Seq(""), which every name
-    // startsWith-matches — selection was right but only.isEmpty below said
-    // subset, silently skipping the committed-sidecar write on full boards
     val only = parseOnly(sys.env.get("SPARK_GRAFT_ONLY"))
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
       only.forall(_.exists(n.startsWith))
     }
-    // warm = MIN of two post-cold runs: a single warm pass in a shared,
-    // 32-thread JVM still catches another query's GC/JIT tail often enough
-    // to flag phantom regressions (r8 had three; the r9 draft flagged
-    // timetable_flat at 11× whose true warm re-profile was 3.9×). The min
-    // of two is the standard steady-state estimator under one-sided noise.
-    val results = selected.map { case (name, fn) =>
-      if (quiesce) System.gc()
-      // progress to stderr as each query STARTS and FINISHES: a multi-hour
-      // rehearsal leg must be attributable mid-flight (the sf10 straggler
-      // hunt needed a thread dump plus guesswork without this)
-      System.err.println(s"[bench] start $name")
-      val cold = runOnce(name, fn)
-      val warm = math.min(runOnce(name, fn), runOnce(name, fn))
-      System.err.println(f"[bench] done  $name cold=$cold%.3f warm=$warm%.3f")
-      (name, cold, warm)
+    val outcomes = selected.map { case (name, fn) =>
+      System.gc()
+      timeFace(name)(() => runOnce(fn))
     }
     // Contract line: the driver keeps only the last ~2000 chars of stdout
     // (BENCH_r9's `tail` cut the 13 KB full-map line mid-map → parsed:
@@ -490,8 +468,9 @@ object Bench {
     // per-family warm subtotals, and a sha-pinned pointer to the full
     // {query: {cold, warm}} map this run actually wrote — all assembled by
     // [[writeArtifacts]] (pure file/line logic, swept by BenchContractSpec).
-    val (line, _) = writeArtifacts(results, sfDir, subset = only.nonEmpty,
-      probe = probe)
+    val (line, _) = writeArtifacts(outcomes.collect { case Right(r) => r },
+      sfDir, subset = only.nonEmpty, probe = probe,
+      failed = outcomes.collect { case Left(n) => n })
     // the driver json-parses the LAST line of the run's combined output
     // (BENCH_r9/r10 landed parsed:null because sbt's "[success]" epilogue —
     // now suppressed via showSuccess — and a trailing 13 KB map line got in

@@ -67,9 +67,9 @@ object Scale {
     * multiple map segments — a per-shuffle tax paid by EVERY query in the
     * session. The benefit (per-task state bounded by the 64 MB advisory
     * instead of corpus-share) only materializes once floor-grid tasks
-    * would own several advisory units each. Measured at sf1
-    * (tools/TuneProbe, grid 65 vs floor 32, identical task counts and
-    * join strategies): +0.3–0.7 s on every sub-second join face from the
+    * would own several advisory units each. Measured at sf1 (per-knob
+    * A/B, grid 65 vs floor 32, identical task counts and join
+    * strategies): +0.3–0.7 s on every sub-second join face from the
     * grid alone, the other three tuned knobs at-or-below stock. At 4×,
     * the grid activates exactly when a floor task would exceed ~256 MB of
     * post-shuffle state — sf10 and beyond (grid ≥ 650), where the r10
@@ -207,24 +207,21 @@ object Scale {
       advisoryBytes: Option[Long])
 
   /** Pure regime resolver — ALL of [[tuneSessionGrid]]'s decisions from
-    * its five inputs, no side effects.
+    * its four inputs, no side effects.
     *
     * Signals, in evaluation order:
     *  1. Grid: rows × 64 B × [[MaxExpansion]] in 64 MB units, deadbanded
     *     on the PRE-clamp value ([[deadbandThenClamp]]) then clamped to
     *     [floor, cap]. Holds the floor until ~17 M rows (4× a 32 floor).
-    *  2. Knobs: `force` (the `SPARK_GRAFT_FORCE_TUNE` A/B lever) wins both
-    *     ways; otherwise rows ≥ [[KnobRowsFloor]] — the knobs matter an
+    *  2. Knobs: on at rows ≥ [[KnobRowsFloor]] — the knobs matter an
     *     order of magnitude before the grid does (r12's +57 s sf1 leg).
-    *  3. Knob VALUES need a measured bytes/row, so even a forced-on regime
-    *     stays value-less (and the session untouched) when rows or bytes
-    *     is 0 — a missing dir must be a no-op at every force setting. */
-  def resolveRegime(rows: Long, bytes: Long, floor: Int, cap: Int,
-      force: Option[Boolean]): Regime = {
+    *  3. Knob VALUES need a measured bytes/row, so a knobs-on regime stays
+    *     value-less (and the session untouched) when bytes is 0. */
+  def resolveRegime(rows: Long, bytes: Long, floor: Int, cap: Int): Regime = {
     val grid = deadbandThenClamp(
       rows * 64L * MaxExpansion / BytesPerPartition, floor, cap)
-    val knobsOn = force.getOrElse(rows >= KnobRowsFloor)
-    if (knobsOn && rows > 0 && bytes > 0) {
+    val knobsOn = rows >= KnobRowsFloor
+    if (knobsOn && bytes > 0) {
       val bytesPerRow = math.max(1L, bytes / rows)
       // split size targeting ~2 M rows per scan task: at 3 B/row the stock
       // 128 MB split hands 40 M rows to ONE scan task (the r10 sf10
@@ -272,7 +269,6 @@ object Scale {
     * and leaves the session entirely untouched when the input is
     * unmeasurable (missing dir / failed probes → rows = 0; every failed
     * table probe is logged to stderr with its cause).
-    * `SPARK_GRAFT_FORCE_TUNE=1/0` forces knobs both ways (the A/B lever).
     * Floors/caps keep sf ≤ 0.1 on today's plans; results are
     * partition-independent regardless. Returns the grid. */
   def tuneSessionGrid(spark: SparkSession, sfDir: String): Int = {
@@ -299,14 +295,8 @@ object Scale {
       if (spark.conf.getOption(stockKey(k)).isEmpty)
         spark.conf.set(stockKey(k), spark.conf.get(k))
     }
-    val bytes = dirBytes(sfDir)
-    val force = sys.env.get("SPARK_GRAFT_FORCE_TUNE") match {
-      case Some("1") => Some(true)
-      case Some("0") => Some(false)
-      case _         => None
-    }
-    val regime = resolveRegime(rows, bytes,
-      spark.sessionState.conf.numShufflePartitions, cap(spark), force)
+    val regime = resolveRegime(rows, dirBytes(sfDir),
+      spark.sessionState.conf.numShufflePartitions, cap(spark))
     spark.conf.set(
       "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
       regime.grid.toString)
@@ -322,60 +312,6 @@ object Scale {
     }
     regime.grid
   }
-
-  /** Text-sink bytes one write task should own. Small enough that a
-    * small-SF feed write engages several cores (the cost is the per-row
-    * format/encode, ~15 MB/s/core for GTFS strings), large enough that
-    * the output is never a spray of near-empty part files whose per-file
-    * open cost taxes every downstream re-scan (guide §6; the r16 A/B
-    * that widened straight to the 32-way session dial made the
-    * validation round trip SLOWER — five re-scans of 33 files each ate
-    * the write saving). Parameterised for scale tuning
-    * (`SPARK_GRAFT_WRITE_MB`): the right task size is a property of the
-    * sink's storage and the per-core encode rate, not of the engine —
-    * production values are justified per-deployment against measured
-    * A/Bs. UNSET means the widening is OFF ([[widenNarrowWrite]] is the
-    * identity): the r17 clean A/B measured the repartition shuffle +
-    * multi-file re-scan tax beating the parallel-format gain at BOTH
-    * sf0.1 (gtfs_corrupt 2.27 s off vs 2.65 s at 4 MB) and sf1 (3.45 vs
-    * 5.70; roundtrip cold 14.5 vs 49.2) — the r16 win attribution was
-    * confounded with the formatter/staged-projection fixes that landed
-    * in the same batch. On a real cluster whose sink IS format-bound,
-    * set the knob; the mechanism stays. */
-  val WriteBytesPerTask: Option[Long] =
-    sys.env.get("SPARK_GRAFT_WRITE_MB").map(_.trim).filter(_.nonEmpty)
-      .map(_.toLong << 20)
-
-  /** Parallelize a NARROW sink leg (r16, guide §1.2/§6): when the frame's
-    * scan-side task count (plan-statistic bytes over the session's
-    * `files.maxPartitionBytes`) is below the text sink's data-sized
-    * parallelism target, round-robin repartition to that target BEFORE
-    * the sink's per-row format/encode projection runs — a small-SF fact
-    * scan is one 128 MB split, so its CSV/text sink leg otherwise runs
-    * the whole format+write on 1–2 cores while 30 idle (measured: the
-    * GTFS stop_times feed write was a single 1.9 s two-task job at
-    * sf0.1). The target is ceil(bytes·expansion / [[WriteBytesPerTask]])
-    * — `expansion` ≈ text-encoded bytes per scanned parquet byte —
-    * clamped to the session dial, so file sizes stay ~[[WriteBytesPerTask]]
-    * and tiny dims stay single-file. A no-op exactly when the scan is
-    * already at least target-wide (any real 100 TB fact scan), so no
-    * shuffle is ever added where the write is already parallel. Row set
-    * and values are partitioning-invariant, so every oracle hash is
-    * untouched by construction. */
-  def widenNarrowWrite(df: DataFrame, expansion: Double = 4.0): DataFrame =
-    WriteBytesPerTask match {
-      case None => df // r17 default: measured faster at every tested SF
-      case Some(perTask) =>
-        val spark = df.sparkSession
-        val floor = spark.sessionState.conf.numShufflePartitions
-        val split = math.max(1L, spark.sessionState.conf.filesMaxPartitionBytes)
-        val bytes = BigDecimal(df.queryExecution.optimizedPlan.stats.sizeInBytes)
-        val target = clamp(
-          (bytes * expansion / perTask)
-            .setScale(0, BigDecimal.RoundingMode.CEILING).toLong, 1, floor)
-        val scanTasks = (bytes / split).setScale(0, BigDecimal.RoundingMode.CEILING)
-        if (scanTasks < target) df.repartition(target) else df
-    }
 
   /** Explicit-repartition size for a heavy stage fed by `df`: scan bytes
     * (Catalyst plan statistics — parquet footer sizes, no job) times the

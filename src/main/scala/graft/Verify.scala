@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,25 +7,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated name prefixes (local iteration only)
     val prefixes = if (args.length > 2) args(2).split(",").toSeq else Seq("")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // data-sized AQE starting grid (graft.Scale) — no-op at the small
-    // correctness SFs, keeps sf10 spot-checks from memory-starving
-    val initParts = Scale.initialShufflePartitions(sfDir, cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initParts.toString)
-      // local[32]/128GB: let mid-size dims (trips at sf0.1) broadcast; on a
-      // real cluster AQE re-decides per stage from runtime sizes
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // refine the grid from parquet ROW counts (byte walks are encoding-
-    // blind — see Scale.tuneSessionGrid); still the floor at small SF
-    Scale.tuneSessionGrid(spark, sfDir)
+    val spark = Session.batch(sfDir)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => prefixes.exists(name.startsWith) }
@@ -37,18 +18,10 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // every control char escaped: a tab or CR in an oracle SQL text
+    // would otherwise make the driver's json.load fail and silently zero
+    // the round's correctness
+    def q(s: String): String = "\"" + Bench.jsonEscape(s) + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -531,7 +531,7 @@ object RelationalQueries {
     // approx_percentile) in a single Aggregate measure 18-28 s at sf0.1
     // where they cost 2.4 + 0.9 s planned apart, and countDistinct's
     // Expand rewrite multiplies that further (measured 23-70 s combined;
-    // ~2 s in this form — tools/AggTime.scala reproduces the matrix).
+    // ~2 s in this form, all at sf0.1).
     // Exact distinct rides a two-level hash agg (no Expand); the HLL
     // sketch aggregates the already-distinct pairs, which leaves its
     // estimate unchanged.

@@ -846,8 +846,8 @@ object Similarity {
     // 2^x factors are powers of two — exact in double, exact after cast.
     // localCheckpoint: `e` is consumed THREE times (pair-join a-side,
     // b-side, census) and Catalyst inlines the subtree per reference — the
-    // per-vector l2norm + IVF cell + 16-plane LSH hashing ran 3× (r17
-    // JobProfile: three ~0.7–0.85 s jobs, warm 3.0 s). Materializing the
+    // per-vector l2norm + IVF cell + 16-plane LSH hashing ran 3× (r17 job
+    // profile: three ~0.7–0.85 s jobs, warm 3.0 s). Materializing the
     // narrow (vec_id, embedding, nrm, cell) frame once cuts that to one
     // hash pass (guide §1.2 double-computed subtree; the r16
     // stageEdges/shortestPaths3 precedent). The count side of the

@@ -40,14 +40,10 @@ object GtfsWriter {
     // stays partition-parallel like stop_times.
     def csvDim(df: org.apache.spark.sql.DataFrame, name: String): Unit =
       csv(df.coalesce(1), name)
-    // Write-task widening (graft.Scale.widenNarrowWrite) is OFF unless
-    // SPARK_GRAFT_WRITE_MB is set: the r17 clean A/B at sf0.1 AND sf1
-    // measured the repartition shuffle + multi-file re-scan tax beating
-    // the parallel-format gain on every gtfs face (the r16 attribution
-    // was confounded with the formatter/staged-projection fixes). The
-    // hook stays under the format projection so a format-bound sink can
-    // re-enable it per deployment without a code change.
-    csv(graft.Scale.widenNarrowWrite(t.stopTimes).select(
+    // No write-task widening: the r17 clean A/B at sf0.1 AND sf1 measured
+    // a repartition before the sink (shuffle + multi-file re-scan tax)
+    // slower than the narrow write on every gtfs face.
+    csv(t.stopTimes.select(
       col("trip_id").cast("string").as("trip_id"),
       GtfsTime.gtfsString(col("arr_secs")).as("arrival_time"),
       GtfsTime.gtfsString(col("dep_secs")).as("departure_time"),
@@ -58,7 +54,7 @@ object GtfsWriter {
       lit(null).cast("short").as("drop_off_type"),
       col("shape_dist").cast("float").as("shape_dist_traveled")), "stop_times")
 
-    csv(graft.Scale.widenNarrowWrite(t.trips).select(
+    csv(t.trips.select(
       col("trip_id").cast("string").as("trip_id"),
       col("route_id").cast("string").as("route_id"),
       col("service_id").cast("string").as("service_id"),
@@ -144,37 +140,20 @@ object GtfsWriter {
     censusScan(spark, writeCorruptFeed(spark, sfDir))
 
   /** The census's write leg alone: land the deterministically-mangled
-    * feed, return its path. Split from [[censusScan]] so the r16 A/B
-    * could attribute the fifth class's measured ~2x face cost to a leg
-    * (adjudication `transit_gtfs_corrupt` in tools/adjudications.json). */
+    * feed, return its path (adjudication `transit_gtfs_corrupt` in
+    * tools/adjudications.json timed the two legs apart). */
   private[graft] def writeCorruptFeed(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): String = {
     import spark.implicits._
     val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
     val feed = s"target/tmp/gtfs_corrupt_$key/stop_times.txt"
-    // widen the narrow small-SF scan BEFORE the mangle projection so the
-    // gtfsString/concat_ws formatting and the text write parallelize
-    // across the session (same rationale as writeFeed; no-op at scale)
-    val st = graft.Scale.widenNarrowWrite(
-      TransitTables.fromTpch(spark, sfDir).stopTimes)
+    val st = TransitTables.fromTpch(spark, sfDir).stopTimes
     val tid = col("trip_id")
     val c101 = tid % 101 === 0
     val c103 = !c101 && tid % 103 === 0
     val c107 = !c101 && !c103 && tid % 107 === 0
     val c109 = !c101 && !c103 && !c107 && tid % 109 === 0
-    // SPARK_GRAFT_CORRUPT_CLASSES=4 is an A/B-ONLY lever (unset in every
-    // registered run): it restores the r14 four-class fixture so the r15
-    // flag on this face — the one round-15 divergence where a code change
-    // (this fifth class) and a ~2x board move coincided — can be
-    // adjudicated by a solo old-vs-new A/B in one session (VERDICT r15
-    // ask #2). The oracle always expects five classes; a lever-set run
-    // would hash-mismatch, which is exactly why it stays an env lever and
-    // not a parameter.
-    val fourClassFixture =
-      sys.env.get("SPARK_GRAFT_CORRUPT_CLASSES").contains("4")
-    val c113 =
-      if (fourClassFixture) lit(false)
-      else !c101 && !c103 && !c107 && !c109 && tid % 113 === 0
+    val c113 = !c101 && !c103 && !c107 && !c109 && tid % 113 === 0
     def s(c: org.apache.spark.sql.Column) = coalesce(c.cast("string"), lit(""))
     // STAGED assembly (r16 — found by the r15-flag adjudication A/B): the
     // one-projection form nested the %113 CaseWhen (which itself carries

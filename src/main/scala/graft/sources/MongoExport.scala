@@ -38,18 +38,10 @@ object MongoExport {
         col("location"), col("upcoming_services"))
 
   /** Write the export (overwrite; the measured sink leg, like the GTFS
-    * feed write) and return (dir, schema-for-read-back).
-    *
-    * `SPARK_GRAFT_EXPORT_BASE` (A/B lever, unset in every registered run,
-    * VERDICT r14 ask #6): redirects the sink base dir — pointing it at a
-    * different device (/dev/shm on this box) isolates how much of the
-    * sf10 solo residual is sink-device write-back vs everything else.
-    * Same family as SPARK_GRAFT_NO_SYNC: a measurement attribution
-    * lever, never a production setting. */
+    * feed write) and return (dir, schema-for-read-back). */
   def writeDocs(spark: SparkSession, sfDir: String): (String, org.apache.spark.sql.types.StructType) = {
     val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_EXPORT_BASE", "target/tmp")
-    val dir = s"$base/mongo_export_$key"
+    val dir = s"target/tmp/mongo_export_$key"
     val d = docs(TransitTables.fromTpch(spark, sfDir))
     // gzip the JSONL: mongoimport reads --gzip directly and the per-line
     // wire format is unchanged. JSON text of low-entropy schedule data

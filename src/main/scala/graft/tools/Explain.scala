@@ -1,0 +1,107 @@
+package graft.tools
+
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicReference
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.GraftBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.{Bench, Session, SparkEntry}
+
+/** Per-face execution profile in the board's own engine (local iteration;
+  * not part of the driver contract). Each named face runs cold, then warm,
+  * exactly as `graft.Bench` times it (its session profile, quiesce and noop
+  * sink), and prints one line:
+  *  - cold and warm seconds;
+  *  - the warm run's jobs, their summed wall time and the driver gap (warm
+  *    minus summed job time: planning, eager driver-side work, the sink) —
+  *    "few big jobs" means optimize the plan, "many tiny jobs" the round
+  *    structure;
+  *  - analysis ms from the face frame's `QueryExecution.tracker` (a
+  *    Dataset is analyzed as it is built), optimizer and planning ms from
+  *    the sink's (it is optimized and planned as it runs);
+  *  - Exchange, Scan parquet, ExistingRDD, ReusedExchange and
+  *    InMemoryTableScan counts from the AQE-final executed plan, whose
+  *    formatted text goes to `target/explain/<face>.txt`.
+  *
+  * Usage: `runMain graft.tools.Explain <face...>` */
+object Explain extends AdaptiveSparkPlanHelper {
+
+  private val Kinds =
+    Seq("exchange", "scan_parquet", "existing_rdd", "reused_exchange", "in_memory_scan")
+
+  private def kindOf(p: SparkPlan): Option[String] = p.getClass.getSimpleName match {
+    case "ReusedExchangeExec" => Some("reused_exchange")
+    case n if n.endsWith("ExchangeExec") => Some("exchange")
+    case "FileSourceScanExec" if p.nodeName.toLowerCase.contains("parquet") =>
+      Some("scan_parquet")
+    case "RDDScanExec" => Some("existing_rdd")
+    case "InMemoryTableScanExec" => Some("in_memory_scan")
+    case _ => None
+  }
+
+  def main(args: Array[String]): Unit = {
+    val unknown = args.filterNot(SparkEntry.queries.contains)
+    require(args.nonEmpty && unknown.isEmpty,
+      s"usage: Explain <face...> (unknown: ${unknown.mkString(", ")})")
+    val sfDir = Session.sfDir
+    val spark = Session.batch(sfDir)
+    val sc = spark.sparkContext
+    val jobStarts = new ConcurrentHashMap[Int, Long]()
+    val jobSecs = new ConcurrentLinkedQueue[Double]()
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobStarts.put(e.jobId, e.time)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        Option(jobStarts.remove(e.jobId)).foreach(t0 => jobSecs.add((e.time - t0) / 1e3))
+    })
+    // the sink is each run's last action, so its execution is the last seen
+    val sinkQe = new AtomicReference[QueryExecution]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        sinkQe.set(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    val outDir = Files.createDirectories(Paths.get("target/explain"))
+
+    def ms(qe: QueryExecution, phase: String) =
+      qe.tracker.phases.get(phase).map(_.durationMs).getOrElse(0L)
+    for (face <- args) {
+      val fn = SparkEntry.queries(face)
+      // (seconds, the face frame's analysis ms)
+      def run(): (Double, Long) = {
+        Bench.quiesce()
+        val t0 = System.nanoTime()
+        val df = fn(spark, sfDir)
+        val analysisMs = ms(df.queryExecution, "analysis")
+        df.write.format("noop").mode("overwrite").save()
+        val secs = (System.nanoTime() - t0) / 1e9
+        GraftBus.drain(sc)
+        (secs, analysisMs)
+      }
+      val (cold, _) = run()
+      jobSecs.clear()
+      sinkQe.set(null)
+      val (warm, analysisMs) = run()
+      val qe = sinkQe.get
+      val sumJob = jobSecs.asScala.sum
+      val kinds = collectWithSubqueries(qe.executedPlan) { case p => kindOf(p) }.flatten
+      println(f"[explain] $face cold=$cold%.3f warm=$warm%.3f jobs=${jobSecs.size} " +
+        f"sum_job=$sumJob%.3f gap=${warm - sumJob}%.3f " +
+        s"analysis_ms=$analysisMs optimizer_ms=${ms(qe, "optimization")} " +
+        s"planning_ms=${ms(qe, "planning")} " +
+        Kinds.map(k => s"$k=${kinds.count(_ == k)}").mkString(" "))
+      Files.write(outDir.resolve(s"$face.txt"),
+        (s"== $face (warm, sf=$sfDir) ==\n" + qe.explainString(FormattedMode))
+          .getBytes(UTF_8))
+    }
+    spark.stop()
+  }
+}

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.sources.GtfsReader
 import graft.transit._
 
@@ -19,14 +18,9 @@ object GtfsDemo {
     val service = ServiceFilter.fromParam(args.lift(1))
     val limit = Limit.fromParam(args.lift(2))
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-gtfs-demo")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // serving profile: the demo answers the reference's request surface
+    // over one feed, and a CSV feed dir has no parquet rows to size a grid
+    val spark = graft.Session.serving()
 
     val t = GtfsReader.readFeed(spark, feedDir)
     println(s"== Q1 busiest stops (service=${service.sid.getOrElse("whole-week")}) ==")

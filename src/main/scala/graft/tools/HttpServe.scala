@@ -1,7 +1,7 @@
 package graft.tools
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import graft.transit._
 
 /** A REAL HTTP listener over the serving layer — the reference exposes its
@@ -395,25 +395,14 @@ object HttpServe {
     * between the two IS the HTTP layer's cost). `SPARK_GRAFT_SERVE_FOREVER=1`
     * keeps the listener up for interactive use instead. */
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = graft.Session.sfDir
     val port = if (args.length > 0) args(0).toInt else 8181
     val nReqs = if (args.length > 1) args(1).toInt else 1000
     val clients = if (args.length > 2) args(2).toInt else 8
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      // serving sessions shuffle TINY cached frames (a request touches one
-      // stop's document or a pre-aggregated snapshot): 4 reducers keeps
-      // per-request task dispatch ~free where the batch engines' 32 would
-      // spend more time scheduling than computing. Builds that need width
-      // (the one-off snapshot/store ETL) size their own barriers via
-      // graft.Scale, so this dial only shapes request plans.
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.scheduler.mode", "FAIR")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // serving profile: 4 reducers, FAIR pool. Builds that need width (the
+    // one-off snapshot/store ETL) size their own barriers via graft.Scale,
+    // so the session dial only shapes request plans.
+    val spark = graft.Session.serving()
 
     val t = TransitTables.fromTpch(spark, sfDir)
     val snapDir = "target/tmp/http_serve_snapshots"

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1 rehearsal data: deterministically inflate a driver scale dir by an
@@ -31,14 +31,8 @@ object InflateSf {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else "target/testdata_sf1"
     val k = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Session.cpus
+    val spark = graft.Session.batch(src)
 
     // Round-10 finding: a rehearsal table landed as ONE file with ONE row
     // group (the clone pipeline keeps the source's 1-file partitioning) is
@@ -92,12 +86,12 @@ object InflateSf {
     val orders = spark.read.parquet(s"$src/orders.parquet")
     out(orders.select(col("*"), clone)
       .withColumn("o_orderkey", col("o_orderkey") + col("clone") * OFF)
-      .drop("clone"), "orders", cpus.toInt)
+      .drop("clone"), "orders", cpus)
 
     val li = spark.read.parquet(s"$src/lineitem.parquet")
     out(li.select(col("*"), clone)
       .withColumn("l_orderkey", col("l_orderkey") + col("clone") * OFF)
-      .drop("clone"), "lineitem", cpus.toInt)
+      .drop("clone"), "lineitem", cpus)
 
     val docs = spark.read.parquet(s"$src/documents.parquet")
     out(docs.select(col("*"), clone)
@@ -107,7 +101,7 @@ object InflateSf {
             w => concat(w, lit("x"), col("clone"))), " ")))
       .withColumn("doc_id", col("doc_id") + col("clone") * OFF)
       .withColumn("n_chars", length(col("text")).cast("long"))
-      .drop("clone"), "documents", cpus.toInt)
+      .drop("clone"), "documents", cpus)
 
     val emb = spark.read.parquet(s"$src/embeddings.parquet")
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
@@ -118,7 +112,7 @@ object InflateSf {
             lit(dim) - col("clone").cast("int")),
           slice(col("embedding"), lit(1), col("clone").cast("int")))))
       .withColumn("vec_id", col("vec_id") + col("clone") * OFF)
-      .drop("clone"), "embeddings", cpus.toInt)
+      .drop("clone"), "embeddings", cpus)
 
     // events ride the nanos-aware loader; re-landing as micros is fine —
     // Tables.events normalizes either physical type
@@ -126,7 +120,7 @@ object InflateSf {
     out(ev.select(col("*"), clone)
       .withColumn("event_id", col("event_id") + col("clone") * OFF)
       .withColumn("user_id", col("user_id") + col("clone") * OFF)
-      .drop("clone"), "events", cpus.toInt)
+      .drop("clone"), "events", cpus)
 
     // fail LOUDLY on any future key collision: every clone's id domain
     // must be disjoint, so distinct keys scale exactly by k — checked in

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Writes `explain("formatted")` for named registered queries to
   * plans/<tag>/<query>_<suffix>.txt (local iteration + judge evidence;
-  * not part of the driver contract). Mirrors Bench's session config so
+  * not part of the driver contract). Runs in Bench's session profile so
   * the captured plan is the plan the bench runs.
   *
   * Usage: PlanSnap <tag> <suffix> <query...>   e.g. PlanSnap r16 before dedup_clusters
@@ -12,20 +12,8 @@ import org.apache.spark.sql.SparkSession
 object PlanSnap {
   def main(args: Array[String]): Unit = {
     val tag = args(0); val suffix = args(1); val queries = args.drop(2)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val initParts = graft.Scale.initialShufflePartitions(sfDir, cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initParts.toString)
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Scale.tuneSessionGrid(spark, sfDir)
+    val sfDir = graft.Session.sfDir
+    val spark = graft.Session.batch(sfDir)
     val dir = java.nio.file.Paths.get(s"plans/$tag")
     java.nio.file.Files.createDirectories(dir)
     // PLANSNAP_EXEC=1: run the frame through the noop sink first so the

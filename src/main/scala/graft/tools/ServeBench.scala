@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import graft.transit._
 
 /** Serving-latency probe (SURVEY §4 R4): per analytics query, the
@@ -16,16 +16,9 @@ import graft.transit._
   */
 object ServeBench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = graft.Session.sfDir
+    // batch profile: the live side is the board's fact-table plan
+    val spark = graft.Session.batch(sfDir)
 
     val t = TransitTables.fromTpch(spark, sfDir)
     val snapDir = "target/tmp/serve_snapshots"

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.SparkSession
 import graft.transit._
 
 /** Resident serving probe (SURVEY §3.1 — the reference's Flask story,
@@ -27,22 +26,12 @@ import graft.transit._
   */
 object ServeDaemon {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = graft.Session.sfDir
     val nReqs = if (args.length > 0) args(0).toInt else 1000
     val clients = if (args.length > 1) args(1).toInt else 8
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // short independent jobs from many clients: FAIR keeps one slow
-      // request from convoying the queue behind it (FIFO would serialize
-      // tail latency into every later request)
-      .config("spark.scheduler.mode", "FAIR")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // short independent jobs from many clients: the serving profile's
+    // FAIR pool keeps one slow request from convoying the queue behind it
+    val spark = graft.Session.serving()
 
     val t = TransitTables.fromTpch(spark, sfDir)
     val snapDir = "target/tmp/serve_snapshots"

@@ -283,7 +283,7 @@ object Timetable {
     // all the way down there is no materialized exchange to reuse — so
     // everything below the sort runs twice. Keeping the child narrow
     // (ints + dimension strings, no rendered display strings) halves the
-    // sf0.1 warm time (2.9 s → 1.5 s measured, tools/FlatTime) and at
+    // sf0.1 warm time (2.9 s → 1.5 s measured, r11) and at
     // sf10 shrinks the sort-shuffle bytes; the post-sort projection is
     // order-preserving and stays inside whole-stage codegen.
     t.stopTimes

@@ -97,6 +97,35 @@ class BenchContractSpec extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
+  test("a throwing face is FAILED: listed on both lines, in no total or map") {
+    // timeFace: any throwing run fails the face; a clean face is timed
+    assert(Bench.timeFace("boom")(() => throw new IllegalStateException("x")) ==
+      Left("boom"))
+    val times = Iterator(1.5, 1.3, 1.2)
+    assert(Bench.timeFace("transit_q1_weekday")(() => times.next()) ==
+      Right(("transit_q1_weekday", 1.5, 1.2)))
+    val dir = java.nio.file.Files.createTempDirectory("bench_contract_failed")
+    try {
+      val (line, fullLine) = Bench.writeArtifacts(results, "/x/testdata/sf0.1",
+        subset = false, baseDir = dir.toString, failed = Seq("dedup_boom"))
+      val node = om.readTree(line)
+      val full = om.readTree(fullLine)
+      for (n <- Seq(node, full)) {
+        assert(n.get("failed").size == 1)
+        assert(n.get("failed").get(0).asText == "dedup_boom")
+        assert(math.abs(n.get("value").asDouble - 2.4) < 1e-9)
+        assert(math.abs(n.get("total_cold").asDouble - 3.0) < 1e-9)
+      }
+      assert(node.get("n_queries").asInt == 4)
+      assert(node.get("families_warm").get("dedup").asDouble == 0.3)
+      assert(!full.get("queries").has("dedup_boom"))
+      // a clean board carries an empty list, not a missing key
+      val (clean, _) = Bench.writeArtifacts(results, "/x/testdata/sf0.1",
+        subset = true, baseDir = dir.toString)
+      assert(om.readTree(clean).get("failed").size == 0)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("epoch probe rides both the contract line and the sidecar") {
     val dir = java.nio.file.Files.createTempDirectory("bench_contract_probe")
     try {

@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.GraftTestBus
+import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
@@ -26,7 +26,7 @@ object JobCount {
     sc.setJobGroup(group, group)
     try {
       val r = f
-      GraftTestBus.drain(sc)
+      GraftBus.drain(sc)
       (r, n.get)
     } finally {
       sc.clearJobGroup()

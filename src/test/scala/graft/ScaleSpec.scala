@@ -132,12 +132,12 @@ class ScaleSpec extends SparkSpec {
 
   test("regime sweep: the three measured calibration points hold exactly") {
     // sf0.1: below both signals — floor grid, stock knobs (the r11 lesson)
-    val r01 = Scale.resolveRegime(sf01._1, sf01._2, 32, 4096, None)
+    val r01 = Scale.resolveRegime(sf01._1, sf01._2, 32, 4096)
     assert(r01 == Scale.Regime(32, knobsOn = false, None, None, None))
     // sf1: rows >= 2M turns knobs ON while the grid deadband still holds
     // the floor (pre-clamp 65 < 4x32) — the exact regime the r12 fix
     // exists for
-    val r1 = Scale.resolveRegime(sf1._1, sf1._2, 32, 4096, None)
+    val r1 = Scale.resolveRegime(sf1._1, sf1._2, 32, 4096)
     assert(r1.grid == 32 && r1.knobsOn)
     // 19 B/row measured: split targets 2M rows/scan task, factor makes
     // planner bytes ~in-memory rows, advisory shrinks by the same factor
@@ -145,64 +145,48 @@ class ScaleSpec extends SparkSpec {
     assert(r1.compressionFactor.contains(64.0 / 19.0))
     assert(r1.advisoryBytes.contains(19922944L))
     // sf10: both signals on — data-sized grid AND knobs
-    val r10 = Scale.resolveRegime(sf10._1, sf10._2, 32, 4096, None)
+    val r10 = Scale.resolveRegime(sf10._1, sf10._2, 32, 4096)
     assert(r10.grid == 654 && r10.knobsOn)
     assert(r10.splitBytes == r1.splitBytes) // same 19 B/row encoding
   }
 
   test("regime sweep: knob activation boundary is exactly KnobRowsFloor") {
     val bytes = 40000000L
-    assert(!Scale.resolveRegime(Scale.KnobRowsFloor - 1, bytes, 32, 4096, None).knobsOn)
-    assert(Scale.resolveRegime(Scale.KnobRowsFloor, bytes, 32, 4096, None).knobsOn)
-  }
-
-  test("regime sweep: force wins both ways but never invents knob values") {
-    // forced ON at sf0.1 volume: knobs get real values (the A/B lever)
-    val on = Scale.resolveRegime(sf01._1, sf01._2, 32, 4096, Some(true))
-    assert(on.knobsOn && on.splitBytes.isDefined)
-    // forced OFF at sf10 volume: knobs off, grid STAYS data-sized (the
-    // grid is a separate signal; forcing knobs must not re-floor it)
-    val off = Scale.resolveRegime(sf10._1, sf10._2, 32, 4096, Some(false))
-    assert(!off.knobsOn && off.splitBytes.isEmpty && off.grid == 654)
-    // forced ON with no measurable input: activation without values —
-    // a missing dir stays a session no-op at every force setting
-    val blind = Scale.resolveRegime(0L, 0L, 32, 4096, Some(true))
-    assert(blind.knobsOn && blind.splitBytes.isEmpty && blind.grid == 32)
-    assert(Scale.resolveRegime(sf10._1, 0L, 32, 4096, Some(true)).splitBytes.isEmpty)
+    assert(!Scale.resolveRegime(Scale.KnobRowsFloor - 1, bytes, 32, 4096).knobsOn)
+    assert(Scale.resolveRegime(Scale.KnobRowsFloor, bytes, 32, 4096).knobsOn)
   }
 
   test("regime sweep: adversarial cap/floor corners keep grid activation") {
     // cap below 4x floor (the r11 ADVICE trap): activation reads the RAW
     // data-sized value, so the grid still leaves the floor and clamps
-    assert(Scale.resolveRegime(sf10._1, sf10._2, 32, 100, None).grid == 100)
+    assert(Scale.resolveRegime(sf10._1, sf10._2, 32, 100).grid == 100)
     // floor above cap/4: same property from the other side
-    assert(Scale.resolveRegime(sf10._1 * 100, sf10._2 * 100, 1024, 2048, None).grid == 2048)
+    assert(Scale.resolveRegime(sf10._1 * 100, sf10._2 * 100, 1024, 2048).grid == 2048)
     // floor-dominates when data is small regardless of cap
-    assert(Scale.resolveRegime(sf01._1, sf01._2, 1024, 2048, None).grid == 1024)
+    assert(Scale.resolveRegime(sf01._1, sf01._2, 1024, 2048).grid == 1024)
   }
 
-  test("regime sweep: invariants over the full (rows, bytes, floor, cap, force) grid") {
+  test("regime sweep: invariants over the full (rows, bytes, floor, cap) grid") {
     val rowsAxis = Seq(0L, 1L, 1999999L, 2000000L, 893030L, 8606030L,
       85736030L, 1000000000L)
     val bytesAxis = Seq(0L, 1L, 17504410L, 171274781L, 1687644463L, 1L << 40)
     val floorAxis = Seq(4, 32, 200, 1024)
     val capAxis = Seq(100, 4096, 2048)
-    val forceAxis = Seq(None, Some(true), Some(false))
     for {
       rows <- rowsAxis; bytes <- bytesAxis; floor <- floorAxis
-      cap <- capAxis; force <- forceAxis
+      cap <- capAxis
       if floor <= cap // pathological floor>cap is excluded by construction
     } {
-      val r = Scale.resolveRegime(rows, bytes, floor, cap, force)
-      val ctx = s"rows=$rows bytes=$bytes floor=$floor cap=$cap force=$force"
+      val r = Scale.resolveRegime(rows, bytes, floor, cap)
+      val ctx = s"rows=$rows bytes=$bytes floor=$floor cap=$cap"
       // grid always lands in [floor, cap], and leaves the floor only when
       // the pre-clamp value clears the deadband
       assert(r.grid >= floor && r.grid <= cap, ctx)
       val scaled = rows * 64L * Scale.MaxExpansion / Scale.BytesPerPartition
       if (scaled < Scale.GridDeadband * floor) assert(r.grid == floor, ctx)
       else assert(r.grid == math.max(floor.toLong, math.min(cap.toLong, scaled)).toInt, ctx)
-      // knob activation is exactly force-else-rows-floor
-      assert(r.knobsOn == force.getOrElse(rows >= Scale.KnobRowsFloor), ctx)
+      // knob activation is exactly the rows floor
+      assert(r.knobsOn == (rows >= Scale.KnobRowsFloor), ctx)
       // values exist iff on AND measurable; all three together; in range
       val expectValues = r.knobsOn && rows > 0 && bytes > 0
       assert(r.splitBytes.isDefined == expectValues, ctx)

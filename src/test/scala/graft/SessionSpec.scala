@@ -1,0 +1,101 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** [[Session]] is the engine's one session factory: its two profiles are
+  * pinned to the confs `Bench.main` and `HttpServe.main` built by hand
+  * before it existed, and a source guard keeps every other file from
+  * building a session or reading the two env vars it owns. */
+class SessionSpec extends AnyFunSuite {
+
+  /** A dir whose only file is `bytes` long but sparse, so the data-sized
+    * grid can be exercised without writing the bytes. */
+  private def withSizedDir[A](bytes: Long)(f: String => A): A = {
+    val dir = Files.createTempDirectory("session_spec")
+    val raf = new java.io.RandomAccessFile(dir.resolve("t.parquet").toFile, "rw")
+    try { raf.setLength(bytes); raf.close(); f(dir.toString) }
+    finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("batch profile is Bench's conf: local[cpus], cpus reducers, data-sized grid") {
+    val common = Seq(
+      "spark.master" -> "local[4]",
+      "spark.sql.autoBroadcastJoinThreshold" -> "64m",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "4")
+    val grid = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    // small input: the grid holds the floor (the cpus count)
+    withSizedDir(1L << 20) { dir =>
+      assert(Session.confFor(Session.Batch, dir, 4).toMap ==
+        (common :+ (grid -> "4")).toMap)
+    }
+    // 256 MB input: 256 MB x 8 / 64 MB = 32 >= 4 x floor, so data-sized
+    withSizedDir(256L << 20) { dir =>
+      assert(Session.confFor(Session.Batch, dir, 4).toMap ==
+        (common :+ (grid -> "32")).toMap)
+      assert(Scale.initialShufflePartitions(dir, 4) == 32)
+    }
+  }
+
+  test("serving profile is HttpServe's conf at local[cpus]: 4 reducers, FAIR") {
+    assert(Session.confFor(Session.Serving, "/any/dir", 8).toMap == Map(
+      "spark.master" -> "local[8]",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.autoBroadcastJoinThreshold" -> "64m",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false",
+      "spark.scheduler.mode" -> "FAIR"))
+    // no key is set twice (a later duplicate would silently win)
+    for (p <- Seq(Session.Batch, Session.Serving)) {
+      val keys = Session.confFor(p, "/any/dir", 8).map(_._1)
+      assert(keys.distinct == keys, p)
+    }
+  }
+
+  test("cpus: unset or blank falls back to availableProcessors") {
+    val avail = Runtime.getRuntime.availableProcessors
+    assert(Session.parseCpus(None) == avail)
+    assert(Session.parseCpus(Some("")) == avail)
+    assert(Session.parseCpus(Some("  ")) == avail)
+    assert(Session.parseCpus(Some("6")) == 6)
+    assert(Session.parseCpus(Some(" 12 ")) == 12)
+  }
+
+  test("cpus: 0, negative and non-numeric values are rejected with a message") {
+    for (bad <- Seq("0", "-2", "abc", "4.5")) {
+      val e = intercept[IllegalArgumentException](Session.parseCpus(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS") && e.getMessage.contains(bad),
+        e.getMessage)
+    }
+  }
+
+  test("source guard: only graft/Session.scala builds a session or reads CPUS/SF_DIR") {
+    val root = Paths.get("src/main/scala")
+    val files = {
+      val s = Files.walk(root)
+      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    // non-vacuity: a moved source root must fail here, not pass on nothing
+    assert(files.size >= 40, s"only ${files.size} sources under $root")
+    val owner = root.resolve("graft/Session.scala")
+    assert(files.contains(owner))
+    val forbidden = Seq(
+      """SparkSession\s*\.\s*builder""".r,
+      """"SPARK_GRAFT_CPUS"""".r,
+      """"SPARK_GRAFT_SF_DIR"""".r)
+    val offenders = for {
+      f: Path <- files if f != owner
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if forbidden.exists(_.findFirstIn(line).isDefined)
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      "session built or CPUS/SF_DIR read outside graft.Session:\n" +
+        offenders.mkString("\n"))
+  }
+}

@@ -6,7 +6,7 @@ Usage: python3 tools/scaling.py <bench_small.json> <bench_large.json> [out.json]
 Each input is a graft.Bench output line (the target/bench.json copy).
 Emits {"sf_small":…, "sf_large":…, "total_ratio":…, "queries":{name:
 {"t_small":…, "t_large":…, "ratio":…}}, "flagged":[names with ratio >
-FLAG]} — flagged queries must be warm-re-profiled (graft.tools.Profile)
+FLAG]} — flagged queries must be warm-re-profiled (graft.tools.Explain)
 before being called super-linear: single bench passes on a loaded box
 show multi-x phantom spikes (see reports/scaling_r7.json for verdicts).
 """
