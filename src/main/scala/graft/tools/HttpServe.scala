@@ -192,6 +192,7 @@ object HttpServe {
     * never mixed. */
   final class ServingHandle private[tools] (
       val server: HttpServer,
+      workers: java.util.concurrent.ExecutorService,
       svc: QueryService,
       mode: Option[Boolean],
       state: java.util.concurrent.atomic.AtomicReference[ServingState]) {
@@ -201,7 +202,10 @@ object HttpServe {
     def cached: Boolean = state.get.cache.isDefined
     def refresh(newDocs: DataFrame): Unit =
       state.set(HttpServe.resolveState(svc, newDocs, mode))
-    def stop(delaySeconds: Int = 0): Unit = server.stop(delaySeconds)
+    /** Stop accepting, then release the handler pool: `server.stop`
+      * leaves the executor it was given running. */
+    def stop(delaySeconds: Int = 0): Unit =
+      try server.stop(delaySeconds) finally workers.shutdown()
   }
 
   /** The measured cache decision + build for one store: probe the entry
@@ -241,7 +245,7 @@ object HttpServe {
     val server = HttpServer.create(new java.net.InetSocketAddress(port), 64)
     // daemon workers: the listener must never pin the JVM open after
     // server.stop() (the session's lifecycle owns process exit)
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(16,
+    val workers = java.util.concurrent.Executors.newFixedThreadPool(16,
       new java.util.concurrent.ThreadFactory {
         private val n = new java.util.concurrent.atomic.AtomicInteger()
         def newThread(r: Runnable): Thread = {
@@ -249,7 +253,8 @@ object HttpServe {
           t.setDaemon(true)
           t
         }
-      }))
+      })
+    server.setExecutor(workers)
 
     val analytic: Map[String, (ServiceFilter, Limit) => DataFrame] = Map(
       "q1" -> (svc.q1(_, _)), "q2" -> (svc.q2(_, _)),
@@ -386,7 +391,7 @@ object HttpServe {
     })
 
     server.start()
-    new ServingHandle(server, svc, withCache, state)
+    new ServingHandle(server, workers, svc, withCache, state)
   }
 
   /** Standalone entry: build snapshots + document store, serve, then fire a

@@ -54,9 +54,11 @@ final class QueryService(val t: TransitTables, snapshotDir: Option[String] = Non
       // cluster this becomes a Hadoop FileSystem.exists against the store
       .filter(p => new java.io.File(p).exists)
       .map { p =>
-        if (cacheSnapshots)
-          snapCache.computeIfAbsent(name, _ => spark.read.parquet(p).cache())
-        else spark.read.parquet(p)
+        // the schema is the build's own (the service tag reads back as a
+        // string, which [[slice]] casts to anyway): no footer-inference job
+        def read() = spark.read.schema(snapshotFrame(t, name).schema).parquet(p)
+        if (cacheSnapshots) snapCache.computeIfAbsent(name, _ => read().cache())
+        else read()
       }
 
   /** Snapshot slice: prune to the requested service partition, restore the

@@ -25,11 +25,12 @@ class HttpServeParitySpec extends SparkSpec {
 
   /** The snapshot-backed service the production listeners run:
     * analytics snapshots on disk, each read once and pinned. */
-  private lazy val snapSvc = {
+  private lazy val snapDir = {
     val dir = java.nio.file.Files.createTempDirectory("graft_parity_snap").toString
     QueryService.buildAnalyticsSnapshots(t, dir)
-    new QueryService(t, Some(dir), cacheSnapshots = true)
+    dir
   }
+  private lazy val snapSvc = new QueryService(t, Some(snapDir), cacheSnapshots = true)
   private lazy val snapCached = HttpServe.start(snapSvc, docs, 0, withCache = Some(true))
   private lazy val snapLive = HttpServe.start(snapSvc, docs, 0, withCache = Some(false))
 
@@ -81,6 +82,15 @@ class HttpServeParitySpec extends SparkSpec {
     val (api, jobs) = graft.JobCount.of(spark)(ServingCache.buildApi(snapSvc))
     assert(jobs == 4, s"the analytic maps ran $jobs Spark jobs")
     assert(api.size == 16)
+  }
+
+  test("a fresh snapshot-backed service builds the analytic maps in one job per query") {
+    // nothing read yet: each snapshot is read with the build's own schema
+    // (no footer-inference job), pinned, and collected in the same job
+    val fresh = new QueryService(t, Some(snapDir), cacheSnapshots = true)
+    val (api, jobs) = graft.JobCount.of(spark)(ServingCache.buildApi(fresh))
+    assert(jobs == 4, s"the analytic maps ran $jobs Spark jobs")
+    assert(api == ServingCache.buildApi(snapSvc))
   }
 
   test("/get_stops matches") {
@@ -189,14 +199,48 @@ class HttpServeParitySpec extends SparkSpec {
     })
   }
 
+  /** The production key type: the numeric-keyed store the transit
+    * tables build (stop_id BIGINT, route_short_name null on every 17th
+    * route). */
+  private lazy val tt = TransitTables.fromTpch(spark, "/root/testdata/sf0.001")
+  private lazy val ndocs = Timetable.buildStopTimetables(tt).cache()
+
+  test("numeric-keyed store: every store-derived route matches at sampled stops") {
+    import org.apache.spark.sql.functions.{col, explode}
+    val ids = ndocs.select("stop_id").orderBy("stop_id").collect().map(_.getLong(0)).toSeq
+    val nullShort = ndocs.select(col("stop_id"), explode(col("upcoming_services")).as("s"))
+      .filter(col("s.route_short_name").isNull)
+      .select("stop_id").orderBy("stop_id").first().getLong(0)
+    val sample = (ids.indices by math.max(1, ids.size / 11)).map(ids(_)).take(11) :+ nullShort
+    val svc = new QueryService(tt)
+    val nc = HttpServe.start(svc, ndocs, 0, withCache = Some(true))
+    val nl = HttpServe.start(svc, ndocs, 0, withCache = Some(false))
+    try {
+      def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+      val pairs = sample.flatMap { sid =>
+        Timetable.getArrivalsGrouped(ndocs, sid.toString).collect().toSeq.map { r =>
+          (sid, Option(r.getAs[String]("route_short_name")).getOrElse(""),
+            r.getAs[String]("trip_headsign"))
+        }
+      }
+      assert(pairs.exists { case (sid, short, _) => sid == nullShort && short.isEmpty },
+        s"stop $nullShort must serve a null short name")
+      val paths = sample.flatMap { sid =>
+        Seq(s"/get_timetable?stop_id=$sid", s"/get_routes_for_stop?stop_id=$sid") ++
+          Seq("", "1", "2", "3", "4").map(v => s"/get_arrivals?stop_id=$sid&service_id=$v")
+      } ++ pairs.map { case (sid, short, head) =>
+        s"/get_arrivals?stop_id=$sid&route_short_name=${enc(short)}&trip_headsign=${enc(head)}"
+      }
+      assertParity(paths, nc, nl)
+    } finally { nc.stop(); nl.stop() }
+  }
+
   test("numeric-keyed store: non-canonical stop ids answer identically in both modes") {
     // the production store keys stop_id as BIGINT: the live path's ANSI
     // comparison matches "042"/" 42" numerically (and THROWS on "42.0"),
     // while the driver maps key on the exact long rendering — the
     // boundary parse must make every spelling answer identically, and the
     // zero-padded spelling must actually FIND the document
-    val tt = TransitTables.fromTpch(spark, "/root/testdata/sf0.001")
-    val ndocs = Timetable.buildStopTimetables(tt).cache()
     val svc = new QueryService(tt)
     val nc = HttpServe.start(svc, ndocs, 0, withCache = Some(true))
     val nl = HttpServe.start(svc, ndocs, 0, withCache = Some(false))

@@ -105,4 +105,31 @@ class HttpServeSpec extends SparkSpec {
     pool.shutdown()
     assert(codes.forall(_ == 200), codes.toString)
   }
+
+  test("a stopped listener leaves no handler threads behind") {
+    import scala.jdk.CollectionConverters._
+    def handlerThreads(): Int = Thread.getAllStackTraces.keySet.asScala
+      .count(th => th.isAlive && th.getName.startsWith("http-serve-"))
+    server // the shared listener's pool is part of the baseline
+    val before = handlerThreads()
+    val h = HttpServe.start(new QueryService(t), docs, 0, withCache = Some(true))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val codes = (0 until 16).map(_ => pool.submit(
+        new java.util.concurrent.Callable[Int] {
+          def call(): Int = {
+            val c = new java.net.URI(s"http://127.0.0.1:${h.port}/get_stops").toURL
+              .openConnection().asInstanceOf[java.net.HttpURLConnection]
+            try { c.getInputStream.readAllBytes(); c.getResponseCode }
+            finally c.disconnect()
+          }
+        })).map(_.get())
+      assert(codes.forall(_ == 200), codes.toString)
+      assert(handlerThreads() > before, "the listener must have run its own handlers")
+    } finally { pool.shutdown(); h.stop() }
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (handlerThreads() > before && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(handlerThreads() <= before,
+      s"${handlerThreads() - before} http-serve threads outlived their listener")
+  }
 }
