@@ -51,216 +51,17 @@ object Bench {
 
   /** Locale-independent 3-dp decimal for hand-assembled JSON: the f"%.3f"
     * interpolator formats in the JVM's default locale, and a comma-decimal
-    * locale (fr_FR et al.) would write `4,321` — corrupting every sidecar,
-    * ledger row and contract line at once (ADVICE r15). All JSON-bound
+    * locale (fr_FR et al.) would write `4,321` — corrupting every sidecar
+    * and contract line at once (ADVICE r15). All JSON-bound
     * doubles in this file go through here; stderr progress lines may keep
     * the interpolator (they are read by humans, not parsers). */
   private[graft] def d3(x: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
 
-  /** One box-epoch probe reading. The r14 legs (`cpuSec` single-threaded
-    * sort, `diskSec` sequential 1 GiB write+fsync) are kept verbatim for
-    * ledger continuity; r15 adds the two legs the r14 postmortem showed
-    * they miss: `parCpuSec` (32-way parallel sort — memory-bandwidth and
-    * scheduler contention, the state 32-thread boards actually run in)
-    * and `rfsyncSec` (small random-offset write+fsync train — per-fsync
-    * device latency, the state the disk-touching faces actually pay).
-    * The r14 driver/builder same-code sf0.1 pair diverged 23% in board
-    * total while the idle-box legs sat 6.5%/7.3% apart — inside
-    * tolerance; the divergence concentrated 2–3.2× in fsync-heavy faces. */
-  private[graft] final case class BoxProbe(cpuSec: Double, diskSec: Double,
-      parCpuSec: Double, rfsyncSec: Double) {
-    def json: String =
-      s"""{"cpu_sec":${d3(cpuSec)},"disk_sec":${d3(diskSec)},"par_cpu_sec":${d3(parCpuSec)},"rfsync_sec":${d3(rfsyncSec)}}"""
-  }
-
-  /** Box-epoch calibration probe (VERDICT r13 ask #2; legs widened per
-    * r14 ask #1): pinned CPU+disk micro-benchmarks run in the UNTIMED
-    * window before the board and recorded in the contract line, so two
-    * boards' totals become mechanically comparable — the r13 "249.7 vs
-    * 202.8 s on identical code" question cost a four-board A/B plus prose
-    * to attribute to a box-state epoch (standing_scaling.py reads the
-    * recorded values from each board's sidecar).
-    *
-    * CPU leg: fixed-seed xorshift fill + single-threaded `Arrays.sort` —
-    * pure compute, allocation-shape identical every run. Disk leg: 1 MiB-
-    * chunked sequential write + one fsync to the default tmp filesystem
-    * (the same device the boards' disk-writing faces hit), then delete —
-    * sensitive to the sustained write-back-debt epoch. Parallel CPU leg
-    * (r15): `parThreads` threads each fill+sort their own pinned-size
-    * array; wall time to join — sensitive to memory-bandwidth / steal-time
-    * pressure that a single-threaded leg cannot see (the r14 gap). Random-
-    * fsync leg (r15): `rfsyncWrites` 4 KiB writes at fixed-seed pseudo-
-    * random offsets in a preallocated file, `force(false)` after EACH —
-    * per-operation device-internal latency, the dominant cost of the GTFS
-    * write/re-read, Derby-landing and localCheckpoint faces that carried
-    * the r14 divergence.
-    *
-    * Sizes are PINNED: comparability requires the work never change; the
-    * spec passes tiny overrides. Each leg is the MIN OF N runs — the same
-    * one-sided-noise estimator the board's warm times use (single-run
-    * probes on an idle box still spread ±9%, false-flag territory against
-    * the ±10% cross-epoch threshold). Runs once per board, before Spark's
-    * threads exist. */
-  /** PINNED probe work sizes — cross-round comparability requires the
-    * probe's work NEVER change (every ledger row and sidecar probe since
-    * the leg landed was measured at exactly these sizes). Changing one
-    * silently re-bases the epoch time-series; if a leg must be resized,
-    * RENAME it (a new JSON key) so old readings can't be compared to new
-    * ones by accident. Values are spec-pinned in BenchContractSpec. */
-  private[graft] val ProbeCpuN: Int = 1 << 26
-  private[graft] val ProbeDiskBytes: Long = 1L << 30
-  private[graft] val ProbeParThreads: Int = 32
-  private[graft] val ProbeParN: Int = 1 << 24
-  private[graft] val ProbeRfsyncFileBytes: Long = 512L << 20
-  private[graft] val ProbeRfsyncWrites: Int = 2048
-
-  private[graft] def epochProbe(cpuN: Int = ProbeCpuN,
-      diskBytes: Long = ProbeDiskBytes,
-      parThreads: Int = ProbeParThreads, parN: Int = ProbeParN,
-      rfsyncFileBytes: Long = ProbeRfsyncFileBytes,
-      rfsyncWrites: Int = ProbeRfsyncWrites): BoxProbe = {
-    // Working sets are scoped per leg (ADVICE r15): the old shape held the
-    // 512 MiB cpu array AND the 32x128 MiB parallel arrays live across all
-    // four legs, so the standalone probe at -Xmx8g ran with thin headroom
-    // and any smaller-heap caller OOM'd in the untimed window. Each leg's
-    // arrays are now allocated just before its reps and released right
-    // after — peak live set is one leg's working set. Within a leg the
-    // arrays are still allocated ONCE and refilled per rep, so reps time
-    // the work (fill+sort under contention), not the allocator. Leg ORDER
-    // changed cpu→disk→par→rfsync to cpu→par→disk→rfsync; the timed work
-    // per leg is identical and the legs are isolated (the par leg does no
-    // I/O, the disk legs drain write-back before timing), so the ledger
-    // time-series is not re-based.
-    var x = 0x9e3779b97f4a7c15L
-    var arr = new Array[Long](cpuN)
-    def cpuLeg(): Double = {
-      val c0 = System.nanoTime()
-      var i = 0
-      while (i < cpuN) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; arr(i) = x; i += 1 }
-      java.util.Arrays.sort(arr)
-      // data-dependent witness so the fill+sort cannot be dead-code'd
-      if (arr(0) > arr(cpuN - 1)) System.err.println("[bench] probe sort invariant broken")
-      (System.nanoTime() - c0) / 1e9
-    }
-    val cpuSec = math.min(cpuLeg(), cpuLeg())
-    arr = null
-    var parArrs = Array.fill(parThreads)(new Array[Long](parN))
-    def parCpuLeg(): Double = {
-      val p0 = System.nanoTime()
-      val threads = (0 until parThreads).map { t =>
-        val th = new Thread(() => {
-          val a = parArrs(t)
-          var s = 0x9e3779b97f4a7c15L * (t + 1)
-          var i = 0
-          while (i < parN) { s ^= s << 13; s ^= s >>> 7; s ^= s << 17; a(i) = s; i += 1 }
-          java.util.Arrays.sort(a)
-        })
-        th.start(); th
-      }
-      threads.foreach(_.join())
-      if (parArrs.exists(a => a(0) > a(parN - 1)))
-        System.err.println("[bench] probe parallel sort invariant broken")
-      (System.nanoTime() - p0) / 1e9
-    }
-    // disk legs get a third rep: even post-sync, one rep in four lands a
-    // ~25% outlier (device-internal housekeeping); min-of-3 measured ±3%.
-    // The parallel leg also gets three: under 32-way contention a single
-    // descheduled thread stretches the join, and min-of-2 still spread
-    // ±7% idle at the r15 sizing pass — min-of-3 at the doubled size
-    // brings it inside the CPU tolerance.
-    val parCpuSec = math.min(parCpuLeg(), math.min(parCpuLeg(), parCpuLeg()))
-    parArrs = null
-    val chunk = new Array[Byte](1 << 20)
-    var i = 0
-    while (i < chunk.length) { chunk(i) = (i * 131 + 7).toByte; i += 1 }
-    def drainWriteback(): Unit =
-      // drain inherited write-back debt BEFORE timing: the disk legs must
-      // measure the device (the epoch), not whatever dirty pages the
-      // previous process left — unsynced, the same idle box measured
-      // 2.2–3.6 s run-to-run
-      try new ProcessBuilder("sync").start().waitFor()
-      catch { case _: Throwable => () }
-    /** Write `buf` fully: FileChannel.write is allowed to be partial, and
-      * a short write would silently time less than the pinned byte count
-      * (ADVICE r14). */
-    def writeFully(ch: java.nio.channels.FileChannel,
-        buf: java.nio.ByteBuffer): Unit =
-      while (buf.hasRemaining) ch.write(buf)
-    def writeFullyAt(ch: java.nio.channels.FileChannel,
-        buf: java.nio.ByteBuffer, pos: Long): Unit = {
-      var p = pos
-      while (buf.hasRemaining) p += ch.write(buf, p)
-    }
-    def diskLeg(): Double = {
-      val tmp = java.nio.file.Files.createTempFile("graft_epoch_probe", ".bin")
-      try {
-        drainWriteback()
-        val d0 = System.nanoTime()
-        val ch = java.nio.channels.FileChannel.open(tmp,
-          java.nio.file.StandardOpenOption.WRITE)
-        try {
-          var written = 0L
-          while (written < diskBytes) {
-            writeFully(ch, java.nio.ByteBuffer.wrap(chunk))
-            written += chunk.length
-          }
-          ch.force(true)
-        } finally ch.close()
-        (System.nanoTime() - d0) / 1e9
-      } finally java.nio.file.Files.deleteIfExists(tmp)
-      // finally-delete (ADVICE r14): an IOException mid-write must not
-      // leak up to 1 GiB in tmp
-    }
-    def rfsyncLeg(): Double = {
-      val tmp = java.nio.file.Files.createTempFile("graft_epoch_rfsync", ".bin")
-      try {
-        // preallocate UNTIMED so the timed train measures fsync latency,
-        // not extent allocation; then drain the prealloc's own dirty pages
-        val pre = java.nio.channels.FileChannel.open(tmp,
-          java.nio.file.StandardOpenOption.WRITE)
-        try {
-          var written = 0L
-          while (written < rfsyncFileBytes) {
-            val n = math.min(chunk.length.toLong, rfsyncFileBytes - written).toInt
-            writeFully(pre, java.nio.ByteBuffer.wrap(chunk, 0, n))
-            written += n
-          }
-          pre.force(true)
-        } finally pre.close()
-        drainWriteback()
-        val page = new Array[Byte](4096)
-        var j = 0
-        while (j < page.length) { page(j) = (j * 37 + 11).toByte; j += 1 }
-        val slots = math.max(1L, rfsyncFileBytes / page.length)
-        val ch = java.nio.channels.FileChannel.open(tmp,
-          java.nio.file.StandardOpenOption.WRITE)
-        val r0 = System.nanoTime()
-        try {
-          var s = 0x2545f4914f6cdd1dL // fixed seed: identical offset train every run
-          var w = 0
-          while (w < rfsyncWrites) {
-            s ^= s << 13; s ^= s >>> 7; s ^= s << 17
-            val off = java.lang.Math.floorMod(s, slots) * page.length
-            writeFullyAt(ch, java.nio.ByteBuffer.wrap(page), off)
-            ch.force(false) // fsync EACH write: per-op latency is the signal
-            w += 1
-          }
-        } finally ch.close()
-        (System.nanoTime() - r0) / 1e9
-      } finally java.nio.file.Files.deleteIfExists(tmp)
-    }
-    BoxProbe(
-      cpuSec = cpuSec,
-      diskSec = math.min(diskLeg(), math.min(diskLeg(), diskLeg())),
-      parCpuSec = parCpuSec,
-      rfsyncSec = math.min(rfsyncLeg(), math.min(rfsyncLeg(), rfsyncLeg())))
-  }
-
-  /** Minimal JSON string escape for hand-assembled rows: the ledger
-    * context embeds `sfName(SPARK_GRAFT_SF_DIR)` — env-provided text — and
-    * an unescaped quote/backslash would write a malformed JSONL row that
-    * corrupts the standing ledger for every later reader (ADVICE r14). */
+  /** Minimal JSON string escape for hand-assembled rows: face names in
+    * `failed` and `Verify`'s oracle SQL are arbitrary text, and an
+    * unescaped quote/backslash would write a malformed line that every
+    * later reader fails on (ADVICE r14). */
   private[graft] def jsonEscape(s: String): String =
     s.flatMap {
       case '"'           => "\\\""
@@ -268,25 +69,6 @@ object Bench {
       case c if c < 0x20 => f"\\u${c.toInt}%04x"
       case c             => c.toString
     }
-
-  /** Append a probe reading to the standing epoch ledger — a time series
-    * of `{ts_ms, cpu_sec, disk_sec, par_cpu_sec, rfsync_sec, context}`
-    * rows that records WHEN the box flips epochs (the r13/r14 slow epoch
-    * spanned whole sessions; a flip's timestamp tells future rounds which
-    * boards are comparable). Pre-r15 rows lack the two new legs — readers
-    * treat them as absent, not zero.
-    * Best-effort: a read-only checkout must not fail a board over it. */
-  private[graft] def appendEpochLedger(probe: BoxProbe,
-      context: String, baseDir: String = "."): Unit =
-    try {
-      val out = java.nio.file.Paths.get(baseDir).resolve("reports/epoch_ledger.jsonl")
-      if (out.getParent != null) java.nio.file.Files.createDirectories(out.getParent)
-      val row = s"""{"ts_ms":${System.currentTimeMillis()},"cpu_sec":${d3(probe.cpuSec)},"disk_sec":${d3(probe.diskSec)},"par_cpu_sec":${d3(probe.parCpuSec)},"rfsync_sec":${d3(probe.rfsyncSec)},"context":"${jsonEscape(context)}"}""" + "\n"
-      java.nio.file.Files.write(out,
-        row.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    } catch { case _: Exception => () }
 
   private[graft] def sha8(line: String): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
@@ -325,7 +107,6 @@ object Bench {
     * total and map and is listed under `failed` on both lines instead. */
   private[graft] def writeArtifacts(results: Seq[(String, Double, Double)],
       sfDir: String, subset: Boolean, baseDir: String = ".",
-      probe: BoxProbe = BoxProbe(0.0, 0.0, 0.0, 0.0),
       failed: Seq[String] = Nil): (String, String) = {
     val totalWarm = results.map(_._3).sum
     val totalCold = results.map(_._2).sum
@@ -342,18 +123,14 @@ object Bench {
       "\"" + n + s"""":{"cold":${d3(c)},"warm":${d3(w)}}"""
     }.mkString("{", ",", "}")
     val failedJson = failed.map(n => "\"" + jsonEscape(n) + "\"").mkString("[", ",", "]")
-    // the probe rides BOTH lines: the contract line is what the driver
-    // archives (BENCH_r{N}.json), the sidecar is what standing_scaling.py
-    // reads — cross-epoch flagging needs it in the committed artifact
-    val probeJson = probe.json
-    // baseline-contract ratio, sf1 boards only (rides both lines like the
-    // probe: the sidecar is the machine-read artifact, the contract line
-    // the judge-archived one)
+    // baseline-contract ratio, sf1 boards only (rides both lines: the
+    // sidecar is the machine-read artifact, the contract line the archived
+    // one)
     val baseJson = baselineRatio(sfDir, byName, headline).map { r =>
       s""","baseline_ratio":${d3(r)},"baseline_bar_sec":${d3(BaselineBarSec)}"""
     }.getOrElse("")
     val fullLine =
-      s"""{"metric":"total_query_time","value":${d3(totalWarm)},"unit":"sec","total_cold":${d3(totalCold)},"epoch_probe":$probeJson$baseJson,"sf":"$sfDir","queries":$full,"failed":$failedJson}"""
+      s"""{"metric":"total_query_time","value":${d3(totalWarm)},"unit":"sec","total_cold":${d3(totalCold)}$baseJson,"sf":"$sfDir","queries":$full,"failed":$failedJson}"""
     val outs = sidecarPaths(sfDir, subset)
     for (path <- outs) {
       val out = java.nio.file.Paths.get(baseDir).resolve(path)
@@ -362,7 +139,7 @@ object Bench {
         (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
     val line =
-      s"""{"metric":"total_query_time","value":${d3(totalWarm)},"unit":"sec","total_cold":${d3(totalCold)},"n_queries":${results.size},"queries":$headMap,"families_warm":$famMap,"epoch_probe":$probeJson$baseJson,"full_map":"${outs.last}","full_map_sha256_8":"${sha8(fullLine)}","sf":"$sfDir","failed":$failedJson}"""
+      s"""{"metric":"total_query_time","value":${d3(totalWarm)},"unit":"sec","total_cold":${d3(totalCold)},"n_queries":${results.size},"queries":$headMap,"families_warm":$famMap$baseJson,"full_map":"${outs.last}","full_map_sha256_8":"${sha8(fullLine)}","sf":"$sfDir","failed":$failedJson}"""
     (line, fullLine)
   }
 
@@ -411,13 +188,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = Session.sfDir
-    // box-epoch probe FIRST — before Spark's threads exist, so the probe
-    // sees the same idle-JVM box every board sees (untimed window)
-    val probe = epochProbe()
-    System.err.println(
-      f"[bench] epoch_probe cpu=${probe.cpuSec}%.3f disk=${probe.diskSec}%.3f" +
-        f" par_cpu=${probe.parCpuSec}%.3f rfsync=${probe.rfsyncSec}%.3f")
-    appendEpochLedger(probe, s"bench:${sfName(sfDir)}")
     val spark = Session.batch(sfDir)
     // Unmeasured warmup: touch every table (parquet footers, FileIndex)
     // and run one small agg+join so JIT/codegen infra reaches steady state
@@ -469,7 +239,7 @@ object Bench {
     // {query: {cold, warm}} map this run actually wrote — all assembled by
     // [[writeArtifacts]] (pure file/line logic, swept by BenchContractSpec).
     val (line, _) = writeArtifacts(outcomes.collect { case Right(r) => r },
-      sfDir, subset = only.nonEmpty, probe = probe,
+      sfDir, subset = only.nonEmpty,
       failed = outcomes.collect { case Left(n) => n })
     // the driver json-parses the LAST line of the run's combined output
     // (BENCH_r9/r10 landed parsed:null because sbt's "[success]" epilogue —

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   *    profilers): `local[cpus]`, `cpus` shuffle partitions, the data-sized
   *    AQE starting grid ([[Scale.initialShufflePartitions]]) and, once the
   *    session exists, [[Scale.tuneSessionGrid]];
-  *  - [[Serving]] — resident request serving (`HttpServe`, `ServeDaemon`):
+  *  - [[Serving]] — resident request serving (`HttpServe`, `GtfsDemo`):
   *    a request shuffles tiny cached frames, so 4 reducers keep per-request
   *    task dispatch ~free where `cpus` would spend more time scheduling
   *    than computing, and FAIR scheduling keeps one slow request from

@@ -140,8 +140,9 @@ object GtfsWriter {
     censusScan(spark, writeCorruptFeed(spark, sfDir))
 
   /** The census's write leg alone: land the deterministically-mangled
-    * feed, return its path (adjudication `transit_gtfs_corrupt` in
-    * tools/adjudications.json timed the two legs apart). */
+    * feed, return its path (kept apart so the two legs can be timed
+    * apart: an r16 solo A/B put the five-class fixture's whole cost delta
+    * in this leg, the PERMISSIVE scan legs being equal). */
   private[graft] def writeCorruptFeed(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): String = {
     import spark.implicits._

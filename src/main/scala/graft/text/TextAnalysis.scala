@@ -1137,7 +1137,11 @@ object TextAnalysis {
     * Scale: map-side explode → doc-partitioned windows (lag + running
     * sum for run ids) → one doc-keyed agg that reassembles both strings
     * from a position-sorted collect_list. ONE shuffle on doc_id; state
-    * bounded by document length. */
+    * bounded by document length.
+    *
+    * A doc with no noised token (`n_spans = 0`) has no target: NULL, as
+    * DuckDB's `array_to_string` of an empty list gives (Spark's
+    * `array_join` would give ""). */
   def spanCorruption(spark: SparkSession, dir: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("pos"))
@@ -1172,8 +1176,9 @@ object TextAnalysis {
       .select(col("doc_id"), col("n_tokens"), col("n_noised"), col("n_spans"),
         array_join(filter(transform(col("ins"), e => e("in_piece")),
           p => p.isNotNull), " ").as("input_text"),
-        array_join(filter(transform(col("tgts"), e => e("tgt_piece")),
-          p => p.isNotNull), " ").as("target_text"))
+        when(col("n_spans") > 0,
+          array_join(filter(transform(col("tgts"), e => e("tgt_piece")),
+            p => p.isNotNull), " ")).as("target_text"))
       .orderBy(col("doc_id"))
   }
 

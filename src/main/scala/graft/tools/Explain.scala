@@ -9,11 +9,13 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.{Bench, Session, SparkEntry}
+import graft.transit.{QueryService, TransitTables}
 
 /** Per-face execution profile in the board's own engine (local iteration;
   * not part of the driver contract). Each named face runs cold, then warm,
@@ -29,7 +31,11 @@ import graft.{Bench, Session, SparkEntry}
   *    the sink's (it is optimized and planned as it runs);
   *  - Exchange, Scan parquet, ExistingRDD, ReusedExchange and
   *    InMemoryTableScan counts from the AQE-final executed plan, whose
-  *    formatted text goes to `target/explain/<face>.txt`.
+  *    formatted text goes to `target/explain/<face>.txt` (`:` becomes `_`).
+  *
+  * Besides registered faces, `snapshot_build:<q>` names the tagged frame
+  * one analytics snapshot build writes (`QueryService.snapshotFrame`, `q`
+  * one of `QueryService.Q1`..`Q4`), so the build itself can be profiled.
   *
   * Usage: `runMain graft.tools.Explain <face...>` */
 object Explain extends AdaptiveSparkPlanHelper {
@@ -47,10 +53,20 @@ object Explain extends AdaptiveSparkPlanHelper {
     case _ => None
   }
 
+  private val SnapshotNames =
+    Set(QueryService.Q1, QueryService.Q2, QueryService.Q3, QueryService.Q4)
+
+  private def frameFor(name: String): Option[(SparkSession, String) => DataFrame] =
+    name.split(":", 2) match {
+      case Array("snapshot_build", q) if SnapshotNames(q) =>
+        Some((spark, sfDir) => QueryService.snapshotFrame(TransitTables.fromTpch(spark, sfDir), q))
+      case _ => SparkEntry.queries.get(name)
+    }
+
   def main(args: Array[String]): Unit = {
-    val unknown = args.filterNot(SparkEntry.queries.contains)
+    val unknown = args.filter(frameFor(_).isEmpty)
     require(args.nonEmpty && unknown.isEmpty,
-      s"usage: Explain <face...> (unknown: ${unknown.mkString(", ")})")
+      s"usage: Explain <face|snapshot_build:q...> (unknown: ${unknown.mkString(", ")})")
     val sfDir = Session.sfDir
     val spark = Session.batch(sfDir)
     val sc = spark.sparkContext
@@ -74,7 +90,7 @@ object Explain extends AdaptiveSparkPlanHelper {
     def ms(qe: QueryExecution, phase: String) =
       qe.tracker.phases.get(phase).map(_.durationMs).getOrElse(0L)
     for (face <- args) {
-      val fn = SparkEntry.queries(face)
+      val fn = frameFor(face).get
       // (seconds, the face frame's analysis ms)
       def run(): (Double, Long) = {
         Bench.quiesce()
@@ -98,7 +114,7 @@ object Explain extends AdaptiveSparkPlanHelper {
         s"analysis_ms=$analysisMs optimizer_ms=${ms(qe, "optimization")} " +
         s"planning_ms=${ms(qe, "planning")} " +
         Kinds.map(k => s"$k=${kinds.count(_ == k)}").mkString(" "))
-      Files.write(outDir.resolve(s"$face.txt"),
+      Files.write(outDir.resolve(s"${face.replace(':', '_')}.txt"),
         (s"== $face (warm, sf=$sfDir) ==\n" + qe.explainString(FormattedMode))
           .getBytes(UTF_8))
     }

@@ -7,9 +7,8 @@ import graft.transit._
 /** A REAL HTTP listener over the serving layer — the reference exposes its
   * engines through two Flask apps (`SQL/app.py:76-126` — /api/q1..q4 with
   * `service_id`/`limit` params; `Mongo/app.py:47-244` — /get_stops,
-  * /get_timetable, /get_routes_for_stop, /get_arrivals). [[ServeDaemon]]
-  * measures the engine-side request path; this closes the last gap between
-  * "engine analog" and "a user could point curl at it": the same
+  * /get_timetable, /get_routes_for_stop, /get_arrivals). This closes the
+  * gap between "engine analog" and "a user could point curl at it": the same
   * [[QueryService]]/[[Timetable]] plans behind real sockets, query-string
   * parsing, status codes and JSON bodies, on the JDK's built-in
   * `com.sun.net.httpserver` (zero added dependencies — the HTTP layer is
@@ -394,16 +393,11 @@ object HttpServe {
     new ServingHandle(server, workers, svc, withCache, state)
   }
 
-  /** Standalone entry: build snapshots + document store, serve, then fire a
-    * real-socket load test at itself and report latency percentiles (the
-    * full-stack analog of [[ServeDaemon]]'s engine-side numbers — the delta
-    * between the two IS the HTTP layer's cost). `SPARK_GRAFT_SERVE_FOREVER=1`
-    * keeps the listener up for interactive use instead. */
+  /** Standalone entry: build the snapshots and the document store, then
+    * serve on `args(0)` (default 8181) until the process is killed. */
   def main(args: Array[String]): Unit = {
     val sfDir = graft.Session.sfDir
     val port = if (args.length > 0) args(0).toInt else 8181
-    val nReqs = if (args.length > 1) args(1).toInt else 1000
-    val clients = if (args.length > 2) args(2).toInt else 8
     // serving profile: 4 reducers, FAIR pool. Builds that need width (the
     // one-off snapshot/store ETL) size their own barriers via graft.Scale,
     // so the session dial only shapes request plans.
@@ -418,102 +412,8 @@ object HttpServe {
     // nested rows — collapse to 4 partitions so a point-lookup request
     // schedules 4 scan tasks, not the build's grid
     val timetables = Timetable.buildStopTimetables(t).coalesce(4).cache()
-    val stopIds = timetables.select("stop_id").limit(64).collect()
-      .map(_.get(0).toString)
     val handle = start(svc, timetables, port)
-    val bound = handle.port
-    println(s"[http-serve] listening on :$bound (cache=${handle.cached})")
-
-    if (sys.env.get("SPARK_GRAFT_SERVE_FOREVER").contains("1")) {
-      Thread.currentThread.join() // serve until killed
-      return
-    }
-
-    // self-load-test over a deterministic mixed route set
-    val routes: IndexedSeq[String] =
-      (for (s <- IndexedSeq("1", "2", "3", "4"); q <- Seq("q1", "q2", "q3", "q4"))
-        yield s"/api/$q?service_id=$s&limit=20") ++
-      stopIds.take(8).flatMap(id => Seq(
-        s"/get_timetable?stop_id=$id",
-        s"/get_routes_for_stop?stop_id=$id",
-        s"/get_arrivals?stop_id=$id")) :+ "/get_stops"
-    // Connection-REUSING client (java.net.http pools keep-alive
-    // connections per client instance): the r12 generator opened a fresh
-    // HttpURLConnection per request and its connection handling flattened
-    // every route to a ~44 ms p50 plateau — the published number measured
-    // the harness, not the server (two routes that bypassed it showed
-    // 2.9-4.9 ms). One client per worker thread keeps each worker on its
-    // own persistent connection, so per-route p50s now vary with the
-    // actual response work.
-    def newClient() = java.net.http.HttpClient.newBuilder()
-      .version(java.net.http.HttpClient.Version.HTTP_1_1).build()
-    def get(client: java.net.http.HttpClient, path: String): Int =
-      client.send(
-        java.net.http.HttpRequest.newBuilder(
-          new java.net.URI(s"http://127.0.0.1:$bound$path")).GET().build(),
-        java.net.http.HttpResponse.BodyHandlers.ofByteArray()).body().length
-    val warmClient = newClient()
-    routes.foreach(get(warmClient, _)) // warm every route once
-    val lat = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(clients,
-      new java.util.concurrent.ThreadFactory {
-        def newThread(r: Runnable): Thread = {
-          val t = new Thread(r); t.setDaemon(true); t
-        }
-      })
-    val perThread = ThreadLocal.withInitial(
-      new java.util.function.Supplier[java.net.http.HttpClient] {
-        def get(): java.net.http.HttpClient = newClient()
-      })
-    // wall-clock window bounds to stderr: a GC-log-annotated run (p99
-    // tail attribution) needs to intersect pause timestamps with the
-    // measured window, not the whole process lifetime (startup ETL GCs
-    // would otherwise dominate the correlation)
-    System.err.println(s"[http-serve] load_window_start_ms=${System.currentTimeMillis}")
-    val t0 = System.nanoTime()
-    (0 until nReqs).map { i =>
-      pool.submit(new Runnable {
-        def run(): Unit = {
-          val path = routes(i % routes.size)
-          val s = System.nanoTime()
-          get(perThread.get(), path)
-          lat.add((path.drop(1).takeWhile(c => c != '?' && c != '/'),
-            (System.nanoTime() - s) / 1e6))
-        }
-      })
-    }.foreach(_.get())
-    val wallSec = (System.nanoTime() - t0) / 1e9
-    System.err.println(s"[http-serve] load_window_end_ms=${System.currentTimeMillis}")
-    pool.shutdown()
-    handle.stop()
-
-    import scala.jdk.CollectionConverters._
-    val all = lat.asScala.toVector
-    def pct(xs: Vector[Double], p: Double): Double = {
-      val s = xs.sorted
-      s(math.min(s.size - 1, (p * s.size).toInt))
-    }
-    val perRoute = all.groupBy(_._1).toSeq.sortBy(_._1).map { case (r, vs) =>
-      val xs = vs.map(_._2)
-      f""""$r":{"n":${xs.size},"p50_ms":${pct(xs, 0.50)}%.1f,"p95_ms":${pct(xs, 0.95)}%.1f}"""
-    }.mkString(",")
-    val xs = all.map(_._2)
-    val json =
-      f"""{"metric":"http_serve","sf":"$sfDir","n":$nReqs,"clients":$clients,"req_per_sec":${nReqs / wallSec}%.1f,"p50_ms":${pct(xs, 0.50)}%.1f,"p95_ms":${pct(xs, 0.95)}%.1f,"p99_ms":${pct(xs, 0.99)}%.1f,$perRoute}"""
-    println(json)
-    // one JSONL row per measured scale (the sf1 cert must not clobber the
-    // sf0.1 row): replace any prior row for THIS sfDir, keep the rest
-    val out = java.nio.file.Paths.get("reports/http_serve.json")
-    java.nio.file.Files.createDirectories(out.getParent)
-    val prior =
-      if (java.nio.file.Files.exists(out))
-        scala.jdk.CollectionConverters.ListHasAsScala(
-          java.nio.file.Files.readAllLines(out)).asScala.toSeq
-          .filterNot(l => l.contains("\"sf\":\"" + sfDir + "\"") || l.isBlank)
-      else Seq.empty
-    java.nio.file.Files.write(out,
-      ((prior :+ json).mkString("\n") + "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    spark.stop()
+    println(s"[http-serve] listening on :${handle.port} (cache=${handle.cached})")
+    Thread.currentThread.join() // serve until killed
   }
 }

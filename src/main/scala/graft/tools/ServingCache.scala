@@ -9,7 +9,7 @@ import graft.transit._
   * collected small table"), applied to every bounded endpoint.
   *
   * The r11 certification showed the listener's cost is NOT the engine
-  * (ServeDaemon answers the same faces at p50 37 ms): ~170 ms per request
+  * (the engine alone answered the same faces at p50 37 ms): ~170 ms per request
   * went to running a Spark job + `toJSON.collect()` against the cached
   * store. But every endpoint's response is a deterministic slice of a
   * BOUNDED precomputable superset — exactly the reference's own serving

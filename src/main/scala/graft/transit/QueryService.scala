@@ -34,7 +34,7 @@ final class QueryService(val t: TransitTables, snapshotDir: Option[String] = Non
 
   private val spark = t.stopTimes.sparkSession
 
-  /** Resident-process mode ([[graft.tools.ServeDaemon]]): each snapshot
+  /** Resident-process mode ([[graft.tools.HttpServe]]): each snapshot
     * table is read ONCE and pinned in executor memory, so a request is a
     * filter+sort+limit over an `InMemoryTableScan` — no per-request
     * parquet footer reads. Off by default: one-shot callers (Verify's
@@ -281,7 +281,7 @@ object QueryService {
     Seq(Q1, Q2, Q3, Q4).foreach(buildSnapshot(t, dir, _))
 
   /** The tagged frame one snapshot build writes — exposed (package-
-    * private) so plan-evidence tooling (`tools.PlanSnap`) can explain the
+    * private) so plan-evidence tooling (`tools.Explain`) can explain the
     * build itself, not just the read-back face. */
   private[graft] def snapshotFrame(t: TransitTables, name: String): DataFrame =
     name match {

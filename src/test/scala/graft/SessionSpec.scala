@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** [[Session]] is the engine's one session factory: its two profiles are
   * pinned to the confs `Bench.main` and `HttpServe.main` built by hand
   * before it existed, and a source guard keeps every other file from
-  * building a session or reading the two env vars it owns. */
+  * building a session or reading the two env vars it owns, and pins the
+  * engine's whole env surface to those two plus `SPARK_GRAFT_ONLY`. */
 class SessionSpec extends AnyFunSuite {
 
   /** A dir whose only file is `bytes` long but sparse, so the data-sized
@@ -89,13 +90,26 @@ class SessionSpec extends AnyFunSuite {
       """SparkSession\s*\.\s*builder""".r,
       """"SPARK_GRAFT_CPUS"""".r,
       """"SPARK_GRAFT_SF_DIR"""".r)
-    val offenders = for {
-      f: Path <- files if f != owner
+    // the whole env surface: every env read, in any file, names one of these
+    val envRead = """sys\.env|System\.getenv""".r
+    val envVars = Seq("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_ONLY")
+    val lines = for {
+      f: Path <- files
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      if forbidden.exists(_.findFirstIn(line).isDefined)
-    } yield s"$f:${i + 1}: ${line.trim}"
+    } yield (f, s"$f:${i + 1}: ${line.trim}", line)
+    val offenders = lines.collect {
+      case (f, at, line) if f != owner && forbidden.exists(_.findFirstIn(line).isDefined) => at
+    }
     assert(offenders.isEmpty,
       "session built or CPUS/SF_DIR read outside graft.Session:\n" +
         offenders.mkString("\n"))
+    val envSites = lines.filter { case (_, _, line) => envRead.findFirstIn(line).isDefined }
+    // non-vacuity: Session's two reads and Bench's ONLY read are found
+    assert(envSites.size >= 3, envSites.map(_._2).mkString("\n"))
+    val unpinned = envSites.collect {
+      case (_, at, line) if !envVars.exists(v => line.contains("\"" + v + "\"")) => at
+    }
+    assert(unpinned.isEmpty,
+      s"env read naming none of ${envVars.mkString(", ")}:\n" + unpinned.mkString("\n"))
   }
 }

@@ -203,14 +203,38 @@ class TextOpsSpec extends AnyFunSuite with SparkSpec {
     rows.foreach { r =>
       val (id, nSpans) = (r.getLong(0), r.getLong(3))
       val (input, target) = (r.getString(4), r.getString(5))
+      // no noised token → no target (NULL, as the oracle has it)
+      assert((target == null) == (nSpans == 0), s"doc $id: NULL target iff no span")
       // target = "<extra_id_0> t t <extra_id_1> t ..." → span k's tokens
-      val spans = "<extra_id_(\\d+)>".r.split(target).drop(1).map(_.trim)
+      val spans = Option(target).toSeq
+        .flatMap("<extra_id_(\\d+)>".r.split(_).drop(1).map(_.trim))
       assert(spans.length == nSpans, s"doc $id: span count")
       val rebuilt = spans.zipWithIndex.foldLeft(input) { case (acc, (sp, k)) =>
         acc.replace(s"<extra_id_$k>", sp)
       }.trim.split("\\s+").mkString(" ")
       assert(rebuilt == docs(id), s"doc $id fails round-trip")
     }
+  }
+
+  test("span corruption: a doc with no noised token has a NULL target") {
+    import spark.implicits._
+    // a one-token doc whose only position's gate is off
+    val id = (1L to 50L).find { i =>
+      spark.range(1).select(graft.functions.TextHash.strHash(lit(s"sc:$i:0")) % 5)
+        .head().getLong(0) != 0L
+    }.get
+    val dir = java.nio.file.Files.createTempDirectory("span_corruption")
+    try {
+      Seq((id, "solitary")).toDF("doc_id", "text")
+        .write.parquet(dir.resolve("documents.parquet").toString)
+      val rows = TextAnalysis.spanCorruption(spark, dir.toString).collect()
+      assert(rows.length == 1)
+      val r = rows.head
+      assert(r.getAs[Long]("doc_id") == id)
+      assert(r.getAs[Long]("n_spans") == 0L)
+      assert(r.getAs[String]("input_text") == "solitary")
+      assert(r.isNullAt(r.fieldIndex("target_text")))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
   test("bm25: 3 two-term queries, dense ranks, monotone scores, tf beats shorter overlap") {
