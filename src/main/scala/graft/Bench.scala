@@ -35,8 +35,9 @@ object Bench {
       Seq("target/bench.json", "reports/bench_sf10.json")
     else Seq("target/bench.json")
 
-  /** SPARK_GRAFT_ONLY parse: set-but-EMPTY (or whitespace) must mean "no
-    * subset" — a shell passing ONLY="" through is a full run. The r12 bug:
+  /** SPARK_GRAFT_ONLY parse, shared by `Verify`'s subset argument:
+    * set-but-EMPTY (or whitespace) must mean "no subset" — a shell
+    * passing ONLY="" through is a full run. The r12 bug:
     * "".split(",") is Seq(""), which every name startsWith-matches, so
     * selection was right but the subset test said subset and the full
     * board silently skipped its committed sidecar. */

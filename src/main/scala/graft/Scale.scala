@@ -2,11 +2,12 @@ package graft
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Data-sized parallelism dials — the generalization of
   * `Dedup.ccPartitions` (partitions from data volume, floored at the
-  * session's cluster-size dial, capped) to every heavy pipeline.
+  * session's cluster-size dial, capped at [[DefaultMaxPartitions]]) to
+  * every heavy pipeline.
   *
   * The round-9 sf10 rehearsal showed why a FIXED
   * `spark.sql.shuffle.partitions` fails at scale: with 32 reducers over
@@ -20,13 +21,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     (`spark.sql.adaptive.coalescePartitions.initialPartitionNum`) from
   *     the input directory's file bytes. AQE then coalesces small
   *     shuffles back down at runtime from REAL sizes — so small-SF runs
-  *     keep today's plans bit-for-bit while sf10+ shuffles fan out.
-  *  2. [[shufflePartitionsFor]] sizes an EXPLICIT repartition barrier from
-  *     a frame's Catalyst scan statistics (parquet file bytes — no job
-  *     runs), for pipelines whose shuffled volume EXPANDS past the input
-  *     (gram explodes: ~1.3 hash-bytes per text byte, plus hash-agg
-  *     state) and whose barrier doubles as the shared exchange both the
-  *     aggregate and the join-back consumer reuse.
+  *     keep today's plans bit-for-bit while sf10+ shuffles fan out;
+  *     [[tuneSessionGrid]] then refines it from parquet row counts.
+  *  2. [[partitionsForRows]] / [[partitionsForChars]] size an EXPLICIT
+  *     repartition barrier from a row or char count, for object-heavy
+  *     aggregations and gram explodes whose in-memory volume the file
+  *     bytes under-state.
   *
   * Neither dial moves any value: partitioning never changes a registered
   * query's rows, so CORRECTNESS hashes are untouched by construction.
@@ -41,9 +41,8 @@ object Scale {
   /** Ceiling on any data-sized partition count — the cluster-size guard
     * against a mis-stated input size scheduling a million tasks. At the
     * cap, one stage is 4096 × 64 MB = 256 GB of post-shuffle state; a
-    * 100 TB corpus shuffling more than that per stage should raise the
-    * cap via `graft.scale.maxShufflePartitions`, not silently exceed it. */
-  val MaxPartitionsKey = "graft.scale.maxShufflePartitions"
+    * 100 TB corpus shuffling more than that per stage needs a larger
+    * constant here, not a silent overrun. */
   val DefaultMaxPartitions = 4096
 
   /** Worst-case bytes a heavy pipeline shuffles per input byte — gram
@@ -52,10 +51,6 @@ object Scale {
     * the session grid, which must be sized for the LARGEST shuffle (AQE
     * only coalesces DOWN from the initial grid, never splits UP). */
   val MaxExpansion = 8L
-
-  private def cap(spark: SparkSession): Int =
-    spark.conf.getOption(MaxPartitionsKey).map(_.toInt)
-      .getOrElse(DefaultMaxPartitions)
 
   private def clamp(scaled: Long, floor: Int, cap: Int): Int =
     math.max(floor.toLong, math.min(cap.toLong, scaled)).toInt
@@ -96,12 +91,12 @@ object Scale {
 
   /** Deadband on the PRE-clamp scaled value, then clamp. Applying the
     * deadband after the clamp is subtly wrong on large-cluster configs:
-    * whenever the cap sits below 4×floor (a low `maxShufflePartitions`,
-    * or a session floor above cap/4) the clamped grid can never reach
-    * 4×floor, so the post-clamp deadband would pin it to the floor at
-    * EVERY data size — permanently disabling the data-sized grid exactly
-    * where it is mandatory. The activation decision belongs to the raw
-    * data-sized value; the clamp then bounds whatever survives. */
+    * whenever the cap sits below 4×floor (a low cap, or a session floor
+    * above cap/4) the clamped grid can never reach 4×floor, so the
+    * post-clamp deadband would pin it to the floor at EVERY data size —
+    * permanently disabling the data-sized grid exactly where it is
+    * mandatory. The activation decision belongs to the raw data-sized
+    * value; the clamp then bounds whatever survives. */
   private[graft] def deadbandThenClamp(scaled: Long, floor: Int, cap: Int): Int =
     clamp(if (scaled < GridDeadband * floor) floor.toLong else scaled, floor, cap)
 
@@ -177,7 +172,7 @@ object Scale {
     * multi-minute ETL stages). `rowsPerTask` ≈ 64 MB / boxed-row-bytes. */
   def partitionsForRows(spark: SparkSession, rows: Long, rowsPerTask: Long): Int =
     clamp((rows + rowsPerTask - 1) / rowsPerTask,
-      spark.sessionState.conf.numShufflePartitions, cap(spark))
+      spark.sessionState.conf.numShufflePartitions, DefaultMaxPartitions)
 
   /** Chars a single gram-barrier task should own: per-char shingling emits
     * ~1 gram row per char, and a gram row costs ~48 B of hash-agg state
@@ -296,7 +291,7 @@ object Scale {
         spark.conf.set(stockKey(k), spark.conf.get(k))
     }
     val regime = resolveRegime(rows, dirBytes(sfDir),
-      spark.sessionState.conf.numShufflePartitions, cap(spark))
+      spark.sessionState.conf.numShufflePartitions, DefaultMaxPartitions)
     spark.conf.set(
       "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
       regime.grid.toString)
@@ -311,21 +306,5 @@ object Scale {
         KnobKeys.foreach(k => spark.conf.set(k, spark.conf.get(stockKey(k))))
     }
     regime.grid
-  }
-
-  /** Explicit-repartition size for a heavy stage fed by `df`: scan bytes
-    * (Catalyst plan statistics — parquet footer sizes, no job) times the
-    * stage's expansion factor, in 64 MB units, floored at the session's
-    * shuffle.partitions, capped. Expansion ≈ shuffled bytes per scanned
-    * byte INCLUDING aggregation-state overhead (gram pipelines use 4:
-    * ~1.3 hash bytes per text byte × ~3× hash-map overhead). */
-  def shufflePartitionsFor(df: DataFrame, expansion: Double = 4.0): Int = {
-    val spark = df.sparkSession
-    val floor = spark.sessionState.conf.numShufflePartitions
-    val bytes = BigDecimal(df.queryExecution.optimizedPlan.stats.sizeInBytes)
-    val scaled = (bytes * expansion / BytesPerPartition)
-      .setScale(0, BigDecimal.RoundingMode.CEILING)
-    clamp(if (scaled.isValidLong) scaled.toLong else Long.MaxValue,
-      floor, cap(spark))
   }
 }

@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one place an entry point gets its SparkSession. Two profiles exist
-  * because two kinds of caller do:
+/** The one place an entry point or a test suite gets its SparkSession.
+  * Two profiles exist because two kinds of caller do:
   *  - [[Batch]] — the board and oracle engine (`Bench`, `Verify`, the
-  *    profilers): `local[cpus]`, `cpus` shuffle partitions, the data-sized
-  *    AQE starting grid ([[Scale.initialShufflePartitions]]) and, once the
-  *    session exists, [[Scale.tuneSessionGrid]];
+  *    profilers, the test suites at `local[4]`): `local[cpus]`, `cpus`
+  *    shuffle partitions, the data-sized AQE starting grid
+  *    ([[Scale.initialShufflePartitions]]) and, once the session exists,
+  *    [[Scale.tuneSessionGrid]];
   *  - [[Serving]] — resident request serving (`HttpServe`, `GtfsDemo`):
   *    a request shuffles tiny cached frames, so 4 reducers keep per-request
   *    task dispatch ~free where `cpus` would spend more time scheduling
@@ -58,8 +59,10 @@ object Session {
     }
   }
 
-  /** Batch session over `sfDir`, grid refined from its parquet row counts. */
-  def batch(sfDir: String): SparkSession = {
+  /** Batch session over `sfDir` at `local[cpus]`, grid refined from its
+    * parquet row counts. The entry points take the box's [[cpus]]; the
+    * test suites pin 4 so their plans do not depend on the box. */
+  def batch(sfDir: String, cpus: Int = Session.cpus): SparkSession = {
     val spark = build(confFor(Batch, sfDir, cpus))
     Scale.tuneSessionGrid(spark, sfDir)
     spark

@@ -12,9 +12,6 @@ import graft.transit._
   */
 object SparkEntry {
 
-  private def transit(sfDir: String)(implicit spark: SparkSession): TransitTables =
-    TransitTables.fromTpch(spark, sfDir)
-
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Queries.q1BusiestStops(

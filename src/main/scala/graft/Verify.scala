@@ -5,11 +5,12 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated name prefixes (local iteration only)
-    val prefixes = if (args.length > 2) args(2).split(",").toSeq else Seq("")
+    // optional 3rd arg: comma-separated name prefixes (local iteration
+    // only), parsed as Bench's SPARK_GRAFT_ONLY; None selects every face
+    val prefixes = Bench.parseOnly(args.lift(2))
     val spark = Session.batch(sfDir)
     new java.io.File(outDir).mkdirs()
-    def selected(name: String) = prefixes.exists(name.startsWith)
+    def selected(name: String) = prefixes.forall(_.exists(name.startsWith))
     SparkEntry.queries
       .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>

@@ -107,10 +107,6 @@ object Similarity {
     pick(ivfDots(v), nprobe)
   }
 
-  /** Backward-compatible top-2 face (= [[ivfTopN]] at nprobe=2). */
-  def ivfTop2(v: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    ivfTopN(v, 2)
-
   /** IVF ANN: candidates restricted to the query's coarse cell (nprobe=1;
     * production probes the top-n cells by centroid dot). Same shape as
     * [[annLsh]] — IVF partitions by data-dependent direction, LSH by

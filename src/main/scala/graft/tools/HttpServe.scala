@@ -207,15 +207,19 @@ object HttpServe {
       try server.stop(delaySeconds) finally workers.shutdown()
   }
 
+  /** The cache decision for a store of `entries` schedule entries: a
+    * forced mode wins, else the maps are built only when the store fits
+    * under [[ServingCache.MaxCacheEntries]]. */
+  private[tools] def useCache(mode: Option[Boolean], entries: Long): Boolean =
+    mode.getOrElse(entries <= ServingCache.MaxCacheEntries)
+
   /** The measured cache decision + build for one store: probe the entry
-    * count, compare against [[ServingCache.maxCacheEntries]] (unless the
-    * caller forced a mode), build the maps only when they fit. */
+    * count, decide ([[useCache]]), build the maps only when they fit. */
   private def resolveState(svc: QueryService, docs: DataFrame,
       mode: Option[Boolean]): ServingState = {
     val entries = ServingCache.storeEntries(docs)
-    val useCache = mode.getOrElse(entries <= ServingCache.maxCacheEntries)
     ServingState(docs,
-      if (useCache) Some(ServingCache.build(svc, docs)) else None, entries,
+      if (useCache(mode, entries)) Some(ServingCache.build(svc, docs)) else None, entries,
       numericKey = docs.schema("stop_id").dataType
         .isInstanceOf[org.apache.spark.sql.types.NumericType])
   }
@@ -225,7 +229,7 @@ object HttpServe {
     * `withCache = None` (the default) makes a MEASURED decision: probe
     * the store's schedule-entry count (one sum-of-array-sizes aggregate
     * over the resident store) and precompute the [[ServingCache]] maps
-    * only when it fits under [[ServingCache.maxCacheEntries]] — the r12
+    * only when it fits under [[ServingCache.MaxCacheEntries]] — the r12
     * listener collected unconditionally, which at 100× the certified sf1
     * store would collect an oversized store onto the driver by default.
     * Cached mode serves every request from driver memory (no Spark job on
@@ -386,7 +390,7 @@ object HttpServe {
     // was compared against
     server.createContext("/servez", handler { _ =>
       val st = state.get
-      (200, s"""{"cache":${st.cache.isDefined},"store_entries":${st.entries},"max_cache_entries":${ServingCache.maxCacheEntries}}""")
+      (200, s"""{"cache":${st.cache.isDefined},"store_entries":${st.entries},"max_cache_entries":${ServingCache.MaxCacheEntries}}""")
     })
 
     server.start()

@@ -112,18 +112,11 @@ object ServingCache {
     * and 40 B at sf0.1, falling with scale towards the ~18 B of rendered
     * text (each time twice, 8 chars + comma) as fixed per-stop and
     * per-group costs amortize. The sf1 store (~6.0 M entries) thus
-    * extrapolates to at most ~230 MB (not measured), and the default
+    * extrapolates to at most ~230 MB (not measured), and the
     * ceiling of 64 M entries caps the cache at ~1.2–2.4 GiB resident —
     * an order of magnitude of headroom over sf1 while still refusing the
-    * 100× store a default-config caller would otherwise collect. Override via
-    * `-Dgraft.serve.maxCacheEntries=` (a system property, not an env var,
-    * so tests can flip it in-process). */
-  val MaxCacheEntriesKey = "graft.serve.maxCacheEntries"
-  val DefaultMaxCacheEntries: Long = 64L * 1000 * 1000
-
-  def maxCacheEntries: Long =
-    sys.props.get(MaxCacheEntriesKey).map(_.toLong)
-      .getOrElse(DefaultMaxCacheEntries)
+    * 100× store a default-config caller would otherwise collect. */
+  val MaxCacheEntries: Long = 64L * 1000 * 1000
 
   /** The gating probe: total schedule entries across the store — one
     * sum-of-array-sizes aggregate over the (resident) document frame, no
@@ -139,9 +132,8 @@ object ServingCache {
     ServiceFilter.Weekday, ServiceFilter.Saturday, ServiceFilter.Sunday,
     ServiceFilter.WholeWeek)
 
-  /** The snapshot partition tag ('1'/'2'/'3' per-service, '4' whole week —
-    * the reference's sentinel, `SQL/csv_backend.py:44`). */
-  def tagOf(s: ServiceFilter): String = s.sid.getOrElse("4")
+  /** The snapshot partition tag of a service ([[QueryService.tagOf]]). */
+  def tagOf(s: ServiceFilter): String = QueryService.tagOf(s)
 
   /** The `/api/q1..q4` maps: one collect per query over its tagged
     * superset ([[QueryService.taggedJson]]), split by service tag on the

@@ -74,9 +74,11 @@ object Queries {
     * many full passes are unavoidable"): per (service_id, stop_id,
     * route_id), the trip-event count. Every per-service AND whole-week
     * Q1/Q3 aggregate is an exact integer re-aggregation of this frame —
-    * Σc over routes = Q1's event count, group count = Q1's exact
-    * countDistinct(route) (the keys are already distinct), the key set is
-    * Q3's UniqueStopRoutes — so the snapshot build scans the fact table
+    * Σc over routes = Q1's event count, the count of non-NULL route keys
+    * = Q1's exact countDistinct(route) (the keys are already distinct; a
+    * NULL route, read from a blank `trips.txt` field, forms a group of
+    * its own that countDistinct skips), the key set is Q3's
+    * UniqueStopRoutes — so the snapshot build scans the fact table
     * once instead of once per tag. Integer-exact: no double ever enters,
     * the derived values are IDENTICAL to the per-tag plans', not merely
     * close. */
@@ -124,18 +126,8 @@ object Queries {
   def q2RouteStats(t: TransitTables, service: ServiceFilter, limit: Limit = Limit.default): DataFrame = {
     val speed = col("trip_distance") / nullif(col("trip_duration_seconds").cast("double"), lit(0.0)) * 3600.0
     val stats = service match {
-      case ServiceFilter.WholeWeek =>
-        val perService = tripStats(t, ServiceFilter.WholeWeek)
-          .groupBy(col("route_id"), col("service_id"))
-          .agg(
-            count(lit(1)).as("num_trips"),
-            sum(col("trip_duration_seconds")).as("dur_sum"),
-            sum(col("dist_cents")).as("cents_sum"),
-            count(col("dist_cents")).as("cents_cnt"),
-            (sum(col("dist_cents")).cast("double") / count(col("dist_cents")) / 100.0).as("avg_trip_distance_km"),
-            (sum(col("trip_duration_seconds")).cast("double") / count(lit(1)) / 60.0).as("avg_duration_min"),
-            avg(speed).as("avg_speed_kmh"))
-        q2WeekWeighted(perService)
+      // Catalyst prunes the base's unused stddev column
+      case ServiceFilter.WholeWeek => q2WeekWeighted(q2PerServiceStats(t))
       case _ =>
         tripStats(t, service)
           .groupBy(col("route_id"))
@@ -153,10 +145,10 @@ object Queries {
   }
 
   /** Q2's per-(route, service) stats base — the full aggregate over
-    * [[tripStats]] (shared by [[q2ServiceDetail]] and the snapshot
-    * build, which re-derives every per-service AND whole-week tag from
-    * this one fact pass; the stddev column simply goes unused by the
-    * whole-week weighting, exactly as in [[q2ServiceDetail]]). Carries
+    * [[tripStats]] (shared by [[q2RouteStats]]'s whole-week path,
+    * [[q2ServiceDetail]] and the snapshot build, which re-derives every
+    * per-service AND whole-week tag from this one fact pass; the stddev
+    * column simply goes unused by the whole-week weighting). Carries
     * the exact long `dur_sum` alongside the presentation columns so every
     * downstream weighted duration derives from integer sums (see
     * [[q2WeekWeighted]]). */

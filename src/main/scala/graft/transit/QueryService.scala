@@ -10,9 +10,9 @@ import graft.sources.Writers
   *  - **R3, materialized view reuse**: the reference auto-creates
   *    `vw_hourly_frequency` once and serves every Q4 variant from it
   *    (`SQL/sql_utils.py:46-70`, `SQL/Q4 Create View.sql:3-14`). Here
-  *    [[hourlyFrequencyView]] is the cached hourly aggregate; both Q4
-  *    faces and BOTH sub-aggregations of the nested face read the cache
-  *    (`InMemoryTableScan`) instead of re-scanning the fact table.
+  *    [[hourlyFrequencyView]] is the cached hourly aggregate; the live Q4
+  *    fallback of [[q4]] reads the cache (`InMemoryTableScan`) instead of
+  *    re-scanning the fact table.
   *  - **R4, result-snapshot fast path**: the reference pre-computes one
   *    CSV per query holding the UNLIMITED per-service rows ('1','2','3')
   *    plus the whole-week '4' rows, and the API serves by slicing that
@@ -43,8 +43,9 @@ final class QueryService(val t: TransitTables, snapshotDir: Option[String] = Non
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   /** R3: the cached `vw_hourly_frequency` analog. Spark caching is lazy —
-    * the first Q4 call materializes it; every later call (and the second
-    * sub-aggregation inside the same nested plan) hits the cache. */
+    * the first live Q4 call materializes it; every later one hits the
+    * cache. Any view reader can take it too: [[Queries.q4NestedFrom]]
+    * over it reads the cache from both of its sub-aggregations. */
   lazy val hourlyFrequencyView: DataFrame = Queries.hourlyFrequency(t).cache()
 
   private def snapshot(name: String): Option[DataFrame] =
@@ -66,7 +67,7 @@ final class QueryService(val t: TransitTables, snapshotDir: Option[String] = Non
   private def slice(name: String, df: DataFrame, service: ServiceFilter,
       limit: Limit): DataFrame = {
     val p = presentations(name)
-    df.filter(col(TAG).cast("string") === serviceTag(service))
+    df.filter(col(TAG).cast("string") === tagOf(service))
       .select(p.cols.map(col): _*)
       .orderBy(p.sort: _*)
       .transform(limit.apply)
@@ -111,11 +112,6 @@ final class QueryService(val t: TransitTables, snapshotDir: Option[String] = Non
       .groupBy(_.getString(0))
       .map { case (k, rows) => k -> rows.map(_.getString(1)) }
   }
-
-  /** The nested Q4 response face always serves live off the cached view
-    * (the reference has no CSV for it either — `SQL/app.py:118-125`). */
-  def q4Nested(limit: Limit = Limit.default): DataFrame =
-    Queries.q4NestedFrom(hourlyFrequencyView, t.routes, limit)
 }
 
 object QueryService {
@@ -149,7 +145,9 @@ object QueryService {
   val Q3 = "q3_transfer_points"
   val Q4 = "q4_service_frequency"
 
-  private def serviceTag(s: ServiceFilter): String = s.sid.getOrElse("4")
+  /** A service's snapshot partition tag: its service id, or '4' for the
+    * whole week (the reference's sentinel, `SQL/csv_backend.py:44`). */
+  def tagOf(s: ServiceFilter): String = s.sid.getOrElse("4")
 
   /** One query's response shape: its columns in order and its canonical
     * sort, total within a service tag (the key column breaks every tie). */
@@ -215,7 +213,8 @@ object QueryService {
       .agg(sum(col("c")).as("c2"))
       .groupBy(col(TAG), col("stop_id"))
       .agg(sum(col("c2")).as("total_trip_events"),
-        count(lit(1)).as("num_unique_routes"))
+        // count of non-NULL route keys = live Q1's countDistinct(route_id)
+        count(col("route_id")).as("num_unique_routes"))
     Queries.q1FromCounts(counts, t.stops, Seq(TAG))
   }
 
@@ -296,7 +295,4 @@ object QueryService {
     * this so its measured cost is one snapshot's ETL, not all four. */
   def buildSnapshot(t: TransitTables, dir: String, name: String): Unit =
     Writers.snapshotParquet(snapshotFrame(t, name), s"$dir/$name", Seq(TAG))
-
-  def buildQ1Snapshot(t: TransitTables, dir: String): Unit =
-    buildSnapshot(t, dir, Q1)
 }

@@ -8,9 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Session]] is the engine's one session factory: its two profiles are
   * pinned to the confs `Bench.main` and `HttpServe.main` built by hand
-  * before it existed, and a source guard keeps every other file from
-  * building a session or reading the two env vars it owns, and pins the
-  * engine's whole env surface to those two plus `SPARK_GRAFT_ONLY`. */
+  * before it existed, and a source guard keeps every other file — test
+  * sources included, bar one — from building a session or reading the
+  * two env vars it owns, keeps system-property reads out of the engine,
+  * and pins the engine's whole env surface to those two plus
+  * `SPARK_GRAFT_ONLY`. */
 class SessionSpec extends AnyFunSuite {
 
   /** A dir whose only file is `bytes` long but sparse, so the data-sized
@@ -76,34 +78,48 @@ class SessionSpec extends AnyFunSuite {
   }
 
   test("source guard: only graft/Session.scala builds a session or reads CPUS/SF_DIR") {
-    val root = Paths.get("src/main/scala")
-    val files = {
+    def sources(root: Path, floor: Int): List[Path] = {
       val s = Files.walk(root)
-      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally s.close()
+      val files = try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+        finally s.close()
+      // non-vacuity: a moved source root must fail here, not pass on nothing
+      assert(files.size >= floor, s"only ${files.size} sources under $root")
+      files
     }
-    // non-vacuity: a moved source root must fail here, not pass on nothing
-    assert(files.size >= 40, s"only ${files.size} sources under $root")
-    val owner = root.resolve("graft/Session.scala")
-    assert(files.contains(owner))
-    val forbidden = Seq(
-      """SparkSession\s*\.\s*builder""".r,
-      """"SPARK_GRAFT_CPUS"""".r,
-      """"SPARK_GRAFT_SF_DIR"""".r)
-    // the whole env surface: every env read, in any file, names one of these
-    val envRead = """sys\.env|System\.getenv""".r
-    val envVars = Seq("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_ONLY")
-    val lines = for {
-      f: Path <- files
+    val mainRoot = Paths.get("src/main/scala")
+    val testRoot = Paths.get("src/test/scala")
+    val main = sources(mainRoot, 40)
+    val tests = sources(testRoot, 40)
+    val owner = mainRoot.resolve("graft/Session.scala")
+    // the one test that must build its own session: extensions apply only
+    // to a fresh context built `withExtensions`
+    val extensions = testRoot.resolve("graft/functions/ExtensionsSpec.scala")
+    assert(main.contains(owner) && tests.contains(extensions))
+    def lines(files: List[Path]) = for {
+      f <- files
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
     } yield (f, s"$f:${i + 1}: ${line.trim}", line)
-    val offenders = lines.collect {
-      case (f, at, line) if f != owner && forbidden.exists(_.findFirstIn(line).isDefined) => at
+    val mainLines = lines(main)
+    def offending(ls: List[(Path, String, String)], rules: Seq[scala.util.matching.Regex],
+        exempt: Set[Path]) = ls.collect {
+      case (f, at, line) if !exempt(f) && rules.exists(_.findFirstIn(line).isDefined) => at
     }
+    val builder = """SparkSession\s*\.\s*builder""".r
+    val offenders =
+      offending(mainLines, Seq(builder, """"SPARK_GRAFT_CPUS"""".r,
+        """"SPARK_GRAFT_SF_DIR"""".r), Set(owner)) ++
+        offending(lines(tests), Seq(builder), Set(extensions))
     assert(offenders.isEmpty,
       "session built or CPUS/SF_DIR read outside graft.Session:\n" +
         offenders.mkString("\n"))
-    val envSites = lines.filter { case (_, _, line) => envRead.findFirstIn(line).isDefined }
+    // no engine setting comes from a JVM system property: a ceiling or a
+    // dial is a constant until a caller needs another value
+    val props = offending(mainLines, Seq("""sys\.props\.get|System\.getProperty""".r), Set.empty)
+    assert(props.isEmpty, "system property read under src/main:\n" + props.mkString("\n"))
+    // the whole env surface: every env read, in any file, names one of these
+    val envRead = """sys\.env|System\.getenv""".r
+    val envVars = Seq("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_ONLY")
+    val envSites = mainLines.filter { case (_, _, line) => envRead.findFirstIn(line).isDefined }
     // non-vacuity: Session's two reads and Bench's ONLY read are found
     assert(envSites.size >= 3, envSites.map(_._2).mkString("\n"))
     val unpinned = envSites.collect {

@@ -3,20 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM-wide session; suites grab it
-  * lazily so sbt's single forked test JVM reuses it). */
+/** Shared local session for all suites: the engine's own batch session
+  * ([[Session.batch]]) over the sf0.01 tables at a fixed `local[4]`, so
+  * every plan a suite audits is one the entry points run, on any box. One
+  * JVM-wide session; suites grab it lazily so sbt's single forked test JVM
+  * reuses it. */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.batch("/root/testdata/sf0.01", cpus = 4)
 }
 
 trait SparkSpec extends AnyFunSuite {

@@ -132,29 +132,31 @@ class HttpServeParitySpec extends SparkSpec {
       assert(code == 200 && body.startsWith("""{"cache":true,"store_entries":"""))
       val entries = ServingCache.storeEntries(docs)
       assert(body.contains(s""""store_entries":$entries"""))
+      assert(body.contains(""""max_cache_entries":64000000"""))
     } finally auto.stop()
   }
 
   test("auto gate: over the ceiling the fallback engages and stays byte-identical") {
     // the r12 gap: withCache=true was a caller FLAG — a default-config
     // caller at 100x the certified sf1 store would collect an oversized
-    // store onto the driver. The gate is now a measured decision; this
-    // face lowers the ceiling under the fixture's entry count and proves
-    // (a) the live path engages, (b) the wire bytes don't move.
-    System.setProperty(ServingCache.MaxCacheEntriesKey, "1")
-    try {
-      val svc = new QueryService(t)
-      val auto = HttpServe.start(svc, docs, 0)
-      try {
-        assert(!auto.cached, "an over-ceiling store must fall back to the live path")
-        val (code, body) = get(auto, "/servez")
-        assert(code == 200 && body.startsWith("""{"cache":false,"""))
-        assert(body.contains(""""max_cache_entries":1"""))
-        allRoutes.foreach { p =>
-          assert(get(auto, p) == get(cached, p), s"fallback divergence on $p")
-        }
-      } finally auto.stop()
-    } finally System.clearProperty(ServingCache.MaxCacheEntriesKey)
+    // store onto the driver. The gate is now a measured decision against
+    // a 64 M-entry constant no fixture reaches, so this face proves (a)
+    // the decision picks the live path one entry over the ceiling (a
+    // forced mode still wins), (b) the live path reports itself and the
+    // ceiling on /servez, (c) the wire bytes don't move.
+    val ceiling = ServingCache.MaxCacheEntries
+    assert(HttpServe.useCache(None, ceiling))
+    assert(!HttpServe.useCache(None, ceiling + 1),
+      "an over-ceiling store must fall back to the live path")
+    assert(HttpServe.useCache(Some(true), ceiling + 1))
+    assert(!HttpServe.useCache(Some(false), 0L))
+    assert(!live.cached)
+    val (code, body) = get(live, "/servez")
+    assert(code == 200 && body.startsWith("""{"cache":false,"""))
+    assert(body.contains(""""max_cache_entries":64000000"""))
+    allRoutes.foreach { p =>
+      assert(get(live, p) == get(cached, p), s"fallback divergence on $p")
+    }
   }
 
   test("staleness: refresh() after a store mutation serves the new store byte-identically") {

@@ -16,7 +16,8 @@ class QueryServiceSpec extends AnyFunSuite with SparkSpec {
 
   test("R3: both q4Nested sub-aggregations read the cached hourly view") {
     val svc = new QueryService(t)
-    val plan = svc.q4Nested().queryExecution.executedPlan.toString
+    val plan = Queries.q4NestedFrom(svc.hourlyFrequencyView, t.routes)
+      .queryExecution.executedPlan.toString
     val scans = "InMemoryTableScan".r.findAllIn(plan).size
     assert(scans >= 2, s"expected both sub-aggregations on the cache, got $scans:\n${plan.take(1200)}")
   }
@@ -54,7 +55,7 @@ class QueryServiceSpec extends AnyFunSuite with SparkSpec {
 
   test("R4: the snapshot read prunes to one service partition") {
     val dir = java.nio.file.Files.createTempDirectory("graft_svc_spec3").toString
-    QueryService.buildQ1Snapshot(t, dir)
+    QueryService.buildSnapshot(t, dir, QueryService.Q1)
     val plan = new QueryService(t, Some(dir)).q1(ServiceFilter.Weekday)
       .queryExecution.executedPlan.toString
     val scanLine = plan.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
@@ -75,6 +76,29 @@ class QueryServiceSpec extends AnyFunSuite with SparkSpec {
     val nulled = QueryService.q2Display(
       Queries.q2RouteStats(t, ServiceFilter.WholeWeek))
     assert(nulled.select("duration_stddev_min").collect().forall(_.isNullAt(0)))
+  }
+
+  test("R4: snapshot-served q1 skips a blank route_id, as the live plan does") {
+    // a feed whose trips.txt leaves one trip's route_id blank: the CSV
+    // source reads it as NULL, which live Q1's countDistinct skips
+    val feed = java.nio.file.Paths.get(GtfsFixture.feedDir())
+    def append(name: String, lines: String): Unit =
+      java.nio.file.Files.writeString(feed.resolve(name), lines,
+        java.nio.file.StandardOpenOption.APPEND)
+    append("trips.txt", "T9,,1,Downtown,0,,,\n")
+    append("stop_times.txt",
+      "T9,15:00:00,15:00:00,HUB,1,,,,0.0\nT9,15:10:00,15:10:00,A,2,,,,1.0\n")
+    val blank = graft.sources.GtfsReader.readFeed(spark, feed.toString)
+    assert(blank.trips.filter(org.apache.spark.sql.functions.col("route_id").isNull)
+      .count() == 1, "the blank route_id must read as NULL for this case to bite")
+    val dir = java.nio.file.Files.createTempDirectory("graft_svc_spec_blank").toString
+    QueryService.buildSnapshot(blank, dir, QueryService.Q1)
+    val svc = new QueryService(blank, Some(dir))
+    for (s <- Seq[ServiceFilter](ServiceFilter.Weekday, ServiceFilter.WholeWeek)) {
+      assert(collectSorted(svc.q1(s)) === collectSorted(Queries.q1BusiestStops(blank, s)), s)
+      assert(svc.taggedJson(QueryService.Q1)(QueryService.tagOf(s)).sorted ===
+        Queries.q1BusiestStops(blank, s).toJSON.collect().toSeq.sorted, s)
+    }
   }
 
   test("R4: without a snapshot, dispatch falls back to the live plan") {
