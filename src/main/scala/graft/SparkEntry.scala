@@ -95,28 +95,14 @@ object SparkEntry {
     "transit_gtfs_q4" -> ((s, dir) =>
       Queries.q4ServiceFrequency(
         graft.sources.GtfsWriter.roundtrip(s, dir), ServiceFilter.Weekday)),
-    // the reference's other API half: the literal SQL text executed by
-    // spark.sql over the registered GTFS temp views — same Catalyst plan
-    // family as the DataFrame faces, so the same oracle binds. Each dir
-    // gets its own child session (SqlFace.sessionFor): temp views are
-    // session-global, so this is the one-dir-per-session contract
-    // enforced by construction rather than by caller discipline
-    "transit_q1_sqltext" -> ((s, dir) => {
-      val s2 = SqlFace.sessionFor(s, dir)
-      SqlFace.q1Weekday(s2, TransitTables.fromTpch(s2, dir))
-    }),
-    "transit_q2_sqltext" -> ((s, dir) => {
-      val s2 = SqlFace.sessionFor(s, dir)
-      SqlFace.q2Weekday(s2, TransitTables.fromTpch(s2, dir))
-    }),
-    "transit_q3_sqltext" -> ((s, dir) => {
-      val s2 = SqlFace.sessionFor(s, dir)
-      SqlFace.q3Weekday(s2, TransitTables.fromTpch(s2, dir))
-    }),
-    "transit_q4_sqltext" -> ((s, dir) => {
-      val s2 = SqlFace.sessionFor(s, dir)
-      SqlFace.q4Weekday(s2, TransitTables.fromTpch(s2, dir))
-    }),
+    // the reference's other API half: the literal SQL text, its table
+    // names bound to this bundle's frames inside the parsed query — same
+    // Catalyst plan family as the DataFrame faces, so the same oracle
+    // binds, and it runs in the caller's session like every other face
+    "transit_q1_sqltext" -> ((s, dir) => SqlFace.q1Weekday(TransitTables.fromTpch(s, dir))),
+    "transit_q2_sqltext" -> ((s, dir) => SqlFace.q2Weekday(TransitTables.fromTpch(s, dir))),
+    "transit_q3_sqltext" -> ((s, dir) => SqlFace.q3Weekday(TransitTables.fromTpch(s, dir))),
+    "transit_q4_sqltext" -> ((s, dir) => SqlFace.q4Weekday(TransitTables.fromTpch(s, dir))),
     "transit_headways" -> ((s, dir) =>
       Queries.headways(TransitTables.fromTpch(s, dir))),
     // bus-bunching / service-regularity KPI over the headway gap frame

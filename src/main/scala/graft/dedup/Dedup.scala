@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextHash
-import graft.sources.Tables
+import graft.sources.{Tables, Writers}
 
 /** Deduplication operators over `documents` / `embeddings` — the dedup pass
   * of a large-scale training-data pipeline.
@@ -812,13 +812,10 @@ object Dedup {
   def standingProbeBase(spark: SparkSession, dir: String): DataFrame = {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val b = bandsRaw(spark, dir).withColumn("is_new", col("doc_id") % 5 === 0)
-    b.filter(!col("is_new")).select(col("doc_id"), col("band"), col("band_hash"))
-      .repartition(BucketCount, col("band"), col("band_hash"))
-      .write.mode("overwrite")
-      .bucketBy(BucketCount, "band", "band_hash").sortBy("band", "band_hash")
-      .option("path", s"${sys.props("java.io.tmpdir")}/graft_bands_$tag")
-      .saveAsTable(s"bands_bkt_$tag")
-    val idx = spark.table(s"bands_bkt_$tag")
+    val idx = Writers.bucketedTable(
+      b.filter(!col("is_new")).select(col("doc_id"), col("band"), col("band_hash")),
+      s"bands_bkt_$tag", Seq("band", "band_hash"), BucketCount,
+      s"${sys.props("java.io.tmpdir")}/graft_bands_$tag")
     b.filter(col("is_new"))
       .select(col("doc_id").as("new_id"), col("band"), col("band_hash"))
       .hint("merge")

@@ -3,7 +3,8 @@ package graft.relational
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.sources.Tables
+import graft.sources.{Tables, Writers}
+import graft.transit.SqlFace
 
 /** SURVEY §2 operator inventory exercised directly over the TPC-H-ish test
   * tables — one named query per operator family, each with a DuckDB oracle
@@ -482,10 +483,9 @@ object RelationalQueries {
 
   /** Correlated EXISTS / NOT EXISTS via the SQL face (Catalyst rewrites
     * both to semi/anti joins — same physical shape as [[antiJoin]]). */
-  def existsSubquery(spark: SparkSession, dir: String): DataFrame = {
-    Tables.customer(spark, dir).createOrReplaceTempView("v_customer")
-    Tables.orders(spark, dir).createOrReplaceTempView("v_orders")
-    spark.sql(
+  def existsSubquery(spark: SparkSession, dir: String): DataFrame =
+    SqlFace.sql(Map("v_customer" -> Tables.customer(spark, dir),
+        "v_orders" -> Tables.orders(spark, dir)),
       """SELECT c_mktsegment, COUNT(*) AS n_customers
         |FROM v_customer c
         |WHERE EXISTS (SELECT 1 FROM v_orders o
@@ -496,7 +496,6 @@ object RelationalQueries {
         |                    AND o2.o_orderstatus = 'F')
         |GROUP BY c_mktsegment
         |ORDER BY c_mktsegment""".stripMargin)
-  }
 
   /** Map-typed column round trip: per-customer map(status → count) via
     * map_from_entries, exploded back to rows with the map's cardinality
@@ -837,17 +836,15 @@ object RelationalQueries {
     * SQL face. Catalyst rewrites the LATERAL into a join + per-key limit
     * (the same WindowGroupLimit family as [[topkPerGroup]]), so the
     * per-nation LIMIT never materializes a full per-nation sort at scale. */
-  def lateralTopPerKey(spark: SparkSession, dir: String): DataFrame = {
-    Tables.nation(spark, dir).createOrReplaceTempView("v_nation")
-    Tables.customer(spark, dir).createOrReplaceTempView("v_customer")
-    spark.sql(
+  def lateralTopPerKey(spark: SparkSession, dir: String): DataFrame =
+    SqlFace.sql(Map("v_nation" -> Tables.nation(spark, dir),
+        "v_customer" -> Tables.customer(spark, dir)),
       """SELECT n.n_name, t.c_custkey, t.c_acctbal
         |FROM v_nation n,
         |LATERAL (SELECT c_custkey, c_acctbal FROM v_customer c
         |         WHERE c.c_nationkey = n.n_nationkey
         |         ORDER BY c_acctbal DESC, c_custkey LIMIT 2) t
         |ORDER BY n.n_name, t.c_acctbal DESC, t.c_custkey""".stripMargin)
-  }
 
   /** Bivariate statistics per group: correlation, population covariance,
     * and the least-squares fit (slope/intercept) of extendedprice on
@@ -1380,33 +1377,18 @@ object RelationalQueries {
     * sides always align. */
   val BucketCount = 16
 
-  /** Lands `df` as a bucketed+sorted table on `key`. The aligned
-    * `repartition(BucketCount, key)` (same murmur3 hash as the bucket
-    * spec) leaves exactly one file per bucket, which is what lets the
-    * scan expose both hash-partitioning AND per-bucket sortedness to the
-    * planner. Returns the read-back table. */
-  private def landBucketed(spark: SparkSession, df: DataFrame, key: String,
-      table: String, path: String): DataFrame = {
-    df.repartition(BucketCount, col(key))
-      .write.mode("overwrite")
-      .bucketBy(BucketCount, key).sortBy(key)
-      .option("path", path)
-      .saveAsTable(table)
-    spark.table(table)
-  }
-
   /** The join itself, exchange-free (split out so PlanQualitySpec can
     * assert ZERO Exchange operators on the join subplan before the
     * presentation agg/sort add theirs). */
   def bucketedJoinBase(spark: SparkSession, dir: String): DataFrame = {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val base = s"${sys.props("java.io.tmpdir")}/graft_bucketed_$tag"
-    val o = landBucketed(spark,
+    val o = Writers.bucketedTable(
       Tables.orders(spark, dir).select(col("o_custkey"), col("o_totalprice")),
-      "o_custkey", s"orders_bkt_$tag", s"$base/orders")
-    val c = landBucketed(spark,
+      s"orders_bkt_$tag", Seq("o_custkey"), BucketCount, s"$base/orders")
+    val c = Writers.bucketedTable(
       Tables.customer(spark, dir).select(col("c_custkey"), col("c_mktsegment")),
-      "c_custkey", s"customer_bkt_$tag", s"$base/customer")
+      s"customer_bkt_$tag", Seq("c_custkey"), BucketCount, s"$base/customer")
     // merge hint: at test SF the customer side is broadcast-sized, which
     // would hide the point — production fact⋈fact is what's modeled here
     o.hint("merge").join(c, col("o_custkey") === col("c_custkey"))
@@ -1436,9 +1418,9 @@ object RelationalQueries {
   def bucketedAgg(spark: SparkSession, dir: String): DataFrame = {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val base = s"${sys.props("java.io.tmpdir")}/graft_bucketed_$tag"
-    val o = landBucketed(spark,
+    val o = Writers.bucketedTable(
       Tables.orders(spark, dir).select(col("o_custkey"), col("o_totalprice")),
-      "o_custkey", s"orders_bkt_$tag", s"$base/orders")
+      s"orders_bkt_$tag", Seq("o_custkey"), BucketCount, s"$base/orders")
     o.groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("n_orders"),
         round(sum(col("o_totalprice")), 2).as("spend"))

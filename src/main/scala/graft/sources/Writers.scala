@@ -15,9 +15,8 @@ import org.apache.spark.sql.types.StructType
   *    so the coalesce is bounded and deliberate).
   *  - [[snapshotParquet]] — the production result cache (R4): partitioned
   *    parquet, readable back as a serving table.
-  *  - [[timetableParquet]] — the nested timetable store (replaces the
-  *    Mongo collection); bucketing by stop_id would co-locate point
-  *    lookups, plain parquet keeps it portable here.
+  *  - [[bucketedTable]] — a bucketed+sorted table, shuffled once at
+  *    write time so later joins and aggregations on its key need none.
   */
 object Writers {
 
@@ -30,9 +29,6 @@ object Writers {
     val w = df.write.mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
   }
-
-  def timetableParquet(timetables: DataFrame, path: String): Unit =
-    timetables.write.mode("overwrite").parquet(path)
 
   /** Line-delimited JSON sink — the API-layer serialization surface (the
     * reference serves every endpoint as JSON). Nested structs/arrays (the
@@ -84,14 +80,24 @@ object Writers {
       .write.mode("overwrite").parquet(path)
   }
 
-  /** Bucketed managed table: pre-shuffles once at write time so every
-    * later equi-join/aggregation on `bucketCol` reads co-located buckets
-    * with NO exchange — the Spark analog of the reference's B-tree
-    * "index selection" (SURVEY §4 R5) and the cluster-scale answer for a
-    * fact table joined repeatedly on the same key. */
-  def bucketedTable(df: DataFrame, table: String, bucketCol: String,
-      nBuckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(nBuckets, bucketCol).sortBy(bucketCol)
-      .format("parquet").saveAsTable(table)
+  /** Bucketed table: pre-shuffles once at write time so every later
+    * equi-join/aggregation on `keys` reads co-located buckets with NO
+    * exchange — the Spark analog of the reference's B-tree "index
+    * selection" (SURVEY §4 R5) and the cluster-scale answer for a fact
+    * table joined repeatedly on the same key. The aligned
+    * `repartition(nBuckets, keys)` (same murmur3 hash as the bucket spec)
+    * leaves exactly one file per bucket, which is what lets the scan
+    * expose both hash-partitioning AND per-bucket sortedness to the
+    * planner. Lands at `path` (overwritten) and returns the read-back
+    * table. */
+  def bucketedTable(df: DataFrame, table: String, keys: Seq[String],
+      nBuckets: Int, path: String): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    df.repartition(nBuckets, keys.map(col): _*)
+      .write.mode("overwrite")
+      .bucketBy(nBuckets, keys.head, keys.tail: _*).sortBy(keys.head, keys.tail: _*)
+      .option("path", path)
+      .saveAsTable(table)
+    df.sparkSession.table(table)
+  }
 }

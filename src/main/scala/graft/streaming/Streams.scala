@@ -220,22 +220,29 @@ object Streams {
   /** Batch face of the stream-stream interval join: each click joined to
     * the views by the same user in the preceding 10 minutes (inclusive),
     * aggregated to (n_views, min gap). The streaming face is a
-    * watermarked stream-stream inner join with the same time-range
-    * predicate — asserted equivalent in the spec. At scale both sides
-    * shuffle on user_id and the watermark bounds the join state. */
-  def clickAttribution(events: DataFrame): DataFrame = {
+    * watermarked stream-stream join with the same time-range predicate
+    * and join type — asserted equivalent in the spec. At scale both sides
+    * shuffle on user_id and the watermark bounds the join state.
+    *
+    * `joinType` "left_outer" keeps every click: n_views = 0 and a NULL gap
+    * when no view preceded it in the window. The outer-ness only changes
+    * which clicks survive, not the shuffle shape. Each join type counts
+    * as its oracle does: COUNT(*) for inner, COUNT(view_id) for outer
+    * (they agree on matched rows whenever view_id is non-null). */
+  def clickAttribution(events: DataFrame, joinType: String = "inner"): DataFrame = {
     val base = events.select(col("user_id"), col("event_id"),
       col("event_type"), unix_micros(col("ts")).as("us"))
     val clicks = base.filter(col("event_type") === "click")
       .select(col("user_id"), col("event_id").as("click_id"), col("us").as("click_us"))
     val views = base.filter(col("event_type") === "view")
-      .select(col("user_id"), col("event_id").as("view_id"), col("us").as("view_us"))
+      .select(col("user_id").as("v_user"), col("event_id").as("view_id"), col("us").as("view_us"))
     clicks.join(views,
-        clicks("user_id") === views("user_id") &&
+        col("user_id") === col("v_user") &&
           col("view_us") <= col("click_us") &&
-          col("click_us") - col("view_us") <= AttribWindowUs)
+          col("click_us") - col("view_us") <= AttribWindowUs,
+        joinType)
       .groupBy(col("click_id"))
-      .agg(count(lit(1)).as("n_views"),
+      .agg(count(if (joinType == "inner") lit(1) else col("view_id")).as("n_views"),
         min(col("click_us") - col("view_us")).as("min_gap_us"))
       .orderBy(col("click_id"))
   }
@@ -261,7 +268,13 @@ object Streams {
     events.withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
 
-  def clickAttributionStreaming(events: DataFrame): DataFrame = {
+  /** With `joinType` "leftOuter", a click with no view in the window
+    * still emits (null view columns) — but only once the watermark passes
+    * the end of its join window, because until then a matching view could
+    * still arrive. The spec drives the watermark forward with a second
+    * micro-batch to prove the deferred emission. */
+  def clickAttributionStreaming(events: DataFrame,
+      joinType: String = "inner"): DataFrame = {
     val base = events.select(col("user_id"), col("event_id"),
       col("event_type"), col("ts"))
     val clicks = base.filter(col("event_type") === "click")
@@ -275,7 +288,8 @@ object Streams {
     clicks.join(views,
       col("c_user") === col("v_user") &&
         col("view_ts") <= col("click_ts") &&
-        col("view_ts") >= col("click_ts") - expr(s"INTERVAL ${AttribWindowUs / 1000000} SECONDS"))
+        col("view_ts") >= col("click_ts") - expr(s"INTERVAL ${AttribWindowUs / 1000000} SECONDS"),
+      joinType)
   }
 
   /** Stream-static enrichment — the classic "join the stream to a slowly-
@@ -317,29 +331,6 @@ object Streams {
         Seq("band", "band_hash"))
       .select(col("new_id"), col("old_id"))
 
-  /** LEFT OUTER variant of the stream-stream interval join: clicks with no
-    * view in the window still emit (null view columns) — but only once the
-    * watermark passes the end of their join window, because until then a
-    * matching view could still arrive. The spec drives the watermark
-    * forward with a second micro-batch to prove the deferred emission. */
-  def clickAttributionOuterStreaming(events: DataFrame): DataFrame = {
-    val base = events.select(col("user_id"), col("event_id"),
-      col("event_type"), col("ts"))
-    val clicks = base.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", "30 minutes")
-    val views = base.filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-        col("ts").as("view_ts"))
-      .withWatermark("view_ts", "30 minutes")
-    clicks.join(views,
-      col("c_user") === col("v_user") &&
-        col("view_ts") <= col("click_ts") &&
-        col("view_ts") >= col("click_ts") - expr(s"INTERVAL ${AttribWindowUs / 1000000} SECONDS"),
-      "leftOuter")
-  }
-
   /** foreachBatch sink — the production pattern for sinks Structured
     * Streaming lacks natively (upserts, JDBC, external stores): each
     * micro-batch arrives as a plain DataFrame with a monotonic batch id
@@ -372,34 +363,8 @@ object Streams {
     }
   }
 
-  /** Batch face of the LEFT OUTER interval join (the oracle-bound shadow
-    * of [[clickAttributionOuterStreaming]]): every click emits a row —
-    * n_views = 0 and a NULL gap when no view preceded it in the window.
-    * Same plan family as [[clickAttribution]]; the outer-ness only changes
-    * which clicks survive, not the shuffle shape (both sides keyed on
-    * user_id, watermark-bounded state in the streaming face). */
-  def clickAttributionOuter(events: DataFrame): DataFrame = {
-    val base = events.select(col("user_id"), col("event_id"),
-      col("event_type"), unix_micros(col("ts")).as("us"))
-    val clicks = base.filter(col("event_type") === "click")
-      .select(col("user_id"), col("event_id").as("click_id"),
-        col("us").as("click_us"))
-    val views = base.filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-        col("us").as("view_us"))
-    clicks.join(views,
-        col("user_id") === col("v_user") &&
-          col("view_us") <= col("click_us") &&
-          col("click_us") - col("view_us") <= AttribWindowUs,
-        "left_outer")
-      .groupBy(col("click_id"))
-      .agg(count(col("view_id")).as("n_views"),
-        min(col("click_us") - col("view_us")).as("min_gap_us"))
-      .orderBy(col("click_id"))
-  }
-
   def clickAttributionOuterBatch(spark: SparkSession, dir: String): DataFrame =
-    clickAttributionOuter(Tables.events(spark, dir))
+    clickAttribution(Tables.events(spark, dir), "left_outer")
 
   /** The foreachBatch parquet sink RUN end to end as a registered query:
     * stage the events table, stream it back through [[parquetSink]]

@@ -1,6 +1,10 @@
 package graft.transit
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.classic.GraftPlanShim
 
 /** The reference's raw-SQL entry point, reproduced as Spark SQL text.
   *
@@ -8,77 +12,62 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * text in `SQL/Q1_busiest_stop.sql` / `SQL/Q4 service frequency.sql`
   * against MySQL. Every other transit face in this engine re-expresses
   * those semantics through the DataFrame API; this face proves the other
-  * half of the API surface — the same GTFS views registered as temp views
-  * and the reference-shaped SQL strings executed verbatim by
-  * `spark.sql(...)`. Catalyst parses both faces into the same logical
-  * plan family, so all the physical wins (broadcast dim joins,
-  * partial+final aggregation, `TakeOrderedAndProject` top-k) apply to the
-  * SQL text unchanged — there is no separate "SQL engine" to keep fast.
+  * half of the API surface — the reference-shaped SQL strings, parsed by
+  * the session's SQL parser and planned by the same Catalyst. SQL text and
+  * DataFrame code become one plan tree in one optimizer, so all the
+  * physical wins (broadcast dim joins, partial+final aggregation,
+  * `TakeOrderedAndProject` top-k) apply to the SQL text unchanged — there
+  * is no separate "SQL engine" to keep fast.
+  *
+  * How names bind: [[sql]] parses the text once and replaces each table
+  * name it reads with the given frame's analyzed plan, inside that one
+  * parsed query (main tree, CTE bodies, subquery expressions). Nothing is
+  * registered in the session or the catalog, so two data dirs bound in
+  * one session cannot see each other, and the result runs in the frames'
+  * own session (its listeners included). A name the text reads that is
+  * neither bound nor a CTE in scope throws, and so does a CTE that shadows
+  * a bound name: no table name ever falls through to the catalog.
   *
   * Scale: identical to [[Queries.q1BusiestStops]] / q4ServiceFrequency —
   * the text compiles to the same exchanges; nothing here adds a shuffle.
   */
 object SqlFace {
 
-  /** Session-scoped temp views over the GTFS bundle. Registration is
-    * idempotent (`createOrReplaceTempView`), so repeated query runs in one
-    * session are safe.
-    *
-    * CONTRACT — one data dir per session: the view names are the generic
-    * GTFS table names the SQL texts reference, so re-registering with a
-    * bundle from a different scale dir would REBIND them session-globally
-    * (and under concurrency, clobber another caller's views between its
-    * `register` and `spark.sql`). Every entry point in this repo routes a
-    * second dir to its own `newSession()` child via [[sessionFor]] —
-    * temp views are session-scoped, so isolated sessions cannot clobber
-    * each other.
-    *
-    * ENFORCED (VERDICT r13 ask #4), not just documented: `register`
-    * records the source dirs the bundle's file scans read (from the
-    * logical plan leaves — no API change) and THROWS on a rebind to a
-    * DIFFERENT dir set in the same session, naming both sides. A bundle
-    * with no file scans (in-memory spec fixtures) is unidentifiable and
-    * skips the check; `newSession()` is the multi-tenant escape hatch
-    * (fresh session key → fresh binding). */
-  def register(t: TransitTables): Unit = {
-    val session = t.stopTimes.sparkSession
-    val dirs = boundDirs(t)
-    if (dirs.nonEmpty) bindings.synchronized {
-      Option(bindings.get(session)) match {
-        case Some(prev) if prev != dirs =>
-          throw new IllegalStateException(
-            s"SqlFace temp views already bound to $prev in this session; " +
-              s"refusing to rebind to $dirs — use SparkSession.newSession() " +
-              "for a second data dir (temp views are session-global)")
-        case _ => bindings.put(session, dirs)
+  /** Runs `text` with its table names bound to `tables` (matched
+    * case-insensitively, as SQL identifiers are), in the frames' session.
+    * The one binder every SQL-text face goes through. */
+  def sql(tables: Map[String, DataFrame], text: String): DataFrame = {
+    val spark = tables.values.head.sparkSession
+    val bound = tables.map { case (n, df) => n.toLowerCase -> df.queryExecution.analyzed }
+    def bind(plan: LogicalPlan, ctes: Set[String]): LogicalPlan = plan match {
+      case w: UnresolvedWith =>
+        val names = w.cteRelations.map(_._1.toLowerCase)
+        names.find(bound.contains).foreach(n => throw new IllegalArgumentException(
+          s"SqlFace: CTE `$n` shadows a bound table"))
+        val relations = w.cteRelations.zipWithIndex.map { case ((n, q, depth), i) =>
+          // a CTE sees the ones before it, and itself only when recursive
+          val scope = ctes ++ names.take(i) ++ (if (w.allowRecursion) names else Nil)
+          (n, q.copy(child = bind(q.child, scope)), depth)
+        }
+        w.copy(child = bind(w.child, ctes ++ names), cteRelations = relations)
+      case r: UnresolvedRelation => r.multipartIdentifier match {
+        case Seq(n) if bound.contains(n.toLowerCase) => SubqueryAlias(n, bound(n.toLowerCase))
+        case Seq(n) if ctes(n.toLowerCase) => r
+        case id => throw new IllegalArgumentException(
+          s"SqlFace: table `${id.mkString(".")}` is not bound (bound: " +
+            s"${tables.keys.toSeq.sorted.mkString(", ")})")
+      }
+      case p => p.mapChildren(bind(_, ctes)).transformExpressions {
+        case s: SubqueryExpression => s.withNewPlan(bind(s.plan, ctes))
       }
     }
-    t.stopTimes.createOrReplaceTempView("stop_times")
-    t.trips.createOrReplaceTempView("trips")
-    t.stops.createOrReplaceTempView("stops")
-    t.routes.createOrReplaceTempView("routes")
+    GraftPlanShim.ofRows(spark, bind(spark.sessionState.sqlParser.parsePlan(text), Set.empty))
   }
 
-  /** Per-session recorded binding. Weak keys: a discarded session must
-    * not be pinned by this guard map. */
-  private val bindings = new java.util.WeakHashMap[SparkSession, Set[String]]()
-
-  /** The source dirs a bundle's scans read: parent dirs of every file
-    * relation's root paths across the four frames. Parquet and CSV
-    * bundles both identify; purely in-memory bundles return empty. */
-  private def boundDirs(t: TransitTables): Set[String] =
-    Seq(t.stopTimes, t.trips, t.stops, t.routes).flatMap {
-      _.queryExecution.logical.collectLeaves().flatMap {
-        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          lr.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              fs.location.rootPaths.map(p =>
-                Option(p.getParent).map(_.toString).getOrElse(p.toString))
-            case _ => Nil
-          }
-        case _ => Nil
-      }
-    }.toSet
+  /** Runs one of the transit texts over the bundle's four GTFS tables. */
+  private def run(t: TransitTables, text: String): DataFrame =
+    sql(Map("stop_times" -> t.stopTimes, "trips" -> t.trips, "stops" -> t.stops,
+      "routes" -> t.routes), text)
 
   /** Q1 busiest stops (reference `SQL/Q1_busiest_stop.sql`), weekday
     * service, as executable Spark SQL text. */
@@ -173,68 +162,11 @@ object SqlFace {
       |ORDER BY num_unique_routes DESC, c.stop_id
       |LIMIT 20""".stripMargin
 
-  /** One child session per (parent session, data dir) — the contract's
-    * enforcement-by-construction path. `createOrReplaceTempView` binds in
-    * the session that OWNS the frames, so a registry face serving two
-    * scale dirs from one parent session routes each dir to its own
-    * `newSession()` child: the guard in [[register]] then never sees a
-    * cross-dir rebind in ANY legitimate flow, and two tenants cannot
-    * clobber each other's views even concurrently. Cached per dir —
-    * warm re-runs reuse the child (temp-view re-registration of the
-    * same bundle is idempotent). Runtime conf set after builder time
-    * (e.g. the AQE grid from `Scale.tuneSessionGrid`) does not survive
-    * `newSession()`, so the child re-copies the parent's settable conf on
-    * EVERY hit, not just at creation (ADVICE r14): a parent re-tuned
-    * after the child was cached — a new AQE grid for a bigger dir — must
-    * not leave the child planning with the stale snapshot. Keys REMOVED
-    * from the parent are not unset in the child (Spark's RuntimeConfig
-    * has no diff API); in this codebase conf is only ever re-set, never
-    * unset. The clobber runs the OTHER way too (ADVICE r15): any conf set
-    * directly on a cached child is silently reverted to the parent's
-    * value at the next lookup — children must never be tuned directly;
-    * the parent's conf is authoritative on every hit. Tune the parent
-    * (e.g. via `Scale.tuneSessionGrid`) and let the copy propagate. */
-  def sessionFor(parent: SparkSession, dir: String): SparkSession =
-    tenants.synchronized {
-      val byDir = Option(tenants.get(parent)).getOrElse {
-        val m = scala.collection.mutable.Map.empty[String, SparkSession]
-        tenants.put(parent, m)
-        m
-      }
-      val s = byDir.getOrElseUpdate(dir, parent.newSession())
-      parent.conf.getAll.foreach { case (k, v) =>
-        try s.conf.set(k, v)
-        catch { case _: Exception => () } // static conf: not settable, shared anyway
-      }
-      s
-    }
+  def q1Weekday(t: TransitTables): DataFrame = run(t, q1WeekdaySql)
 
-  private val tenants =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, SparkSession]]()
+  def q2Weekday(t: TransitTables): DataFrame = run(t, q2WeekdaySql)
 
-  /** All four faces run through here: the session that parses the SQL
-    * must be the session that owns (and so binds views in) the bundle's
-    * frames — a mismatch would resolve the view names against a DIFFERENT
-    * session's bindings, the silent-wrong-data shape the contract exists
-    * to prevent. `spark.sql` analyzes eagerly, so the returned frame has
-    * already resolved the views; later re-registration cannot retarget it. */
-  private def run(spark: SparkSession, t: TransitTables, sqlText: String): DataFrame = {
-    require(spark eq t.stopTimes.sparkSession,
-      "SqlFace: the SQL-running session must own the bundle's frames " +
-        "(views bind in the bundle's session — route through SqlFace.sessionFor)")
-    register(t)
-    spark.sql(sqlText)
-  }
+  def q3Weekday(t: TransitTables): DataFrame = run(t, q3WeekdaySql)
 
-  def q1Weekday(spark: SparkSession, t: TransitTables): DataFrame =
-    run(spark, t, q1WeekdaySql)
-
-  def q2Weekday(spark: SparkSession, t: TransitTables): DataFrame =
-    run(spark, t, q2WeekdaySql)
-
-  def q3Weekday(spark: SparkSession, t: TransitTables): DataFrame =
-    run(spark, t, q3WeekdaySql)
-
-  def q4Weekday(spark: SparkSession, t: TransitTables): DataFrame =
-    run(spark, t, q4WeekdaySql)
+  def q4Weekday(t: TransitTables): DataFrame = run(t, q4WeekdaySql)
 }

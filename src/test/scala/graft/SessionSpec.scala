@@ -10,9 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * pinned to the confs `Bench.main` and `HttpServe.main` built by hand
   * before it existed, and a source guard keeps every other file — test
   * sources included, bar one — from building a session or reading the
-  * two env vars it owns, keeps system-property reads out of the engine,
-  * and pins the engine's whole env surface to those two plus
-  * `SPARK_GRAFT_ONLY`. */
+  * two env vars it owns, keeps system-property reads, child sessions and
+  * temp views out of the engine, and pins the engine's whole env surface
+  * to those two plus `SPARK_GRAFT_ONLY`. */
 class SessionSpec extends AnyFunSuite {
 
   /** A dir whose only file is `bytes` long but sparse, so the data-sized
@@ -116,6 +116,12 @@ class SessionSpec extends AnyFunSuite {
     // dial is a constant until a caller needs another value
     val props = offending(mainLines, Seq("""sys\.props\.get|System\.getProperty""".r), Set.empty)
     assert(props.isEmpty, "system property read under src/main:\n" + props.mkString("\n"))
+    // no child session and no session-global name: SQL text binds its
+    // tables inside its own parsed query (SqlFace.sql)
+    val scoped = offending(mainLines, Seq("""newSession\s*\(""".r,
+      """create(OrReplace|Global)?TempView""".r), Set.empty)
+    assert(scoped.isEmpty,
+      "child session or temp view under src/main:\n" + scoped.mkString("\n"))
     // the whole env surface: every env read, in any file, names one of these
     val envRead = """sys\.env|System\.getenv""".r
     val envVars = Seq("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_ONLY")

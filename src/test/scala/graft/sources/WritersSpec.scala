@@ -93,9 +93,9 @@ class WritersSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val facts = (1L to 1000L).map(i => (i % 50, i, i * 1.5))
       .toDF("key", "id", "v")
-    Writers.bucketedTable(facts, "graft_bucketed_facts", "key", 8)
+    val dir = Files.createTempDirectory("graft-bucketed").toString
+    val t = Writers.bucketedTable(facts, "graft_bucketed_facts", Seq("key"), 8, s"$dir/t")
     try {
-      val t = spark.table("graft_bucketed_facts")
       val agg = t.groupBy($"key").agg(org.apache.spark.sql.functions.sum($"v").as("s"))
       val plan = agg.queryExecution.executedPlan.toString
       // bucketed layout satisfies the aggregation's distribution: no Exchange

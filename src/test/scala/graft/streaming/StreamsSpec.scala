@@ -416,7 +416,7 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
     val sdf = stream.toDF.toDF("event_id", "min", "user_id", "event_type")
       .select(col("user_id"), col("event_id"), col("event_type"),
         expr("timestamp_millis(min * 60000)").as("ts"))
-    val q = Streams.clickAttributionOuterStreaming(sdf).writeStream
+    val q = Streams.clickAttributionStreaming(sdf, "leftOuter").writeStream
       .format("memory").queryName("attrib_outer_test").outputMode("append").start()
     try {
       q.processAllAvailable()

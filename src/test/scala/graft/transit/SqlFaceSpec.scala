@@ -1,96 +1,92 @@
 package graft.transit
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.GraftBus
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkSpec
 
 /** The SQL-text face must be row-for-row identical to the DataFrame face —
-  * they are two parses of the same declarative semantics. */
+  * they are two parses of the same declarative semantics — and its table
+  * names bind inside the parsed query only: per call, in the caller's
+  * session, never through the catalog. */
 class SqlFaceSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
+  private val otherDir = dir.replace("sf0.001", "sf0.01") // ten times larger
 
-  test("spark.sql Q1 text equals the DataFrame Q1 plan") {
-    val t = TransitTables.fromTpch(spark, dir)
-    val sql = SqlFace.q1Weekday(spark, t).collect().toSeq
-    val df = Queries.q1BusiestStops(t, ServiceFilter.Weekday).collect().toSeq
-    assert(sql == df)
-  }
+  private val faces: Seq[(String, TransitTables => DataFrame, TransitTables => DataFrame)] = Seq(
+    ("Q1", SqlFace.q1Weekday, Queries.q1BusiestStops(_, ServiceFilter.Weekday)),
+    ("Q2", SqlFace.q2Weekday, Queries.q2RouteStats(_, ServiceFilter.Weekday)),
+    ("Q3", SqlFace.q3Weekday, Queries.q3TransferPoints(_, ServiceFilter.Weekday)),
+    ("Q4", SqlFace.q4Weekday, Queries.q4ServiceFrequency(_, ServiceFilter.Weekday)))
 
-  test("spark.sql Q4 text equals the DataFrame Q4 plan") {
-    val t = TransitTables.fromTpch(spark, dir)
-    val sql = SqlFace.q4Weekday(spark, t).collect().toSeq
-    val df = Queries.q4ServiceFrequency(t, ServiceFilter.Weekday).collect().toSeq
-    assert(sql == df)
-  }
-
-  /** A second data dir DERIVED from the spec's own fixture (a temp-dir
-    * copy of the sf0.001 parquet tables), so the spec runs on any
-    * checkout — the previous form hardcoded /root/testdata/sf0.01 and
-    * coupled the rebind assertion to this box's layout (ADVICE r14). */
-  private def tempDirCopy(): String = {
-    val dst = java.nio.file.Files.createTempDirectory("sqlface_otherdir")
-    val src = java.nio.file.Paths.get(dir)
-    java.nio.file.Files.walk(src).forEach { p =>
-      val t = dst.resolve(src.relativize(p).toString)
-      if (java.nio.file.Files.isDirectory(p))
-        java.nio.file.Files.createDirectories(t)
-      else java.nio.file.Files.copy(p, t,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  for ((q, sqlFace, dfFace) <- faces)
+    test(s"spark.sql $q text equals the DataFrame $q plan") {
+      val t = TransitTables.fromTpch(spark, dir)
+      val sql = sqlFace(t)
+      assert(sql.sparkSession eq spark, "the SQL face runs in the bundle's session")
+      assert(sql.collect().toSeq == dfFace(t).collect().toSeq)
     }
-    dst.toString
+
+  private def tempViews(): Set[String] =
+    spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+
+  test("two data dirs bind in one session, interleaved, without temp views") {
+    val viewsBefore = tempViews()
+    val ta = TransitTables.fromTpch(spark, dir)
+    val tb = TransitTables.fromTpch(spark, otherDir)
+    // build both before collecting either: a session-global binding made
+    // by the second build would retarget the first
+    val a = SqlFace.q1Weekday(ta)
+    val b = SqlFace.q1Weekday(tb)
+    val rowsA = a.collect().toSeq
+    val rowsB = b.collect().toSeq
+    assert(rowsA == Queries.q1BusiestStops(ta, ServiceFilter.Weekday).collect().toSeq)
+    assert(rowsB == Queries.q1BusiestStops(tb, ServiceFilter.Weekday).collect().toSeq)
+    assert(rowsA != rowsB, "the two dirs must give different answers")
+    assert(tempViews() == viewsBefore, "binding registered a temp view")
   }
 
-  // The one-dir-per-session contract (VERDICT r13 ask #4), previously
-  // documented-only: register records the dirs a bundle's file scans read
-  // and throws on a rebind to a DIFFERENT dir in the same session.
-  test("register throws on a second data dir in one session; newSession() escapes") {
-    val s1 = spark.newSession() // session under test: don't bind the shared one
-    SqlFace.register(TransitTables.fromTpch(s1, dir))
-    // same dir again: idempotent, no throw
-    SqlFace.register(TransitTables.fromTpch(s1, dir))
-    val other = tempDirCopy()
+  test("a listener on the caller's session sees the SQL face's execution") {
+    val seen = new ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
     try {
-      val ex = intercept[IllegalStateException] {
-        SqlFace.register(TransitTables.fromTpch(s1, other))
+      val df = graft.SparkEntry.queries("transit_q1_sqltext")(spark, dir)
+      df.collect()
+      GraftBus.drain(spark.sparkContext)
+      assert(seen.asScala.exists(_ eq df.queryExecution),
+        "the SQL face's collect never reached the caller's listener")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("an unbound table name or a CTE shadowing a bound name throws") {
+    val t = TransitTables.fromTpch(spark, dir)
+    val tables = Map("trips" -> t.trips, "stops" -> t.stops)
+    // a name only the catalog knows must not resolve there
+    t.routes.createOrReplaceTempView("sqlface_catalog_only")
+    try {
+      for (text <- Seq(
+          "SELECT * FROM sqlface_catalog_only",
+          "SELECT * FROM trips WHERE EXISTS (SELECT 1 FROM sqlface_catalog_only)",
+          "WITH x AS (SELECT * FROM sqlface_catalog_only) SELECT * FROM x",
+          "SELECT * FROM default.trips")) {
+        val ex = intercept[IllegalArgumentException](SqlFace.sql(tables, text))
+        assert(ex.getMessage.contains("not bound"), text)
       }
-      assert(ex.getMessage.contains("newSession"), "error must name the escape hatch")
-      val otherName = java.nio.file.Paths.get(other).getFileName.toString
-      assert(ex.getMessage.contains(otherName) && ex.getMessage.contains("sf0.001"),
-        "error must name both dirs")
-      // the escape hatch: a fresh session binds the second dir cleanly and
-      // the SQL face runs against it
-      val s2 = s1.newSession()
-      val t2 = TransitTables.fromTpch(s2, other)
-      assert(SqlFace.q1Weekday(s2, t2).limit(1).count() == 1)
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(other))
-  }
-
-  test("sessionFor caches one child per (parent, dir) and isolates dirs") {
-    val parent = spark.newSession()
-    // sessionFor does no IO on the dir — it is a tenancy key, so synthetic
-    // keys keep this spec layout-independent
-    val a1 = SqlFace.sessionFor(parent, "/x/tenant-a")
-    val a2 = SqlFace.sessionFor(parent, "/x/tenant-a")
-    val b = SqlFace.sessionFor(parent, "/x/tenant-b")
-    assert(a1 eq a2, "same (parent, dir) must reuse the child session")
-    assert(!(a1 eq b) && !(a1 eq parent) && !(b eq parent))
-    // the child plans like the parent: post-builder runtime conf copied
-    parent.conf.set("spark.sql.shuffle.partitions", "7")
-    val c = SqlFace.sessionFor(parent, "/x/tenant-c")
-    assert(c.conf.get("spark.sql.shuffle.partitions") == "7")
-    // ADVICE r14: a parent re-tuned AFTER a child was cached must reach
-    // that child on its next sessionFor hit, not keep the stale snapshot
-    parent.conf.set("spark.sql.shuffle.partitions", "9")
-    val a3 = SqlFace.sessionFor(parent, "/x/tenant-a")
-    assert(a3 eq a1)
-    assert(a3.conf.get("spark.sql.shuffle.partitions") == "9",
-      "cached child must pick up the parent's re-tuned conf on each hit")
-  }
-
-  test("the SQL-running session must own the bundle's frames") {
-    val s1 = spark.newSession()
-    val t = TransitTables.fromTpch(s1, dir)
-    intercept[IllegalArgumentException] {
-      SqlFace.q1Weekday(spark, t) // parent runs SQL, child owns frames
+    } finally spark.catalog.dropTempView("sqlface_catalog_only")
+    val ex = intercept[IllegalArgumentException] {
+      SqlFace.sql(tables, "WITH trips AS (SELECT 1 AS trip_id) SELECT * FROM trips")
     }
+    assert(ex.getMessage.contains("shadows"))
+    // bound names, CTE names in scope and case-insensitive matching all bind
+    assert(SqlFace.sql(tables,
+      "WITH s AS (SELECT stop_id FROM STOPS) SELECT count(*) FROM s JOIN trips ON false")
+      .collect().head.getLong(0) == 0L)
   }
 }
