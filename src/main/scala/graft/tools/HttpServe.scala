@@ -29,12 +29,15 @@ import graft.transit._
   *    → flat `{"times":[...],"count":n}` when route+headsign are both given,
   *    else grouped `{"groups":[...],"total_count":n}` (`Mongo/app.py:153-244`).
   *
-  * Scale note: every handler is a driver-side render of an ALREADY
-  * snapshot/cache-served plan ([[QueryService]] serves from pre-aggregated
-  * partition-pruned snapshots; timetable lookups are point filters on the
-  * pinned document store). The HTTP layer adds O(response) work only — at
+  * Scale note: the HTTP layer adds O(response) work only. In cached mode
+  * (the default under [[ServingCache.MaxCacheEntries]]) every handler is
+  * a lookup in the driver-side [[ServingCache]] maps, and nothing of the
+  * store or the snapshots stays pinned in Spark. In live mode every
+  * handler is a Spark job: analytic routes slice the pre-aggregated,
+  * partition-pruned snapshots (each pinned on its first slice), and
+  * timetable lookups are point filters on the pinned document store. At
   * cluster scale this process is a thin stateless front end replicated
-  * behind a load balancer, each replica holding the same cached snapshots,
+  * behind a load balancer, each replica holding the same serving copy,
   * so request fan-out scales with replica count, not data size.
   */
 object HttpServe {
@@ -188,7 +191,10 @@ object HttpServe {
     * collect per analytic query — see [[ServingCache]]), and swaps
     * atomically. Until refresh returns, the
     * listener keeps serving the pre-upsert snapshot — stale-but-consistent,
-    * never mixed. */
+    * never mixed. Residency follows [[start]]'s rule: a cached refresh
+    * pins the new store for its build (the ETL under it then runs once,
+    * not once per build job) and releases it once the maps exist, before
+    * they are swapped in; a live refresh leaves the new store pinned. */
   final class ServingHandle private[tools] (
       val server: HttpServer,
       workers: java.util.concurrent.ExecutorService,
@@ -213,13 +219,22 @@ object HttpServe {
   private[tools] def useCache(mode: Option[Boolean], entries: Long): Boolean =
     mode.getOrElse(entries <= ServingCache.MaxCacheEntries)
 
-  /** The measured cache decision + build for one store: probe the entry
-    * count, decide ([[useCache]]), build the maps only when they fit. */
+  /** The measured cache decision + build for one store: pin it, probe the
+    * entry count, decide ([[useCache]]), build the maps only when they
+    * fit. The pin follows the decision: live mode keeps the store pinned,
+    * since each request is a Spark job over it; cached mode releases it
+    * once the maps are built, since no request reads it again. Spark keys
+    * a pin by plan and keeps no count, so the release also drops a pin
+    * another holder (a live listener on an equal store) placed; that
+    * holder then recomputes the store per request, with the same bytes. */
   private def resolveState(svc: QueryService, docs: DataFrame,
       mode: Option[Boolean]): ServingState = {
+    docs.persist()
     val entries = ServingCache.storeEntries(docs)
-    ServingState(docs,
-      if (useCache(mode, entries)) Some(ServingCache.build(svc, docs)) else None, entries,
+    val cache =
+      if (!useCache(mode, entries)) None
+      else try Some(ServingCache.build(svc, docs)) finally docs.unpersist(blocking = true)
+    ServingState(docs, cache, entries,
       numericKey = docs.schema("stop_id").dataType
         .isInstanceOf[org.apache.spark.sql.types.NumericType])
   }
@@ -228,14 +243,18 @@ object HttpServe {
     *
     * `withCache = None` (the default) makes a MEASURED decision: probe
     * the store's schedule-entry count (one sum-of-array-sizes aggregate
-    * over the resident store) and precompute the [[ServingCache]] maps
-    * only when it fits under [[ServingCache.MaxCacheEntries]] — the r12
+    * over the store, which the probe pins) and precompute the
+    * [[ServingCache]] maps only when it fits under
+    * [[ServingCache.MaxCacheEntries]] — the r12
     * listener collected unconditionally, which at 100× the certified sf1
     * store would collect an oversized store onto the driver by default.
     * Cached mode serves every request from driver memory (no Spark job on
     * the request path — the reference's own precompute-then-slice
-    * architecture); over the ceiling the listener falls back to the live
-    * DataFrame path (each request a Spark job over the cached store).
+    * architecture) and releases the store's pin once the maps are built;
+    * over the ceiling the listener falls back to the live
+    * DataFrame path (each request a Spark job over the store, which stays
+    * pinned). The listener owns the store's residency, so callers need
+    * not pin it ([[resolveState]] says what a release does to other pins).
     * `Some(true)`/`Some(false)` force either path — the parity baseline
     * (`HttpServeParitySpec` byte-compares them) and the A/B lever.
     * `/servez` reports the decision and the probe's evidence. Handlers
@@ -412,10 +431,10 @@ object HttpServe {
     QueryService.buildAnalyticsSnapshots(t, snapDir)
     val svc = new QueryService(t, Some(snapDir), cacheSnapshots = true)
     // serving copy of the document store: the build runs wide (its own
-    // data-sized barrier), but the RESIDENT cache is a few thousand
-    // nested rows — collapse to 4 partitions so a point-lookup request
-    // schedules 4 scan tasks, not the build's grid
-    val timetables = Timetable.buildStopTimetables(t).coalesce(4).cache()
+    // data-sized barrier), but the store is a few thousand nested rows —
+    // collapse to 4 partitions so a live point-lookup request schedules 4
+    // scan tasks, not the build's grid. `start` pins it as its mode needs.
+    val timetables = Timetable.buildStopTimetables(t).coalesce(4)
     val handle = start(svc, timetables, port)
     println(s"[http-serve] listening on :${handle.port} (cache=${handle.cached})")
     Thread.currentThread.join() // serve until killed

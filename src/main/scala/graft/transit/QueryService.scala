@@ -34,11 +34,15 @@ final class QueryService(val t: TransitTables, snapshotDir: Option[String] = Non
 
   private val spark = t.stopTimes.sparkSession
 
-  /** Resident-process mode ([[graft.tools.HttpServe]]): each snapshot
-    * table is read ONCE and pinned in executor memory, so a request is a
-    * filter+sort+limit over an `InMemoryTableScan` — no per-request
-    * parquet footer reads. Off by default: one-shot callers (Verify's
-    * snapshot round trips) measure the real read-back path. */
+  /** Live-listener mode ([[graft.tools.HttpServe]] serving each request
+    * as a Spark job): a snapshot table is pinned in executor memory on
+    * its first [[q1]]..[[q4]] slice, so every later request is a
+    * filter+sort+limit over an `InMemoryTableScan`, with no per-request
+    * parquet footer reads. [[taggedJson]], the cached listener's one
+    * snapshot reader, never pins: its maps hold the rows, so a pin would
+    * be a second resident copy no request reads. Off by default: one-shot
+    * callers (Verify's snapshot round trips) measure the real read-back
+    * path. */
   private val snapCache =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
@@ -48,7 +52,11 @@ final class QueryService(val t: TransitTables, snapshotDir: Option[String] = Non
     * over it reads the cache from both of its sub-aggregations. */
   lazy val hourlyFrequencyView: DataFrame = Queries.hourlyFrequency(t).cache()
 
-  private def snapshot(name: String): Option[DataFrame] =
+  /** The snapshot table `name`, if one is on disk, pinned once in
+    * [[snapCache]] when `pin`. An unpinned read of a table a slice already
+    * pinned still scans the pin: Spark's cache lookup matches the plan,
+    * not the frame. */
+  private def snapshot(name: String, pin: Boolean): Option[DataFrame] =
     snapshotDir
       .map(d => s"$d/$name")
       // local-FS existence probe mirrors the reference's `_has_csv`; on a
@@ -58,7 +66,7 @@ final class QueryService(val t: TransitTables, snapshotDir: Option[String] = Non
         // the schema is the build's own (the service tag reads back as a
         // string, which [[slice]] casts to anyway): no footer-inference job
         def read() = spark.read.schema(snapshotFrame(t, name).schema).parquet(p)
-        if (cacheSnapshots) snapCache.computeIfAbsent(name, _ => read().cache())
+        if (pin) snapCache.computeIfAbsent(name, _ => read().cache())
         else read()
       }
 
@@ -74,27 +82,27 @@ final class QueryService(val t: TransitTables, snapshotDir: Option[String] = Non
   }
 
   def q1(service: ServiceFilter, limit: Limit = Limit.default): DataFrame =
-    snapshot(Q1).map(slice(Q1, _, service, limit))
+    snapshot(Q1, cacheSnapshots).map(slice(Q1, _, service, limit))
       .getOrElse(Queries.q1BusiestStops(t, service, limit))
 
   def q2(service: ServiceFilter, limit: Limit = Limit.default): DataFrame =
-    snapshot(Q2).map(slice(Q2, _, service, limit))
+    snapshot(Q2, cacheSnapshots).map(slice(Q2, _, service, limit))
       .getOrElse(Queries.q2RouteStats(t, service, limit))
 
   def q3(service: ServiceFilter, limit: Limit = Limit.default): DataFrame =
-    snapshot(Q3).map(slice(Q3, _, service, limit))
+    snapshot(Q3, cacheSnapshots).map(slice(Q3, _, service, limit))
       .getOrElse(Queries.q3TransferPoints(t, service, limit))
 
   def q4(service: ServiceFilter, limit: Limit = Limit.default): DataFrame =
-    snapshot(Q4).map(slice(Q4, _, service, limit))
+    snapshot(Q4, cacheSnapshots).map(slice(Q4, _, service, limit))
       .getOrElse(
         Queries.q4ServiceFrequencyFrom(hourlyFrequencyView, t.routes, service, limit))
 
   /** Every service tag's UNLIMITED response rows for one query, each row
     * rendered as JSON with the same generator `Dataset.toJSON` uses, in
     * the query's canonical order: tag → rows. What [[slice]] serves per
-    * tag, but from ONE collect over the tagged superset (the snapshot —
-    * one Spark job once it is pinned — or [[QueryService.snapshotFrame]]
+    * tag, but from ONE collect over the tagged superset (the snapshot,
+    * read unpinned in one Spark job, or [[QueryService.snapshotFrame]]
     * when none is on disk) instead of a range-partitioned sort per tag
     * (a sampling job plus the sort per slice): the superset is a few thousand
     * aggregated rows, so it is sorted in one partition by (tag, canonical
@@ -103,7 +111,7 @@ final class QueryService(val t: TransitTables, snapshotDir: Option[String] = Non
   def taggedJson(name: String): Map[String, Vector[String]] = {
     val p = presentations(name)
     val tag = col(TAG).cast("string")
-    snapshot(name).getOrElse(snapshotFrame(t, name))
+    snapshot(name, pin = false).getOrElse(snapshotFrame(t, name))
       .coalesce(1)
       .sortWithinPartitions(tag +: p.sort: _*)
       .select(tag, to_json(struct(p.cols.map(col): _*)))

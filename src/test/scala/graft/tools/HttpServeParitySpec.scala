@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.SparkSpec
+import graft.tools.ServeWire.{allRoutes, get, stops}
 import graft.transit._
 
 /** The serving cache must be invisible on the wire: every route the cached
@@ -9,7 +10,13 @@ import graft.transit._
   * including the fixture's traps (null route_short_name, NOT IN SERVICE
   * headsigns, >24h display times, unknown stops, param sanitization). This
   * is the guard that lets the r12 latency numbers stand for the same
-  * responses the engine faces produce. */
+  * responses the engine faces produce.
+  *
+  * The cached and live fixtures share one `docs` frame, and a cached start
+  * releases the store pin a live start placed (Spark keys pins by plan).
+  * Residency is a hint, not part of parity: an unpinned live listener
+  * recomputes the store per request and must answer the same bytes
+  * (`ServingResidencySpec` checks the pins themselves). */
 class HttpServeParitySpec extends SparkSpec {
 
   private lazy val t = GtfsFixture.tables(spark)
@@ -34,19 +41,6 @@ class HttpServeParitySpec extends SparkSpec {
   private lazy val snapCached = HttpServe.start(snapSvc, docs, 0, withCache = Some(true))
   private lazy val snapLive = HttpServe.start(snapSvc, docs, 0, withCache = Some(false))
 
-  private def get(server: HttpServe.ServingHandle,
-      path: String): (Int, String) = {
-    val conn = new java.net.URI(
-      s"http://127.0.0.1:${server.port}$path").toURL
-      .openConnection().asInstanceOf[java.net.HttpURLConnection]
-    val code = conn.getResponseCode
-    val in = if (code >= 400) conn.getErrorStream else conn.getInputStream
-    val body = new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8)
-    in.close()
-    (code, body)
-  }
-
   private def assertParity(paths: Seq[String],
       c: HttpServe.ServingHandle = cached,
       l: HttpServe.ServingHandle = live): Unit =
@@ -55,8 +49,6 @@ class HttpServeParitySpec extends SparkSpec {
       val b = get(l, p)
       assert(a == b, s"cache/live divergence on $p:\ncached: $a\nlive:   $b")
     }
-
-  private val stops = Seq("A", "B", "C", "D", "E", "HUB", "NOPE")
 
   private val apiRoutes: Seq[String] = (for {
       q <- Seq("q1", "q2", "q3", "q4")
@@ -76,8 +68,9 @@ class HttpServeParitySpec extends SparkSpec {
   }
 
   test("the analytic maps cost one Spark job per query, not one per slice") {
-    // snapCached's startup already read and pinned every snapshot, so a
-    // rebuild is exactly the four collects, not one per (query, service)
+    // snapCached's startup already built these maps from the snapshots on
+    // disk; a rebuild is again exactly the four collects, not one per
+    // (query, service)
     snapCached
     val (api, jobs) = graft.JobCount.of(spark)(ServingCache.buildApi(snapSvc))
     assert(jobs == 4, s"the analytic maps ran $jobs Spark jobs")
@@ -86,7 +79,7 @@ class HttpServeParitySpec extends SparkSpec {
 
   test("a fresh snapshot-backed service builds the analytic maps in one job per query") {
     // nothing read yet: each snapshot is read with the build's own schema
-    // (no footer-inference job), pinned, and collected in the same job
+    // (no footer-inference job) and collected unpinned in one job
     val fresh = new QueryService(t, Some(snapDir), cacheSnapshots = true)
     val (api, jobs) = graft.JobCount.of(spark)(ServingCache.buildApi(fresh))
     assert(jobs == 4, s"the analytic maps ran $jobs Spark jobs")
@@ -112,14 +105,6 @@ class HttpServeParitySpec extends SparkSpec {
       svc <- Seq("", "1", "2", "3", "4")
     } yield s"/get_arrivals?stop_id=$s&service_id=$svc")
   }
-
-  /** Routes exercising every endpoint family — the auto-gate and refresh
-    * faces byte-compare these across listener configurations. */
-  private def allRoutes: Seq[String] =
-    Seq("/get_stops", "/api/q1?service_id=1&limit=20", "/api/q3?limit=all") ++
-      stops.flatMap(s => Seq(s"/get_timetable?stop_id=$s",
-        s"/get_routes_for_stop?stop_id=$s",
-        s"/get_arrivals?stop_id=$s&service_id=2"))
 
   test("auto gate: under the ceiling the listener caches; /servez reports the probe") {
     // the fixture store is a few hundred entries — far under the 64 M

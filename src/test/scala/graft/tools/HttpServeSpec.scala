@@ -15,17 +15,7 @@ class HttpServeSpec extends SparkSpec {
     val svc = new QueryService(t)
     HttpServe.start(svc, docs, 0) // port 0 → ephemeral; cache auto-gated
   }
-  private def get(path: String): (Int, String) = {
-    val conn = new java.net.URI(
-      s"http://127.0.0.1:${server.port}$path").toURL
-      .openConnection().asInstanceOf[java.net.HttpURLConnection]
-    val code = conn.getResponseCode
-    val in = if (code >= 400) conn.getErrorStream else conn.getInputStream
-    val body = new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8)
-    in.close()
-    (code, body)
-  }
+  private def get(path: String): (Int, String) = ServeWire.get(server, path)
 
   test("healthz answers over a real socket") {
     assert(get("/healthz") == (200, """{"ok":true}"""))
