@@ -226,15 +226,17 @@ object SparkEntry {
     "transit_q1_snapshot" -> snapshotServed(QueryService.Q1, _.q1(ServiceFilter.Weekday)),
     // R4 parity for the other three dispatch paths (`SQL/app.py:85-125`
     // serves ALL FOUR queries from the CSV cache): same build-then-serve
-    // round trip, partition-pruned to the weekday tag.
+    // round trip, partition-pruned to the weekday tag. Q3's build writes
+    // Q1's table, which q3 is served from.
     "transit_q2_snapshot" -> snapshotServed(QueryService.Q2, _.q2(ServiceFilter.Weekday)),
     "transit_q3_snapshot" -> snapshotServed(QueryService.Q3, _.q3(ServiceFilter.Weekday)),
     "transit_q4_snapshot" -> snapshotServed(QueryService.Q4, _.q4(ServiceFilter.Weekday)),
   )
 
-  /** Build ONE query's partitioned snapshot under a per-sf tmp dir, then
-    * serve the weekday request from it (QueryService dispatches snapshot-
-    * first when the path exists). Lossless round trip → live-path oracle. */
+  /** Build the partitioned snapshot table ONE query is served from under
+    * a per-sf tmp dir, then serve the weekday request from it
+    * (QueryService dispatches snapshot-first when the table exists).
+    * Lossless round trip → live-path oracle. */
   private def snapshotServed(name: String, serve: QueryService => DataFrame)
       : (SparkSession, String) => DataFrame = (s, dir) => {
     val t = TransitTables.fromTpch(s, dir)

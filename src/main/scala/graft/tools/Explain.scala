@@ -35,7 +35,8 @@ import graft.transit.{QueryService, TransitTables}
   *
   * Besides registered faces, `snapshot_build:<q>` names the tagged frame
   * one analytics snapshot build writes (`QueryService.snapshotFrame`, `q`
-  * one of `QueryService.Q1`..`Q4`), so the build itself can be profiled.
+  * one of `QueryService.SnapshotTables`), so the build itself can be
+  * profiled.
   *
   * Usage: `runMain graft.tools.Explain <face...>` */
 object Explain extends AdaptiveSparkPlanHelper {
@@ -53,12 +54,9 @@ object Explain extends AdaptiveSparkPlanHelper {
     case _ => None
   }
 
-  private val SnapshotNames =
-    Set(QueryService.Q1, QueryService.Q2, QueryService.Q3, QueryService.Q4)
-
   private def frameFor(name: String): Option[(SparkSession, String) => DataFrame] =
     name.split(":", 2) match {
-      case Array("snapshot_build", q) if SnapshotNames(q) =>
+      case Array("snapshot_build", q) if QueryService.SnapshotTables.contains(q) =>
         Some((spark, sfDir) => QueryService.snapshotFrame(TransitTables.fromTpch(spark, sfDir), q))
       case _ => SparkEntry.queries.get(name)
     }

@@ -194,7 +194,8 @@ object HttpServe {
     * never mixed. Residency follows [[start]]'s rule: a cached refresh
     * pins the new store for its build (the ETL under it then runs once,
     * not once per build job) and releases it once the maps exist, before
-    * they are swapped in; a live refresh leaves the new store pinned. */
+    * they are swapped in; a live refresh pins the new store and releases
+    * the old one's pin unless it is the same plan (one pin, no count). */
   final class ServingHandle private[tools] (
       val server: HttpServer,
       workers: java.util.concurrent.ExecutorService,
@@ -205,8 +206,11 @@ object HttpServe {
     /** Whether the CURRENT state serves from driver maps (true) or the
       * live DataFrame path (false). */
     def cached: Boolean = state.get.cache.isDefined
-    def refresh(newDocs: DataFrame): Unit =
-      state.set(HttpServe.resolveState(svc, newDocs, mode))
+    def refresh(newDocs: DataFrame): Unit = {
+      val old = state.getAndSet(HttpServe.resolveState(svc, newDocs, mode))
+      if (old.cache.isEmpty && !old.docs.sameSemantics(newDocs))
+        old.docs.unpersist(blocking = false)
+    }
     /** Stop accepting, then release the handler pool: `server.stop`
       * leaves the executor it was given running. */
     def stop(delaySeconds: Int = 0): Unit =

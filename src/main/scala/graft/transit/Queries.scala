@@ -40,17 +40,20 @@ object Queries {
     * the grouping key (SURVEY §7.4 risk 5) and widen shuffle rows; the dim
     * join after the agg touches at most |stops| rows and broadcasts.
     */
-  def q1BusiestStops(t: TransitTables, service: ServiceFilter, limit: Limit = Limit.default): DataFrame = {
-    val counts = t.stopTimes
+  def q1BusiestStops(t: TransitTables, service: ServiceFilter, limit: Limit = Limit.default): DataFrame =
+    q1FromCounts(stopRouteCounts(t, service), t.stops)
+      .orderBy(col("total_trip_events").desc, col("stop_id"))
+      .transform(limit.apply)
+
+  /** Per-stop trip events and distinct non-NULL routes: Q1's aggregate,
+    * and Q3's (Catalyst prunes the event count Q3 does not read). */
+  private def stopRouteCounts(t: TransitTables, service: ServiceFilter): DataFrame =
+    t.stopTimes
       .join(filteredTrips(t, service).select("trip_id", "route_id"), "trip_id")
       .groupBy(col("stop_id"))
       .agg(
         count(lit(1)).as("total_trip_events"),
         countDistinct(col("route_id")).as("num_unique_routes"))
-    q1FromCounts(counts, t.stops)
-      .orderBy(col("total_trip_events").desc, col("stop_id"))
-      .transform(limit.apply)
-  }
 
   /** Q1's presentation step over an already-aggregated per-stop counts
     * frame — UNORDERED/UNLIMITED: the live path appends its top-k above,
@@ -70,15 +73,15 @@ object Queries {
         col("total_trip_events"), col("num_unique_routes"))
         ++ extra.map(col): _*)
 
-  /** ONE fact pass for all four Q1/Q3 snapshot tags (r16, guide §1.2 "how
-    * many full passes are unavoidable"): per (service_id, stop_id,
-    * route_id), the trip-event count. Every per-service AND whole-week
-    * Q1/Q3 aggregate is an exact integer re-aggregation of this frame —
-    * Σc over routes = Q1's event count, the count of non-NULL route keys
-    * = Q1's exact countDistinct(route) (the keys are already distinct; a
-    * NULL route, read from a blank `trips.txt` field, forms a group of
-    * its own that countDistinct skips), the key set is Q3's
-    * UniqueStopRoutes — so the snapshot build scans the fact table
+  /** ONE fact pass for all four tags of the Q1 snapshot, which Q3 is
+    * served from too (r16, guide §1.2 "how many full passes are
+    * unavoidable"): per (service_id, stop_id, route_id), the trip-event
+    * count. Every per-service AND whole-week Q1 aggregate is an exact
+    * integer re-aggregation of this frame — Σc over routes = Q1's event
+    * count, the count of non-NULL route keys = Q1's exact
+    * countDistinct(route) (the keys are already distinct; a NULL route,
+    * read from a blank `trips.txt` field, forms a group of its own that
+    * countDistinct skips) — so the snapshot build scans the fact table
     * once instead of once per tag. Integer-exact: no double ever enters,
     * the derived values are IDENTICAL to the per-tag plans', not merely
     * close. */
@@ -199,16 +202,20 @@ object Queries {
   private[transit] def q2WeekWeighted(perService: DataFrame): DataFrame =
     perService
       .groupBy(col("route_id"))
-      .agg(
-        sum(col("num_trips")).as("num_trips"),
-        when(sum(col("num_trips")) === sum(col("cents_cnt")),
-          sum(col("cents_sum")).cast("double") / sum(col("num_trips")) / 100.0)
-          .otherwise(
-            sum(col("avg_trip_distance_km") * col("num_trips")) / sum(col("num_trips")))
-          .as("avg_trip_distance_km"),
-        (sum(col("dur_sum")).cast("double") / sum(col("num_trips")) / 60.0).as("avg_duration_min"),
-        lit(null).cast("double").as("duration_stddev_min"),
-        (sum(col("avg_speed_kmh") * col("num_trips")) / sum(col("num_trips"))).as("avg_speed_kmh"))
+      .agg(sum(col("num_trips")).as("num_trips"),
+        q2WeekMeans :+ lit(null).cast("double").as("duration_stddev_min"): _*)
+
+  /** [[q2WeekWeighted]]'s means, which the snapshot's '4' rows share. The
+    * speed mean is a double sum over another aggregation tree there, so
+    * the two can still differ by an ULP (ROADMAP item 5). */
+  private[transit] def q2WeekMeans: Seq[Column] = Seq(
+    when(sum(col("num_trips")) === sum(col("cents_cnt")),
+      sum(col("cents_sum")).cast("double") / sum(col("num_trips")) / 100.0)
+      .otherwise(
+        sum(col("avg_trip_distance_km") * col("num_trips")) / sum(col("num_trips")))
+      .as("avg_trip_distance_km"),
+    (sum(col("dur_sum")).cast("double") / sum(col("num_trips")) / 60.0).as("avg_duration_min"),
+    (sum(col("avg_speed_kmh") * col("num_trips")) / sum(col("num_trips"))).as("avg_speed_kmh"))
 
   /** Q2's presentation step (dim join + 4-dp rounding) over an UNROUNDED
     * per-route stats frame — UNORDERED/UNLIMITED, shared by live (sorts
@@ -302,43 +309,24 @@ object Queries {
       .orderBy(col("stop_sequence"))
   }
 
-  /** Q3 CTE `UniqueStopRoutes`: deduped (stop, route) pairs — the manual
-    * pre-aggregation the reference adds "to avoid query timeout"
-    * (`Reporting/Poster_Report.md:205-207`); here it is simply a declared
-    * `.distinct()` that also shrinks the shuffle. */
-  def uniqueStopRoutes(t: TransitTables, service: ServiceFilter): DataFrame =
-    t.stopTimes.select("trip_id", "stop_id")
-      .join(filteredTrips(t, service).select("trip_id", "route_id"), "trip_id")
-      .select("stop_id", "route_id")
-      .distinct()
-
-  /** Q3 — transfer points: stops served by ≥ 2 distinct routes.
-    * Whole-week = unfiltered, same as Q1. */
+  /** Q3 — transfer points: Q1's per-stop counts, kept where
+    * [[isTransferPoint]]. Spark plans the single distinct aggregate as
+    * the reference's `UniqueStopRoutes` CTE: deduped (stop, route) pairs
+    * below the shuffle. Whole-week = unfiltered, same as Q1. */
   def q3TransferPoints(t: TransitTables, service: ServiceFilter, limit: Limit = Limit.default): DataFrame =
-    q3FromCounts(
-      uniqueStopRoutes(t, service)
-        .groupBy(col("stop_id"))
-        .agg(count(col("route_id")).as("num_unique_routes")),
-      t.stops)
-      .orderBy(col("num_unique_routes").desc, col("stop_id"))
-      .transform(limit.apply)
-
-  /** Q3's ≥2-routes filter + presentation over an already-aggregated
-    * per-stop route-count frame — UNORDERED/UNLIMITED, shared by the live
-    * path (which sorts above) and the snapshot build (which derives the
-    * counts from the one-pass [[q1ServiceStopRouteCounts]] base and
-    * writes unsorted). */
-  private[transit] def q3FromCounts(counts: DataFrame, stops: DataFrame,
-      extra: Seq[String] = Nil): DataFrame =
-    counts
-      .filter(col("num_unique_routes") >= 2)
-      .join(broadcast(stops), Seq("stop_id"))
-      .select(Seq(
+    stopRouteCounts(t, service)
+      .filter(isTransferPoint)
+      .join(broadcast(t.stops), Seq("stop_id"))
+      .select(
         col("stop_id"), col("stop_name"),
         round(col("stop_lat"), 6).as("stop_lat"),
         round(col("stop_lon"), 6).as("stop_lon"),
         col("num_unique_routes"))
-        ++ extra.map(col): _*)
+      .orderBy(col("num_unique_routes").desc, col("stop_id"))
+      .transform(limit.apply)
+
+  /** Q3's rows of Q1's counts; also Q3's filter on the Q1 snapshot. */
+  private[transit] def isTransferPoint: Column = col("num_unique_routes") >= 2
 
   /** GTFS hour bucket: `floor(dep_secs/3600)` — legitimately 24..28+ for
     * after-midnight service; never `hour()` on a timestamp (SURVEY §2.8 F1). */

@@ -22,7 +22,8 @@ import graft.sources.Writers
   *    writes the same superset as parquet PARTITIONED BY the service tag —
   *    so a served request reads exactly one partition (partition pruning,
   *    not a file-wide scan) — and [[q1]]/[[q2]]/[[q3]]/[[q4]] dispatch
-  *    snapshot-first with the live plan as fallback.
+  *    snapshot-first with the live plan as fallback. Q3 is served from
+  *    Q1's table, filtered on its route count: three tables, four queries.
   *
   * At 100 TB the snapshot is the only sane serving path: the live plans
   * scan the fact table, the snapshots are a few thousand pre-aggregated
@@ -70,33 +71,32 @@ final class QueryService(val t: TransitTables, snapshotDir: Option[String] = Non
         else read()
       }
 
-  /** Snapshot slice: prune to the requested service partition, restore the
-    * query's canonical presentation (column order, sort, limit). */
-  private def slice(name: String, df: DataFrame, service: ServiceFilter,
-      limit: Limit): DataFrame = {
+  /** Query `name` from its source table when on disk, else `live`: prune
+    * to the service partition and the query's rows, restore the query's
+    * canonical presentation (column order, sort, limit). */
+  private def slice(name: String, service: ServiceFilter, limit: Limit)(
+      live: => DataFrame): DataFrame = {
     val p = presentations(name)
-    df.filter(col(TAG).cast("string") === tagOf(service))
-      .select(p.cols.map(col): _*)
-      .orderBy(p.sort: _*)
-      .transform(limit.apply)
+    snapshot(p.source, cacheSnapshots).map(
+      _.filter(col(TAG).cast("string") === tagOf(service) && p.rows)
+        .select(p.cols.map(col): _*)
+        .orderBy(p.sort: _*)
+        .transform(limit.apply))
+      .getOrElse(live)
   }
 
   def q1(service: ServiceFilter, limit: Limit = Limit.default): DataFrame =
-    snapshot(Q1, cacheSnapshots).map(slice(Q1, _, service, limit))
-      .getOrElse(Queries.q1BusiestStops(t, service, limit))
+    slice(Q1, service, limit)(Queries.q1BusiestStops(t, service, limit))
 
   def q2(service: ServiceFilter, limit: Limit = Limit.default): DataFrame =
-    snapshot(Q2, cacheSnapshots).map(slice(Q2, _, service, limit))
-      .getOrElse(Queries.q2RouteStats(t, service, limit))
+    slice(Q2, service, limit)(Queries.q2RouteStats(t, service, limit))
 
   def q3(service: ServiceFilter, limit: Limit = Limit.default): DataFrame =
-    snapshot(Q3, cacheSnapshots).map(slice(Q3, _, service, limit))
-      .getOrElse(Queries.q3TransferPoints(t, service, limit))
+    slice(Q3, service, limit)(Queries.q3TransferPoints(t, service, limit))
 
   def q4(service: ServiceFilter, limit: Limit = Limit.default): DataFrame =
-    snapshot(Q4, cacheSnapshots).map(slice(Q4, _, service, limit))
-      .getOrElse(
-        Queries.q4ServiceFrequencyFrom(hourlyFrequencyView, t.routes, service, limit))
+    slice(Q4, service, limit)(
+      Queries.q4ServiceFrequencyFrom(hourlyFrequencyView, t.routes, service, limit))
 
   /** Every service tag's UNLIMITED response rows for one query, each row
     * rendered as JSON with the same generator `Dataset.toJSON` uses, in
@@ -111,7 +111,8 @@ final class QueryService(val t: TransitTables, snapshotDir: Option[String] = Non
   def taggedJson(name: String): Map[String, Vector[String]] = {
     val p = presentations(name)
     val tag = col(TAG).cast("string")
-    snapshot(name, pin = false).getOrElse(snapshotFrame(t, name))
+    snapshot(p.source, pin = false).getOrElse(snapshotFrame(t, p.source))
+      .filter(p.rows)
       .coalesce(1)
       .sortWithinPartitions(tag +: p.sort: _*)
       .select(tag, to_json(struct(p.cols.map(col): _*)))
@@ -157,32 +158,35 @@ object QueryService {
     * whole week (the reference's sentinel, `SQL/csv_backend.py:44`). */
   def tagOf(s: ServiceFilter): String = s.sid.getOrElse("4")
 
-  /** One query's response shape: its columns in order and its canonical
-    * sort, total within a service tag (the key column breaks every tie). */
-  private final case class Presentation(cols: Seq[String], sort: Seq[Column])
+  /** One query's response shape: its source table and the rows it keeps
+    * there, its columns in order and its canonical sort, total within a
+    * service tag (the key column breaks every tie). */
+  private final case class Presentation(source: String, cols: Seq[String],
+      sort: Seq[Column], rows: Column = lit(true))
 
   /** The one definition of each query's presentation, shared by the
     * per-request [[QueryService.slice]] and the whole-superset
     * [[QueryService.taggedJson]]. */
   private val presentations: Map[String, Presentation] = Map(
-    Q1 -> Presentation(
+    Q1 -> Presentation(Q1,
       Seq("stop_id", "stop_code", "stop_name", "stop_lat", "stop_lon",
         "total_trip_events", "num_unique_routes"),
       Seq(col("total_trip_events").desc, col("stop_id"))),
-    Q2 -> Presentation(
+    Q2 -> Presentation(Q2,
       Seq("route_id", "route_long_name", "route_short_name", "num_trips",
         "avg_trip_distance_km", "avg_duration_min", "duration_stddev_min",
         "avg_speed_kmh"),
       Seq(col("avg_duration_min").desc, col("route_id"))),
-    Q3 -> Presentation(
+    Q3 -> Presentation(Q1,
       Seq("stop_id", "stop_name", "stop_lat", "stop_lon", "num_unique_routes"),
-      Seq(col("num_unique_routes").desc, col("stop_id"))),
-    Q4 -> Presentation(
+      Seq(col("num_unique_routes").desc, col("stop_id")),
+      Queries.isTransferPoint),
+    Q4 -> Presentation(Q4,
       Seq("route_id", "route_long_name", "route_short_name",
         "total_daily_trips", "hourly_profile"),
       Seq(col("total_daily_trips").desc, col("route_id"))))
 
-  /** One tagged superset frame per query: per-service rows ('1'/'2'/'3')
+  /** One tagged superset frame per table: per-service rows ('1'/'2'/'3')
     * plus the whole-week '4' rows, UNLIMITED — serving slices later,
     * exactly like `SQL/generate_csv.py` concatenating the four frames.
     * Whole-week is its own DERIVATION because its semantics are not a
@@ -208,7 +212,8 @@ object QueryService {
     * not the fact table. Values are identical to the per-tag plans':
     * per-service tags aggregate single-row groups (integer sums are
     * exact; doubles pass through `max` over one row bit-identically),
-    * whole-week tags use the live WholeWeek paths' own expressions. The
+    * whole-week tags use the live WholeWeek paths' own expressions (over
+    * another aggregation tree: see [[Queries.q2WeekMeans]]). The
     * exploded tag domain is exactly {'1','2','3','4'} because
     * `TransitTables.fromTpch` pins service_id = o_orderkey%3+1. Per-tag
     * ORDER is dropped: the write is partitioned parquet (order never
@@ -236,40 +241,22 @@ object QueryService {
       .groupBy(col(TAG), col("route_id"))
       .agg(
         sum(col("num_trips")).as("num_trips"),
-        // whole-week legs: q2WeekWeighted's trip-count-weighted means,
-        // expression-for-expression — duration/distance from exact long
-        // sums so the snapshot '4' rows are bit-identical to the live path
-        // regardless of aggregation-tree/shuffle order (see q2WeekWeighted)
-        when(sum(col("num_trips")) === sum(col("cents_cnt")),
-          sum(col("cents_sum")).cast("double") / sum(col("num_trips")) / 100.0)
-          .otherwise(
-            sum(col("avg_trip_distance_km") * col("num_trips")) / sum(col("num_trips")))
-          .as("w_km"),
-        (sum(col("dur_sum")).cast("double") / sum(col("num_trips")) / 60.0).as("w_dur"),
-        (sum(col("avg_speed_kmh") * col("num_trips")) / sum(col("num_trips"))).as("w_speed"),
-        // per-service legs: the group holds exactly ONE base row (key was
-        // (route_id, service_id)), so max() is a bit-exact pass-through
-        max(col("avg_trip_distance_km")).as("p_km"),
-        max(col("avg_duration_min")).as("p_dur"),
-        max(col("duration_stddev_min")).as("p_sd"),
-        max(col("avg_speed_kmh")).as("p_speed"))
+        // whole-week legs: q2WeekWeighted's own expressions
+        Queries.q2WeekMeans ++ Seq(
+          // per-service legs: the group holds exactly ONE base row (key was
+          // (route_id, service_id)), so max() is a bit-exact pass-through
+          max(col("avg_trip_distance_km")).as("p_km"),
+          max(col("avg_duration_min")).as("p_dur"),
+          max(col("duration_stddev_min")).as("p_sd"),
+          max(col("avg_speed_kmh")).as("p_speed")): _*)
       .select(col(TAG), col("route_id"), col("num_trips"),
-        when(isWeek, col("w_km")).otherwise(col("p_km")).as("avg_trip_distance_km"),
-        when(isWeek, col("w_dur")).otherwise(col("p_dur")).as("avg_duration_min"),
+        when(isWeek, col("avg_trip_distance_km")).otherwise(col("p_km"))
+          .as("avg_trip_distance_km"),
+        when(isWeek, col("avg_duration_min")).otherwise(col("p_dur")).as("avg_duration_min"),
         // whole-week stddev is NULL by spec (reference generate_csv.py)
         when(isWeek, lit(null).cast("double")).otherwise(col("p_sd")).as("duration_stddev_min"),
-        when(isWeek, col("w_speed")).otherwise(col("p_speed")).as("avg_speed_kmh"))
+        when(isWeek, col("avg_speed_kmh")).otherwise(col("p_speed")).as("avg_speed_kmh"))
     Queries.q2FromStats(stats, t.routes, Seq(TAG))
-  }
-
-  private def taggedQ3(t: TransitTables): DataFrame = {
-    val counts = Queries.q1ServiceStopRouteCounts(t)
-      .select(explode(array(col("service_id"), lit("4"))).as(TAG),
-        col("stop_id"), col("route_id"))
-      .distinct()
-      .groupBy(col(TAG), col("stop_id"))
-      .agg(count(col("route_id")).as("num_unique_routes"))
-    Queries.q3FromCounts(counts, t.stops, Seq(TAG))
   }
 
   private def taggedQ4(t: TransitTables): DataFrame = {
@@ -281,26 +268,30 @@ object QueryService {
     Queries.q4Rollup(perHour, t.routes, Seq(TAG))
   }
 
-  /** The R4 batch job (`SQL/generate_csv.py:main`): materialize all four
-    * analytics snapshots, partitioned by the service tag so serving prunes
+  /** The tables [[buildAnalyticsSnapshots]] writes (Q3 reads Q1's). */
+  val SnapshotTables: Seq[String] = Seq(Q1, Q2, Q4)
+
+  /** The R4 batch job (`SQL/generate_csv.py:main`): materialize the
+    * [[SnapshotTables]], partitioned by the service tag so serving prunes
     * to one partition. Overwrite-mode — rerunnable on feed refresh. */
   def buildAnalyticsSnapshots(t: TransitTables, dir: String): Unit =
-    Seq(Q1, Q2, Q3, Q4).foreach(buildSnapshot(t, dir, _))
+    SnapshotTables.foreach(buildSnapshot(t, dir, _))
 
-  /** The tagged frame one snapshot build writes — exposed (package-
-    * private) so plan-evidence tooling (`tools.Explain`) can explain the
-    * build itself, not just the read-back face. */
+  /** The tagged frame of the table query `name` is served from — exposed
+    * (package-private) so plan-evidence tooling (`tools.Explain`) can
+    * explain the build itself, not just the read-back face. */
   private[graft] def snapshotFrame(t: TransitTables, name: String): DataFrame =
-    name match {
-      case Q1 => taggedQ1(t)
-      case Q2 => taggedQ2(t)
-      case Q3 => taggedQ3(t)
-      case Q4 => taggedQ4(t)
-      case other => throw new IllegalArgumentException(s"no snapshot named $other")
+    presentations.get(name).map(_.source) match {
+      case Some(Q1) => taggedQ1(t)
+      case Some(Q2) => taggedQ2(t)
+      case Some(Q4) => taggedQ4(t)
+      case _ => throw new IllegalArgumentException(s"no snapshot named $name")
     }
 
-  /** Snapshot build for ONE query — each registered read-back face uses
-    * this so its measured cost is one snapshot's ETL, not all four. */
-  def buildSnapshot(t: TransitTables, dir: String, name: String): Unit =
-    Writers.snapshotParquet(snapshotFrame(t, name), s"$dir/$name", Seq(TAG))
+  /** Snapshot build for ONE query's source table — each registered
+    * read-back face uses this so its measured cost is one table's ETL. */
+  def buildSnapshot(t: TransitTables, dir: String, name: String): Unit = {
+    val table = presentations(name).source
+    Writers.snapshotParquet(snapshotFrame(t, table), s"$dir/$table", Seq(TAG))
+  }
 }

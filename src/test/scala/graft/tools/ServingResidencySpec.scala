@@ -29,7 +29,7 @@ class ServingResidencySpec extends SparkSpec {
   /** The frames the service reads its snapshots as: same path, same
     * schema, so the cache manager matches them to the service's pins. */
   private def snapshotReads: Seq[DataFrame] =
-    Seq(QueryService.Q1, QueryService.Q2, QueryService.Q3, QueryService.Q4).map { n =>
+    QueryService.SnapshotTables.map { n =>
       spark.read.schema(QueryService.snapshotFrame(t, n).schema).parquet(s"$snapDir/$n")
     }
 
@@ -40,8 +40,8 @@ class ServingResidencySpec extends SparkSpec {
     try {
       assert(h.cached, "fixture store must auto-gate to cached")
       assert(!registered(docs), "the cached listener kept the store pinned")
-      snapshotReads.zipWithIndex.foreach { case (r, i) =>
-        assert(!registered(r), s"the cached listener pinned snapshot q${i + 1}")
+      QueryService.SnapshotTables.zip(snapshotReads).foreach { case (n, r) =>
+        assert(!registered(r), s"the cached listener pinned snapshot $n")
       }
       assert(get(h, "/api/q1?service_id=1")._1 == 200 && get(h, "/get_stops")._1 == 200)
     } finally h.stop()
@@ -58,6 +58,25 @@ class ServingResidencySpec extends SparkSpec {
       assert(get(h, "/api/q1?service_id=1")._1 == 200)
       assert(registered(q1), "the first q1 slice must pin its snapshot")
     } finally { h.stop(); docs.unpersist(); q1.unpersist() }
+  }
+
+  test("a live refresh releases the old store's pin, not a pin the new store shares") {
+    val svc = new QueryService(t, Some(snapDir), cacheSnapshots = true)
+    val docs = Timetable.buildStopTimetables(t)
+    val docs2 = Timetable.buildStopTimetables(
+      t.copy(stopTimes = t.stopTimes.filter(col("trip_id") =!= "T2")))
+    val h = HttpServe.start(svc, docs, 0, withCache = Some(false))
+    try {
+      h.refresh(docs2)
+      assert(!h.cached, "refresh must re-decide under the started mode")
+      assert(!registered(docs), "the live refresh kept the old store pinned")
+      assert(registered(docs2), "the live refresh must pin the new store")
+      // an equal store built again is the same plan, hence the same pin
+      h.refresh(Timetable.buildStopTimetables(
+        t.copy(stopTimes = t.stopTimes.filter(col("trip_id") =!= "T2"))))
+      assert(registered(docs2), "a refresh with the same store dropped its pin")
+      assert(get(h, "/get_stops")._1 == 200)
+    } finally { h.stop(); docs.unpersist(); docs2.unpersist() }
   }
 
   test("a cached refresh releases the new store and serves it byte-identically") {

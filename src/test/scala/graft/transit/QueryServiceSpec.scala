@@ -78,9 +78,13 @@ class QueryServiceSpec extends AnyFunSuite with SparkSpec {
     assert(nulled.select("duration_stddev_min").collect().forall(_.isNullAt(0)))
   }
 
-  test("R4: snapshot-served q1 skips a blank route_id, as the live plan does") {
-    // a feed whose trips.txt leaves one trip's route_id blank: the CSV
-    // source reads it as NULL, which live Q1's countDistinct skips
+  private val services = Seq[ServiceFilter](ServiceFilter.Weekday,
+    ServiceFilter.Saturday, ServiceFilter.Sunday, ServiceFilter.WholeWeek)
+
+  /** The micro-feed plus one weekday trip whose trips.txt route_id is
+    * blank: the CSV source reads it as NULL, which live Q1's
+    * countDistinct skips. */
+  private def blankRouteFeed(): TransitTables = {
     val feed = java.nio.file.Paths.get(GtfsFixture.feedDir())
     def append(name: String, lines: String): Unit =
       java.nio.file.Files.writeString(feed.resolve(name), lines,
@@ -91,6 +95,11 @@ class QueryServiceSpec extends AnyFunSuite with SparkSpec {
     val blank = graft.sources.GtfsReader.readFeed(spark, feed.toString)
     assert(blank.trips.filter(org.apache.spark.sql.functions.col("route_id").isNull)
       .count() == 1, "the blank route_id must read as NULL for this case to bite")
+    blank
+  }
+
+  test("R4: snapshot-served q1 skips a blank route_id, as the live plan does") {
+    val blank = blankRouteFeed()
     val dir = java.nio.file.Files.createTempDirectory("graft_svc_spec_blank").toString
     QueryService.buildSnapshot(blank, dir, QueryService.Q1)
     val svc = new QueryService(blank, Some(dir))
@@ -99,6 +108,49 @@ class QueryServiceSpec extends AnyFunSuite with SparkSpec {
       assert(svc.taggedJson(QueryService.Q1)(QueryService.tagOf(s)).sorted ===
         Queries.q1BusiestStops(blank, s).toJSON.collect().toSeq.sorted, s)
     }
+  }
+
+  /** Builds the analytics snapshots of `tables` and checks that q3,
+    * served from Q1's table, equals live q3 for every service, both per
+    * slice and in the cached listener's tagged superset. */
+  private def q3ServedEqualsLive(tables: TransitTables): QueryService = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_svc_spec_q3").toString
+    QueryService.buildAnalyticsSnapshots(tables, dir)
+    val svc = new QueryService(tables, Some(dir))
+    val tagged = svc.taggedJson(QueryService.Q3)
+    for (s <- services) {
+      val live = Queries.q3TransferPoints(tables, s, Limit.All)
+      assert(collectSorted(svc.q3(s, Limit.All)) === collectSorted(live), s)
+      assert(tagged.getOrElse(QueryService.tagOf(s), Vector.empty).sorted ===
+        live.toJSON.collect().toSeq.sorted, s)
+    }
+    svc
+  }
+
+  test("R4: q3 served from the Q1 table equals live q3 for every service (sf0.001)") {
+    q3ServedEqualsLive(t)
+  }
+
+  test("R4: q3 served from the Q1 table equals live q3 for every service (micro-feed)") {
+    val svc = q3ServedEqualsLive(blankRouteFeed())
+    // the filter really drops rows here: A (R1 and the blank route), B
+    // and D have one route each, so only HUB and C are transfer points
+    assert(svc.q3(ServiceFilter.Weekday).collect().map(_.getString(0)).toSet ===
+      Set("C", "HUB"))
+  }
+
+  test("R4: the analytics build writes the Q1, Q2 and Q4 tables and no other") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_svc_spec_tables")
+    QueryService.buildAnalyticsSnapshots(t, dir.toString)
+    val written = dir.toFile.listFiles().filter(_.isDirectory).map(_.getName).toSet
+    assert(written === Set(QueryService.Q1, QueryService.Q2, QueryService.Q4))
+    // a stale Q3 table from an older build is never read: q3 still comes
+    // from Q1's table (this one is not even parquet)
+    val stale = java.nio.file.Files.createDirectory(dir.resolve(QueryService.Q3))
+    java.nio.file.Files.writeString(stale.resolve("part-0.parquet"), "stale")
+    val svc = new QueryService(t, Some(dir.toString))
+    assert(collectSorted(svc.q3(ServiceFilter.Weekday)) ===
+      collectSorted(Queries.q3TransferPoints(t, ServiceFilter.Weekday)))
   }
 
   test("R4: without a snapshot, dispatch falls back to the live plan") {
