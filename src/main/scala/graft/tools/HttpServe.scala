@@ -187,7 +187,7 @@ object HttpServe {
     * documented invalidation hook: hand it the post-upsert store and it
     * re-probes, re-decides cache-vs-live under the SAME mode the listener
     * was started with, rebuilds the maps (the same jobs as startup: the
-    * entry probe, the stops list, two whole-store grouped jobs and one
+    * entry probe, the stops list, one whole-store grouped job and one
     * collect per analytic query — see [[ServingCache]]), and swaps
     * atomically. Until refresh returns, the
     * listener keeps serving the pre-upsert snapshot — stale-but-consistent,

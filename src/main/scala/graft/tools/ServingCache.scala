@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.transit._
 
@@ -16,26 +16,28 @@ import graft.transit._
   * architecture (it slices pre-generated CSV snapshots per request,
   * `SQL/csv_backend.py:42-58`, and reads pre-denormalized Mongo documents,
   * `Mongo/app.py:64-244`). So the listener collects that superset ONCE at
-  * startup — the stops list, two whole-store grouped jobs, and one
-  * collect per analytic query whose rows split into its four service
-  * tags on the driver — and a request becomes an in-memory lookup +
-  * O(response bytes) of string assembly. No Spark job runs on the
-  * request path.
+  * startup — the stops list, one whole-store grouped job at the finest
+  * grain any route reads, and one collect per analytic query whose rows
+  * split into its four service tags on the driver — and a request
+  * becomes an in-memory lookup + O(response bytes) of string assembly,
+  * folding or filtering that one per-stop table the way the reference
+  * groups its per-stop document per request (`Mongo/app.py:67-113`).
+  * No Spark job runs on the request path.
   *
   * Memory: the collected state is ~the rendered schedule text (every
-  * departure-time string once for the timetable frame, once more for the
-  * public frame) — bounded by stop/route/schedule cardinality, NOT by
-  * corpus history, because the store itself is (SURVEY §3.3). The layout
-  * keeps it close to that text: per stop, the groups are parallel
-  * columns (no tuple per group), their times are ONE packed string, and
-  * the route names, headsigns and service ids (a few hundred distinct
-  * values against ~10^5 groups) are one shared `String`/`Some` each per
-  * build — one JVM object per row would cost several times its payload
-  * (Shark, SIGMOD'13, stores columns as arrays for the same reason).
-  * Retained heap of one build, measured on a 4-core box as the after-GC
-  * heap delta around `build`: 4.7 MB at sf0.01 (60 k entries) and 23 MB
-  * at sf0.1 (600 k entries). A serving replica holds it the way the
-  * reference's Flask process holds its CSV frames.
+  * departure-time string once) — bounded by stop/route/schedule
+  * cardinality, NOT by corpus history, because the store itself is
+  * (SURVEY §3.3). The layout keeps it close to that text: per stop, the
+  * groups are parallel columns (no tuple per group), their times are ONE
+  * packed string, and the route names, headsigns and service ids (a few
+  * hundred distinct values against ~10^5 groups) are one shared
+  * `String`/`Some` each per build — one JVM object per row would cost
+  * several times its payload (Shark, SIGMOD'13, stores columns as arrays
+  * for the same reason). Retained heap of one build, measured on a
+  * 4-core box as the after-GC heap delta around `build`: ~3.1 MB at
+  * sf0.01 (60 k entries) and 17.7 MB at sf0.1 (600 k entries). A serving
+  * replica holds it the way the reference's Flask process holds its CSV
+  * frames.
   *
   * Parity: the per-request assembly reuses the LISTENER's own render
   * helpers, and `HttpServeParitySpec` byte-compares every route against a
@@ -50,37 +52,45 @@ final class ServingCache private (
     val api: Map[(String, String), Vector[String]],
     /** The full `/get_stops` response body (static). */
     val stopsBody: String,
-    /** stop → its (route_long_name, trip_headsign) groups with their
-      * sorted departure CSVs: the whole document, no service filters (the
-      * /get_timetable frame), already in the response's group order. */
-    timetable: Map[String, ServingCache.TimetableGroups],
-    /** stop → its (service_id, short_name, headsign) groups over the
-      * PUBLIC services only, with arrival counts and sorted times CSVs —
-      * the /get_arrivals and /get_routes_for_stop base frame. */
-    public: Map[String, ServingCache.PublicGroups]) {
+    /** stop → its (service_id, route_long_name, route_short_name,
+      * trip_headsign) groups over the whole document, every service, with
+      * arrival counts and sorted times CSVs: the one table every store
+      * route folds or filters. */
+    groups: Map[String, ServingCache.StopGroups]) {
   import ServingCache._
 
+  /** Merges sorted times CSVs into one sorted CSV. The Java `String`
+    * sort agrees with Spark's `array_sort` (UTF-8 binary order) on the
+    * store's ASCII `HH:MM:SS` times, so a merged list equals the one the
+    * live face sorts (`ServingCacheSpec` checks both stores' times). */
   private def mergeTimes(csvs: Seq[String]): String = {
     val all = csvs.filter(_.nonEmpty).flatMap(_.split(",", -1))
     if (all.isEmpty) "" else all.sorted.mkString(",")
   }
 
-  def timetableRows(stopId: String): Option[Seq[(Option[String], Option[String], String)]] =
-    timetable.get(stopId).map(g => g.route.indices.map(i => (g.route(i), g.head(i), g.times(i))))
+  private def groupsOf(stopId: String): StopGroups =
+    groups.getOrElse(stopId, NoGroups)
 
-  private def publicOf(stopId: String): PublicGroups =
-    public.getOrElse(stopId, NoPublicGroups)
+  /** The whole document, every service, grouped by (route, head) and
+    * sorted nulls first — the order the live face returns. */
+  def timetableRows(stopId: String): Option[Seq[(Option[String], Option[String], String)]] =
+    groups.get(stopId).map { g =>
+      g.indices.groupBy(i => (g.route(i), g.head(i))).toSeq
+        .map { case ((route, head), is) => (route, head, mergeTimes(is.map(g.times(_)))) }
+        .sortBy { case (route, head, _) => (route, head) }(
+          Ordering.Tuple2(nullsFirst, nullsFirst))
+    }
 
   def routesForStop(stopId: String): Seq[(String, String)] = {
-    val g = publicOf(stopId)
-    g.indices.collect { case i if g.served(i) && g.short(i).isDefined =>
+    val g = groupsOf(stopId)
+    g.indices.collect { case i if g.isPublic(i) && g.served(i) && g.short(i).isDefined =>
       (g.short(i).get, g.head(i).get) }
       .distinct.sorted
   }
 
   def arrivalsGrouped(stopId: String, service: ServiceFilter): Seq[(Option[String], String, Long, String)] = {
-    val g = publicOf(stopId)
-    g.indices.filter(i => g.served(i) && g.runs(i, service))
+    val g = groupsOf(stopId)
+    g.indices.filter(i => g.isPublic(i) && g.served(i) && g.runs(i, service))
       .groupBy(i => (g.short(i), g.head(i).get))
       .toSeq
       .map { case ((short, head), is) =>
@@ -91,10 +101,10 @@ final class ServingCache private (
 
   def arrivalsFlat(stopId: String, short: String, head: String,
       service: ServiceFilter): Seq[String] = {
-    val g = publicOf(stopId)
+    val g = groupsOf(stopId)
     val merged = mergeTimes(g.indices
-      .filter(i => g.short(i).contains(short) && g.head(i).contains(head) &&
-        g.runs(i, service))
+      .filter(i => g.isPublic(i) && g.short(i).contains(short) &&
+        g.head(i).contains(head) && g.runs(i, service))
       .map(g.times(_)))
     if (merged.isEmpty) Seq.empty else merged.split(",", -1).toSeq
   }
@@ -108,12 +118,12 @@ object ServingCache {
     * are the right unit for the same reason `graft.Scale` sizes by rows:
     * byte stats of the resident store are encoding-blind, but every
     * cached map is O(entries) strings of ~bounded length. Calibration
-    * (retained heap per entry, see the memory note above): 82 B at sf0.01
-    * and 40 B at sf0.1, falling with scale towards the ~18 B of rendered
-    * text (each time twice, 8 chars + comma) as fixed per-stop and
+    * (retained heap per entry, see the memory note above): 52 B at sf0.01
+    * and 30 B at sf0.1, falling with scale towards the ~9 B of rendered
+    * text (each time once, 8 chars + comma) as fixed per-stop and
     * per-group costs amortize. The sf1 store (~6.0 M entries) thus
-    * extrapolates to at most ~230 MB (not measured), and the
-    * ceiling of 64 M entries caps the cache at ~1.2–2.4 GiB resident —
+    * extrapolates to at most ~180 MB (not measured), and the
+    * ceiling of 64 M entries caps the cache at ~0.6–1.8 GiB resident —
     * an order of magnitude of headroom over sf1 while still refusing the
     * 100× store a default-config caller would otherwise collect. */
   val MaxCacheEntries: Long = 64L * 1000 * 1000
@@ -163,24 +173,22 @@ object ServingCache {
     new Packed(b.toString, offsets)
   }
 
-  /** One stop's /get_timetable groups as parallel columns, sorted by
-    * (route, head) nulls first — the order the live face returns. */
-  private[tools] final class TimetableGroups(val route: Array[Option[String]],
-      val head: Array[Option[String]], val times: Packed)
-
-  /** One stop's public (service_id, short, head) groups as parallel
+  /** One stop's (service_id, route, short, head) groups as parallel
     * columns, in collect order (every accessor re-groups or re-sorts). */
-  private[tools] final class PublicGroups(val sid: Array[String],
-      val short: Array[Option[String]], val head: Array[Option[String]],
-      val n: Array[Long], val times: Packed) {
+  private[tools] final class StopGroups(val sid: Array[Option[String]],
+      val route: Array[Option[String]], val short: Array[Option[String]],
+      val head: Array[Option[String]], val n: Array[Long], val times: Packed) {
     def indices: Range = sid.indices
+    /** Group `i` runs on a public service (a NULL service is not one) —
+      * the allow-list of every arrivals-style route. */
+    def isPublic(i: Int): Boolean = sid(i).exists(ServiceFilter.publicServices.contains)
     /** Group `i` names a real headsign (the grouped/route-list filter). */
     def served(i: Int): Boolean = head(i).exists(_ != "NOT IN SERVICE")
-    def runs(i: Int, service: ServiceFilter): Boolean = service.sid.forall(_ == sid(i))
+    def runs(i: Int, service: ServiceFilter): Boolean = service.sid.forall(sid(i).contains)
   }
 
-  private val NoPublicGroups =
-    new PublicGroups(Array.empty, Array.empty, Array.empty, Array.empty, pack(Nil))
+  private val NoGroups = new StopGroups(Array.empty, Array.empty, Array.empty,
+    Array.empty, Array.empty, pack(Nil))
 
   /** Option[String] ordering matching Spark's asc_nulls_first. */
   private val nullsFirst: Ordering[Option[String]] =
@@ -192,8 +200,6 @@ object ServingCache {
     val stopsBody = Timetable.getStops(timetables)
       .toJSON.collect().mkString("[", ",", "]")
 
-    val ex = timetables.select(col("stop_id"),
-      explode(col("upcoming_services")).as("svc"))
     // the dimension values (route names, headsigns, service ids) of THIS
     // build: each distinct value becomes one String and one Some, shared by
     // every group that names it. The table dies with the build, so a
@@ -202,41 +208,24 @@ object ServingCache {
     val dims = new java.util.HashMap[String, Some[String]]()
     def dim(s: String): Option[String] =
       if (s == null) None else dims.computeIfAbsent(s, Some(_))
-    def byStop(rows: Array[Row]): Map[String, Array[Row]] =
-      rows.groupBy(r => String.valueOf(r.get(0)))
 
-    // one grouped pass over the whole store per frame (NOT a job per stop):
-    // the same group-by the per-request engine faces run, plus the stop key
-    val ttRows = ex.groupBy(col("stop_id"),
-        col("svc.route_long_name").as("route"),
-        col("svc.trip_headsign").as("head"))
-      .agg(concat_ws(",", array_sort(collect_list(col("svc.departure_time"))))
-        .as("times"))
+    // one grouped pass over the whole store (NOT a job per stop): the
+    // group-by the per-request engine faces run, at the finest grain any
+    // of them reads, plus the stop key
+    val rows = timetables
+      .select(col("stop_id"), explode(col("upcoming_services")).as("svc"))
+      .groupBy(col("stop_id"), col("svc.service_id"), col("svc.route_long_name"),
+        col("svc.route_short_name"), col("svc.trip_headsign"))
+      .agg(count(lit(1)),
+        concat_ws(",", array_sort(collect_list(col("svc.departure_time")))))
       .collect()
-    val timetable = byStop(ttRows).map { case (stop, rs) =>
-      val groups = rs.toSeq
-        .map(r => (dim(r.getString(1)), dim(r.getString(2)), r.getString(3)))
-        .sortBy { case (route, head, _) => (route, head) }(
-          Ordering.Tuple2(nullsFirst, nullsFirst))
-      stop -> new TimetableGroups(groups.map(_._1).toArray, groups.map(_._2).toArray,
-        pack(groups.map(_._3)))
-    }
-
-    val pubRows = ex
-      .filter(col("svc.service_id").isin(ServiceFilter.publicServices: _*))
-      .groupBy(col("stop_id"), col("svc.service_id").as("sid"),
-        col("svc.route_short_name").as("short"),
-        col("svc.trip_headsign").as("head"))
-      .agg(count(lit(1)).as("n"),
-        concat_ws(",", array_sort(collect_list(col("svc.departure_time"))))
-          .as("times"))
-      .collect()
-    val public = byStop(pubRows).map { case (stop, rs) =>
-      stop -> new PublicGroups(rs.map(r => dim(r.getString(1)).get),
+    val groups = rows.groupBy(r => String.valueOf(r.get(0))).map { case (stop, rs) =>
+      stop -> new StopGroups(rs.map(r => dim(r.getString(1))),
         rs.map(r => dim(r.getString(2))), rs.map(r => dim(r.getString(3))),
-        rs.map(_.getLong(4)), pack(rs.toSeq.map(_.getString(5))))
+        rs.map(r => dim(r.getString(4))), rs.map(_.getLong(5)),
+        pack(rs.toSeq.map(_.getString(6))))
     }
 
-    new ServingCache(api, stopsBody, timetable, public)
+    new ServingCache(api, stopsBody, groups)
   }
 }

@@ -186,6 +186,57 @@ class HttpServeParitySpec extends SparkSpec {
     })
   }
 
+  test("a trip on a non-public service shows in the timetable only, in both modes") {
+    // the fixture's calendar lists service 9, but no fixture trip runs on
+    // it: add one that stops at HUB under a headsign of its own
+    val dir = java.nio.file.Paths.get(GtfsFixture.feedDir())
+    def append(name: String, line: String): Unit =
+      java.nio.file.Files.writeString(dir.resolve(name), line + "\n",
+        java.nio.file.StandardOpenOption.APPEND)
+    append("trips.txt", "T9,R1,9,Depot,0,,,")
+    append("stop_times.txt", "T9,07:30:00,07:30:00,HUB,1,,,,0.0")
+    append("stop_times.txt", "T9,07:40:00,07:40:00,A,2,,,,1.0")
+    val t9 = graft.sources.GtfsReader.readFeed(spark, dir.toString)
+    val docs9 = Timetable.buildStopTimetables(t9).cache()
+    val svc = new QueryService(t9)
+    val c = HttpServe.start(svc, docs9, 0, withCache = Some(true))
+    val l = HttpServe.start(svc, docs9, 0, withCache = Some(false))
+    try {
+      val grouped = Seq("", "1", "2", "3", "4", "9")
+        .map(v => s"/get_arrivals?stop_id=HUB&service_id=$v")
+      val flat = Seq("", "4", "9").map(v =>
+        s"/get_arrivals?stop_id=HUB&route_short_name=504&trip_headsign=Depot&service_id=$v")
+      assertParity(allRoutes ++ grouped ++ flat, c, l)
+      assert(get(c, "/get_timetable?stop_id=HUB")._2.contains("07:30:00"),
+        "the timetable renders the whole document, every service")
+      val routes = get(c, "/get_routes_for_stop?stop_id=HUB")._2
+      assert(!routes.contains("Depot"), s"a non-public trip listed as a route: $routes")
+      (grouped ++ flat).foreach { p =>
+        val (code, body) = get(c, p)
+        assert(code == 200 && !body.contains("07:30:00") && !body.contains("Depot"),
+          s"a non-public trip served on $p: $body")
+      }
+    } finally { c.stop(); l.stop(); docs9.unpersist() }
+  }
+
+  test("an empty store answers every route identically in both modes, without a 500") {
+    val empty = docs.limit(0)
+    val svc = new QueryService(t)
+    val c = HttpServe.start(svc, empty, 0, withCache = Some(true))
+    val l = HttpServe.start(svc, empty, 0, withCache = Some(false))
+    try {
+      assert(c.cached && !l.cached)
+      val paths = allRoutes ++ Seq("/get_arrivals?stop_id=HUB",
+        "/get_arrivals?stop_id=HUB&route_short_name=504&trip_headsign=Downtown")
+      assertParity(paths, c, l)
+      paths.foreach(p => assert(get(c, p)._1 != 500, s"$p failed on an empty store"))
+      Seq(c, l).foreach { h =>
+        val (code, body) = get(h, "/servez")
+        assert(code == 200 && body.contains(""""store_entries":0,"""), body)
+      }
+    } finally { c.stop(); l.stop(); empty.unpersist() }
+  }
+
   /** The production key type: the numeric-keyed store the transit
     * tables build (stop_id BIGINT, route_short_name null on every 17th
     * route). */

@@ -1,14 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.functions.{col, lit, when}
+import org.apache.spark.sql.functions.{array_sort, col, lit, when}
 
 import graft.SparkSpec
 import graft.transit._
 
 /** The compact serving layout, checked only through the public accessors
   * the listener calls: dimension values are shared within one build, the
-  * timetable groups come back in the live face's order, and a build is a
-  * pure function of the store. */
+  * timetable groups come back in the live face's order, a build is a
+  * pure function of the store, and the driver's time sort is Spark's. */
 class ServingCacheSpec extends SparkSpec {
 
   private lazy val t = GtfsFixture.tables(spark)
@@ -76,5 +76,25 @@ class ServingCacheSpec extends SparkSpec {
     val a = cache.timetableRows("HUB").get.head._1
     val b = again.timetableRows("HUB").get.head._1
     assert(a == b && !(a eq b), "a rebuild must not reuse another build's values")
+  }
+
+  test("the driver's String sort of a stop's times is Spark's array_sort: every time is ASCII HH:MM:SS") {
+    // mergeTimes re-sorts collected times as Java Strings (UTF-16 order)
+    // while the live faces sort with array_sort (UTF-8 binary order); the
+    // two agree on the store's ASCII HH:MM:SS times
+    val sf = Timetable.buildStopTimetables(TransitTables.fromTpch(spark, "/root/testdata/sf0.001"))
+    val hhmmss = "[0-9]{2}:[0-9]{2}:[0-9]{2}"
+    Seq("fixture" -> docs, "sf0.001" -> sf).foreach { case (name, d) =>
+      val rows = d.select(col("stop_id").cast("string"),
+          col("upcoming_services.departure_time"),
+          array_sort(col("upcoming_services.departure_time")))
+        .collect()
+      assert(rows.exists(_.getSeq[String](1).size > 1), s"$name: no stop has two times")
+      rows.foreach { r =>
+        val times = r.getSeq[String](1)
+        times.foreach(x => assert(x != null && x.matches(hhmmss), s"$name ${r.getString(0)}: $x"))
+        assert(times.sorted == r.getSeq[String](2), s"$name ${r.getString(0)}")
+      }
+    }
   }
 }
