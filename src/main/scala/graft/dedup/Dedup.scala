@@ -43,7 +43,7 @@ object Dedup {
       col("doc_id"),
       // native fused pass (ShingleSetExpr); TextHash.shingleSet remains
       // the interpreted executable spec it is asserted against
-      graft.functions.GraftFunctions.shingleSet(docs.sparkSession, col("text"))
+      graft.functions.GraftFunctions.shingleSet(col("text"))
         .as("shs"))
 
   /** Exploded (doc_id, n, shingle) frame with its self-join barrier, and
@@ -88,7 +88,7 @@ object Dedup {
       col("doc_id"), col("shs"),
       // native codegen'd signature (MinHashSigExpr); TextHash.minhashSig
       // remains the interpreted executable spec it is asserted against
-      graft.functions.GraftFunctions.minhash32(spark, col("shs")).as("sig"))
+      graft.functions.GraftFunctions.minhash32(col("shs")).as("sig"))
       // explicit barrier: every consumer (band sides x/y, sig sides s1/s2)
       // reads this one exchange via ReuseExchange instead of recomputing
       // the signature pipeline per reference — measured 7 scans → 1
@@ -102,7 +102,7 @@ object Dedup {
   private[graft] def bandsOf(docs: DataFrame): DataFrame =
     bandsFromSigs(shingleSetsOf(docs).select(
       col("doc_id"), col("shs"),
-      graft.functions.GraftFunctions.minhash32(docs.sparkSession, col("shs"))
+      graft.functions.GraftFunctions.minhash32(col("shs"))
         .as("sig")))
 
   private def bandsRaw(spark: SparkSession, dir: String): DataFrame =
@@ -286,7 +286,7 @@ object Dedup {
         .map(_.asInstanceOf[Long]).getOrElse(0L))
     val pos = docs
       .select(col("doc_id"), posexplode(
-        graft.functions.GraftFunctions.shingleAll(spark, col("text"))))
+        graft.functions.GraftFunctions.shingleAll(col("text"))))
       .toDF("doc_id", "pos", "s")
       // barrier: the occurrence agg and the flag join-back both consume
       // this frame; localCheckpoint materializes the (hash, pos) rows once
@@ -413,8 +413,7 @@ object Dedup {
     val sh = Tables.documents(spark, dir).select(
       col("doc_id"),
       graft.functions.GraftFunctions
-        .simhash32(spark,
-          graft.functions.GraftFunctions.tokenHashes(spark, col("text"))).as("sh"))
+        .simhash32(graft.functions.GraftFunctions.tokenHashes(col("text"))).as("sh"))
     val vals = sh.groupBy(col("sh"))
       .agg(slice(sort_array(collect_list(col("doc_id"))), 1, 21).as("ids"))
       // barrier: the slice sides and the id re-attach joins all reuse this
@@ -504,13 +503,13 @@ object Dedup {
     val planes = annPlanesFor(base.count())
     val e = base.select(
       col("vec_id"), col("embedding"),
-      graft.functions.GraftFunctions.l2norm(spark, col("embedding")).as("nrm"),
+      graft.functions.GraftFunctions.l2norm(col("embedding")).as("nrm"),
       lshBucket(col("embedding"), 64, planes).as("bucket"))
     e.as("a").join(e.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("id1"), col("b.vec_id").as("id2"),
         col("a.bucket").as("bucket"),
-        round(graft.functions.GraftFunctions.dot(spark, col("a.embedding"), col("b.embedding")) /
+        round(graft.functions.GraftFunctions.dot(col("a.embedding"), col("b.embedding")) /
           (col("a.nrm") * col("b.nrm")), 6).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("id1"), col("id2"))
       .limit(20)
@@ -934,16 +933,16 @@ object Dedup {
     // the tokenize+hash scan; with it, ReuseExchange computes the
     // pipeline once (the same measured pattern as sigs/lshRecallAudit)
     val sh = Tables.documents(spark, dir).select(col("source"),
-      explode(graft.functions.GraftFunctions.shingleSet(spark, col("text"))).as("h"))
+      explode(graft.functions.GraftFunctions.shingleSet(col("text"))).as("h"))
       .repartition(col("h"))
     val sk = sh.groupBy(col("source"))
-      .agg(graft.functions.GraftFunctions.thetaSketch(spark, col("h")).as("sk"))
+      .agg(graft.functions.GraftFunctions.thetaSketch(col("h")).as("sk"))
     val est = sk.select(col("source").as("source_a"), col("sk").as("sk_a"))
       .join(sk.select(col("source").as("source_b"), col("sk").as("sk_b")),
         col("source_a") < col("source_b"))
       .select(col("source_a"), col("source_b"),
         graft.functions.GraftFunctions
-          .thetaIntersect(spark, col("sk_a"), col("sk_b")).as("est"))
+          .thetaIntersect(col("sk_a"), col("sk_b")).as("est"))
     val dsh = sh.distinct()
     val exact = dsh.select(col("source").as("source_a"), col("h"))
       .join(dsh.select(col("source").as("source_b"), col("h")), Seq("h"))

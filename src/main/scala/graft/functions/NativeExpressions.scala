@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.classic.GraftPlanShim.{column, expression => expr}
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Native Catalyst expression for the 32-bit SimHash over token hashes.
@@ -399,8 +398,7 @@ case class TokenHashesExpr(child: Expression) extends UnaryExpression {
   * hashes in one pass (token md5s + rolling combine + LinkedHashSet dedup),
   * replacing the interpreted tokenHashes→shingleHashes→array_distinct
   * 3-layer higher-order pipeline — the measured floor cost (~1.2 s at
-  * sf0.1) of every shingle-based dedup query. `n` arrives as a foldable
-  * int literal so the function registry builder stays `Seq[Expression]`. */
+  * sf0.1) of every shingle-based dedup query. */
 case class ShingleSetExpr(child: Expression, n: Int) extends UnaryExpression {
   import org.apache.spark.sql.catalyst.expressions.codegen.Block._
   import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
@@ -705,217 +703,97 @@ case class BloomMightContainExpr(child: Expression, bloomBytes: Array[Byte])
     copy(child = newChild)
 }
 
-/** Session-level registration for graft native expressions. Idempotent;
-  * query builders call the accessors which register on first use per
-  * session. (Production would instead wire these through
-  * `SparkSessionExtensions.injectFunction`.) */
+/** Column accessors for the graft native expressions. Each one builds its
+  * expression with the constructor and wraps it as a [[Column]], the way
+  * Spark's own `functions` object does, so no session's function registry
+  * is written or read: a face resolves to the same expressions in any
+  * session. The aggregates are wrapped with `toAggregateExpression()`, as
+  * the analyzer wraps a resolved aggregate call. */
 object GraftFunctions {
 
-  /** The single source of truth for the native-function surface: the lazy
-    * per-session [[register]] path and the build-time
-    * [[GraftSparkExtensions]] wiring both iterate THIS list, so a new
-    * expression added here reaches SQL-only sessions automatically (the
-    * extensions class used to hand-copy 7 of the entries and silently
-    * drop the other 10 from `--conf spark.sql.extensions` sessions). */
-  private[functions] val fns: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
-    ("graft_simhash32", classOf[SimHash32Expr],
-      (es: Seq[Expression]) => SimHash32Expr(es.head)),
-    ("graft_minhash32", classOf[MinHashSigExpr],
-      (es: Seq[Expression]) => MinHashSigExpr(es.head)),
-    ("graft_dot", classOf[DotProductExpr],
-      (es: Seq[Expression]) => DotProductExpr(es(0), es(1))),
-    ("graft_token_hashes", classOf[TokenHashesExpr],
-      (es: Seq[Expression]) => TokenHashesExpr(es.head)),
-    ("graft_shingle_set", classOf[ShingleSetExpr],
-      (es: Seq[Expression]) => ShingleSetExpr(es.head,
-        es(1).eval().asInstanceOf[Int])),
-    ("graft_shingle_all", classOf[ShingleAllExpr],
-      (es: Seq[Expression]) => ShingleAllExpr(es.head,
-        es(1).eval().asInstanceOf[Int])),
-    ("graft_pretoken_stats", classOf[PreTokenStatsExpr],
-      (es: Seq[Expression]) => PreTokenStatsExpr(es.head)),
-    ("graft_pii_scan", classOf[PiiScanExpr],
-      (es: Seq[Expression]) => PiiScanExpr(es.head)),
-    ("graft_pq_encode", classOf[PqEncodeExpr],
-      (es: Seq[Expression]) => PqEncodeExpr(es.head)),
-    ("graft_pyround", classOf[PyRoundExpr],
-      (es: Seq[Expression]) => PyRoundExpr(es.head,
-        es(1).eval().asInstanceOf[Int])),
-    ("graft_bloom_contains", classOf[BloomMightContainExpr],
-      (es: Seq[Expression]) => BloomMightContainExpr(es.head,
-        es(1).eval().asInstanceOf[Array[Byte]])),
-    ("graft_topk_words", classOf[TopKSketchAgg],
-      (es: Seq[Expression]) => TopKSketchAgg(es.head,
-        es(1).eval().asInstanceOf[Int], es(2).eval().asInstanceOf[Int])),
-    ("graft_theta_sketch", classOf[ThetaSketchAgg],
-      (es: Seq[Expression]) => ThetaSketchAgg(es.head,
-        es(1).eval().asInstanceOf[Int])),
-    ("graft_theta_intersect", classOf[ThetaIntersectExpr],
-      (es: Seq[Expression]) => ThetaIntersectExpr(es(0), es(1))),
-    ("graft_kll_sketch", classOf[KllSketchAgg],
-      (es: Seq[Expression]) => KllSketchAgg(es.head,
-        es(1).eval().asInstanceOf[Int])),
-    ("graft_kll_merge", classOf[KllMergeAgg],
-      (es: Seq[Expression]) => KllMergeAgg(es.head,
-        es(1).eval().asInstanceOf[Int])),
-    ("graft_kll_quantile", classOf[KllQuantileExpr],
-      (es: Seq[Expression]) => KllQuantileExpr(es(0), es(1))))
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    for ((name, cls, builder) <- fns)
-      if (!registry.functionExists(FunctionIdentifier(name))) {
-        registry.registerFunction(
-          FunctionIdentifier(name),
-          new ExpressionInfo(cls.getName, name), builder)
-      }
-  }
-
   /** Codegen'd SimHash over an array<bigint> column of token hashes. */
-  def simhash32(spark: SparkSession, tokenHashes: Column): Column = {
-    register(spark)
-    call_function("graft_simhash32", tokenHashes)
-  }
+  def simhash32(tokenHashes: Column): Column =
+    column(SimHash32Expr(expr(tokenHashes)))
 
   /** Codegen'd 32-hash MinHash signature over an array<bigint> of shingle
     * hashes. */
-  def minhash32(spark: SparkSession, shingles: Column): Column = {
-    register(spark)
-    call_function("graft_minhash32", shingles)
-  }
+  def minhash32(shingles: Column): Column =
+    column(MinHashSigExpr(expr(shingles)))
 
   /** Codegen'd float-array dot product (double accumulation). */
-  def dot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_dot", a, b)
-  }
+  def dot(a: Column, b: Column): Column =
+    column(DotProductExpr(expr(a), expr(b)))
 
-  def l2norm(spark: SparkSession, a: Column): Column =
-    org.apache.spark.sql.functions.sqrt(dot(spark, a, a))
+  def l2norm(a: Column): Column =
+    org.apache.spark.sql.functions.sqrt(dot(a, a))
 
   /** Codegen'd PQ encode (normalize + nearest-centroid codes) over an
     * array<float> embedding column. */
-  def pqEncode(spark: SparkSession, embedding: Column): Column = {
-    register(spark)
-    call_function("graft_pq_encode", embedding)
-  }
+  def pqEncode(embedding: Column): Column =
+    column(PqEncodeExpr(expr(embedding)))
 
   /** Codegen'd Bloom membership test of a BIGINT key against a pre-built
     * serialized [[org.apache.spark.util.sketch.BloomFilter]] — see
     * [[BloomMightContainExpr]] for the semi-join-reduction rationale. */
-  def bloomContains(spark: SparkSession, key: Column, bloomBytes: Array[Byte]): Column = {
-    register(spark)
-    call_function("graft_bloom_contains", key,
-      org.apache.spark.sql.functions.lit(bloomBytes))
-  }
+  def bloomContains(key: Column, bloomBytes: Array[Byte]): Column =
+    column(BloomMightContainExpr(expr(key), bloomBytes))
 
   /** Mergeable Misra–Gries top-`topN` heavy-hitters aggregate over a
     * string column, `k` counters per partial — see [[TopKSketchAgg]]. */
-  def topkSketch(spark: SparkSession, word: Column, k: Int, topN: Int): Column = {
-    register(spark)
-    call_function("graft_topk_words", word,
-      org.apache.spark.sql.functions.lit(k),
-      org.apache.spark.sql.functions.lit(topN))
-  }
+  def topkSketch(word: Column, k: Int, topN: Int): Column =
+    column(TopKSketchAgg(expr(word), k, topN).toAggregateExpression())
 
   /** Theta sketch aggregate (binary) over a BIGINT key — see
     * [[ThetaSketchAgg]] for the intersection-capable set algebra. */
-  def thetaSketch(spark: SparkSession, key: Column, lgK: Int = 14): Column = {
-    register(spark)
-    call_function("graft_theta_sketch", key,
-      org.apache.spark.sql.functions.lit(lgK))
-  }
+  def thetaSketch(key: Column, lgK: Int = 14): Column =
+    column(ThetaSketchAgg(expr(key), lgK).toAggregateExpression())
 
   /** |A ∩ B| estimate from two theta sketch columns. */
-  def thetaIntersect(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_theta_intersect", a, b)
-  }
+  def thetaIntersect(a: Column, b: Column): Column =
+    column(ThetaIntersectExpr(expr(a), expr(b)))
 
   /** KLL quantile sketch aggregate (binary) over a DOUBLE measure — see
     * [[KllSketchAgg]] for the mergeable-quantiles rationale. */
-  def kllSketch(spark: SparkSession, v: Column, k: Int = 200): Column = {
-    register(spark)
-    call_function("graft_kll_sketch", v,
-      org.apache.spark.sql.functions.lit(k))
-  }
+  def kllSketch(v: Column, k: Int = 200): Column =
+    column(KllSketchAgg(expr(v), k).toAggregateExpression())
 
   /** Union of serialized KLL sketch partials — see [[KllMergeAgg]]. */
-  def kllMerge(spark: SparkSession, sk: Column, k: Int = 200): Column = {
-    register(spark)
-    call_function("graft_kll_merge", sk,
-      org.apache.spark.sql.functions.lit(k))
-  }
+  def kllMerge(sk: Column, k: Int = 200): Column =
+    column(KllMergeAgg(expr(sk), k).toAggregateExpression())
 
   /** Quantile estimate at normalized rank `p` from a KLL sketch column. */
-  def kllQuantile(spark: SparkSession, sk: Column, p: Column): Column = {
-    register(spark)
-    call_function("graft_kll_quantile", sk, p)
-  }
+  def kllQuantile(sk: Column, p: Column): Column =
+    column(KllQuantileExpr(expr(sk), expr(p)))
 
   /** Codegen'd per-token [[TextHash.strHash]] over a text column (split
     * with the canonical whitespace tokenizer first). */
-  def tokenHashes(spark: SparkSession, text: Column): Column = {
-    register(spark)
-    call_function("graft_token_hashes", TextHash.tokens(text))
-  }
+  def tokenHashes(text: Column): Column =
+    column(TokenHashesExpr(expr(TextHash.tokens(text))))
 
   /** Codegen'd fused distinct word-n-gram shingle hashes over a text
     * column — [[TextHash.shingleSet]] as one native pass. */
-  def shingleSet(spark: SparkSession, text: Column, n: Int = 3): Column = {
-    register(spark)
-    call_function("graft_shingle_set", TextHash.tokens(text),
-      org.apache.spark.sql.functions.lit(n))
-  }
+  def shingleSet(text: Column, n: Int = 3): Column =
+    column(ShingleSetExpr(expr(TextHash.tokens(text)), n))
 
   /** Codegen'd ALL-occurrence word-n-gram shingle hashes (multiplicity
     * kept, position order) over a text column —
     * `TextHash.shingleHashes(tokenHashes(text), n)` as one native pass. */
-  def shingleAll(spark: SparkSession, text: Column, n: Int = 3): Column = {
-    register(spark)
-    call_function("graft_shingle_all", TextHash.tokens(text),
-      org.apache.spark.sql.functions.lit(n))
-  }
+  def shingleAll(text: Column, n: Int = 3): Column =
+    column(ShingleAllExpr(expr(TextHash.tokens(text)), n))
 
   /** Codegen'd BPE pre-tokenization census (one char scan) — struct of
     * (n_pretokens, n_word, n_number, n_punct, n_vocab); see
     * [[PreTokenStatsExpr]]. */
-  def preTokenStats(spark: SparkSession, text: Column): Column = {
-    register(spark)
-    call_function("graft_pretoken_stats", text)
-  }
+  def preTokenStats(text: Column): Column =
+    column(PreTokenStatsExpr(expr(text)))
 
   /** Codegen'd fused PII scrub census — struct of (n_emails, n_phones,
     * redacted_tail); see [[PiiScanExpr]]. */
-  def piiScan(spark: SparkSession, text: Column): Column = {
-    register(spark)
-    call_function("graft_pii_scan", text)
-  }
+  def piiScan(text: Column): Column =
+    column(PiiScanExpr(expr(text)))
 
   /** Python-serializer-faithful display rounding (exact-binary half-even;
     * see [[PyRoundExpr]]). */
-  def pyRound(spark: SparkSession, c: Column, scale: Int): Column = {
-    register(spark)
-    call_function("graft_pyround", c, org.apache.spark.sql.functions.lit(scale))
-  }
-}
-
-/** Production wiring: `--conf spark.sql.extensions=graft.functions.GraftSparkExtensions`
-  * injects the native functions into every session at build time (no
-  * per-session lazy registration needed). The lazy [[GraftFunctions.register]]
-  * path remains for sessions created without the conf (tests, driver). */
-class GraftSparkExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    // inject the WHOLE registry (GraftFunctions.fns — the same list the
-    // lazy register() path uses), so a SQL-only session sees every
-    // graft_* function, not a hand-copied subset
-    for ((name, cls, builder) <- GraftFunctions.fns)
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(cls.getName, name), builder))
-    // the custom whole-operator plan (as-of merge scan) rides the same
-    // production wiring; AsOfJoin.enable's experimental-strategies path
-    // remains for sessions created without the conf
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-  }
+  def pyRound(c: Column, scale: Int): Column =
+    column(PyRoundExpr(expr(c), scale))
 }

@@ -81,14 +81,6 @@ object TextHash {
         j => aggregate(sh, lit(P),
           (m, s) => least(m, ((j * 2L + 1L) * s + j * 12345L + 7L) % P))))
 
-  /** LSH band hash over signature positions [from, from+rows): polynomial
-    * fold with multiplier 131, seed 17, mod P. */
-  def bandHash(sig: Column, from: Int, rows: Int): Column = {
-    var acc: Column = lit(17L)
-    for (k <- 0 until rows) acc = (acc * 131L + element_at(sig, from + k + 1)) % P
-    acc
-  }
-
   /** 32-bit SimHash over token hashes: bit b is set iff the sum of
     * (+1 if bit b of token hash else -1) over tokens is positive.
     * The 2^b constants are hoisted into a let-bound array so the inner
@@ -185,12 +177,6 @@ object TextHashSql {
   def minhashSig(shingles: String, k: Int = 32): String =
     s"list_transform(range(0, $k), j -> list_reduce(list_prepend(CAST($P AS BIGINT), " +
       s"list_transform($shingles, s -> ((j*2 + 1)*s + j*12345 + 7) % $P)), (a, b) -> least(a, b)))"
-
-  def bandHash(sig: String, from: Int, rows: Int): String = {
-    var acc = "CAST(17 AS BIGINT)"
-    for (k <- 0 until rows) acc = s"(($acc)*131 + $sig[${from + k + 1}]) % $P"
-    acc
-  }
 
   def simhash32(th: String): String =
     s"list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(range(0, 32), b -> " +

@@ -171,8 +171,10 @@ case class AsOfJoinExec(
     copy(left = newLeft, right = newRight)
 }
 
-/** DataFrame-level API + per-session strategy wiring (idempotent, the
-  * same lazy pattern as [[graft.functions.GraftFunctions.register]]). */
+/** DataFrame-level API + per-session strategy wiring: [[enable]] adds
+  * [[AsOfJoinStrategy]] to a session's extra strategies once (idempotent),
+  * and [[backward]] calls it, so every session that plans an as-of join
+  * has the strategy. */
 object AsOfJoin {
 
   def enable(spark: SparkSession): Unit = synchronized {

@@ -44,7 +44,7 @@ object BloomJoin {
       .select(col("o_orderkey"))
     val bytes = buildBloom(urgent, "o_orderkey")
     val li = Tables.lineitem(spark, dir)
-      .filter(GraftFunctions.bloomContains(spark, col("l_orderkey"), bytes))
+      .filter(GraftFunctions.bloomContains(col("l_orderkey"), bytes))
       .select(col("l_orderkey"),
         col("l_returnflag"),
         (col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("rev"))

@@ -1935,13 +1935,13 @@ object RelationalQueries {
     val est = ev
       .withColumn("shard", pmod(col("event_id"), lit(16L)))
       .groupBy(col("event_type"), col("shard"))
-      .agg(GraftFunctions.kllSketch(spark, col("value")).as("sk"))
+      .agg(GraftFunctions.kllSketch(col("value")).as("sk"))
       .groupBy(col("event_type"))
-      .agg(GraftFunctions.kllMerge(spark, col("sk")).as("sk"))
+      .agg(GraftFunctions.kllMerge(col("sk")).as("sk"))
       .select(col("event_type"),
-        GraftFunctions.kllQuantile(spark, col("sk"), lit(0.5)).as("e50"),
-        GraftFunctions.kllQuantile(spark, col("sk"), lit(0.9)).as("e90"),
-        GraftFunctions.kllQuantile(spark, col("sk"), lit(0.99)).as("e99"))
+        GraftFunctions.kllQuantile(col("sk"), lit(0.5)).as("e50"),
+        GraftFunctions.kllQuantile(col("sk"), lit(0.9)).as("e90"),
+        GraftFunctions.kllQuantile(col("sk"), lit(0.99)).as("e99"))
     val n = ev.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
     // exact order statistics at ceil(p·n) — integer rank targets, ties
     // broken by event_id so the selected VALUE is position-determined

@@ -42,19 +42,19 @@ object Similarity {
     val e = Tables.embeddings(spark, dir)
     val q = e.filter(col("vec_id") < QuerySet)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"),
-        graft.functions.GraftFunctions.l2norm(spark, col("embedding")).as("qn"))
+        graft.functions.GraftFunctions.l2norm(col("embedding")).as("qn"))
     val c = e.select(col("vec_id").as("cid"), col("embedding").as("cv"),
-      graft.functions.GraftFunctions.l2norm(spark, col("embedding")).as("cn"))
+      graft.functions.GraftFunctions.l2norm(col("embedding")).as("cn"))
     ranked(broadcast(q).join(c, col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
-        (graft.functions.GraftFunctions.dot(spark, col("qv"), col("cv")) / (col("qn") * col("cn"))).as("raw")))
+        (graft.functions.GraftFunctions.dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("raw")))
   }
 
   /** LSH-bucketed ANN: candidates restricted to the query's hyperplane
     * bucket; norms precomputed like [[knnBrute]]. */
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir).select(
-      col("vec_id"), col("embedding"), graft.functions.GraftFunctions.l2norm(spark, col("embedding")).as("nrm"),
+      col("vec_id"), col("embedding"), graft.functions.GraftFunctions.l2norm(col("embedding")).as("nrm"),
       lshBucket(col("embedding"), 64, graft.dedup.Dedup.AnnPlanes).as("bucket"))
     val q = e.filter(col("vec_id") < QuerySet)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"),
@@ -64,7 +64,7 @@ object Similarity {
     ranked(q.join(c, Seq("bucket"))
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
-        (graft.functions.GraftFunctions.dot(spark, col("qv"), col("cv")) / (col("qn") * col("cn"))).as("raw")))
+        (graft.functions.GraftFunctions.dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("raw")))
   }
 
   val IvfCells = 8
@@ -114,7 +114,7 @@ object Similarity {
   def annIvf(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir).select(
       col("vec_id"), col("embedding"),
-      graft.functions.GraftFunctions.l2norm(spark, col("embedding")).as("nrm"),
+      graft.functions.GraftFunctions.l2norm(col("embedding")).as("nrm"),
       ivfCell(col("embedding")).as("cell"))
     val q = e.filter(col("vec_id") < QuerySet)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"),
@@ -124,7 +124,7 @@ object Similarity {
     ranked(q.join(c, Seq("cell"))
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
-        (graft.functions.GraftFunctions.dot(spark, col("qv"), col("cv")) /
+        (graft.functions.GraftFunctions.dot(col("qv"), col("cv")) /
           (col("qn") * col("cn"))).as("raw")))
   }
 
@@ -143,7 +143,7 @@ object Similarity {
       dir.replaceAll("[^A-Za-z0-9]", "_")
     val e = Tables.embeddings(spark, dir).select(
       col("vec_id"), col("embedding"),
-      graft.functions.GraftFunctions.l2norm(spark, col("embedding")).as("nrm"),
+      graft.functions.GraftFunctions.l2norm(col("embedding")).as("nrm"),
       ivfCell(col("embedding")).as("cell"))
     graft.sources.Writers.snapshotParquet(e, path, Seq("cell"))
     val idx = spark.read.parquet(path)
@@ -155,7 +155,7 @@ object Similarity {
     ranked(idx.join(broadcast(q), Seq("cell"))
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
-        (graft.functions.GraftFunctions.dot(spark, col("qv"), col("cv")) /
+        (graft.functions.GraftFunctions.dot(col("qv"), col("cv")) /
           (col("qn") * col("cn"))).as("raw")))
   }
 
@@ -168,18 +168,18 @@ object Similarity {
   def annIvfNprobe(spark: SparkSession, dir: String, nprobe: Int = 2): DataFrame = {
     val e = Tables.embeddings(spark, dir).select(
       col("vec_id"), col("embedding"),
-      graft.functions.GraftFunctions.l2norm(spark, col("embedding")).as("nrm"),
+      graft.functions.GraftFunctions.l2norm(col("embedding")).as("nrm"),
       ivfCell(col("embedding")).as("cell"))
     val q = Tables.embeddings(spark, dir).filter(col("vec_id") < QuerySet)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"),
-        graft.functions.GraftFunctions.l2norm(spark, col("embedding")).as("qn"),
+        graft.functions.GraftFunctions.l2norm(col("embedding")).as("qn"),
         explode(ivfTopN(col("embedding"), nprobe)).as("cell"))
     val c = e.select(col("vec_id").as("cid"), col("embedding").as("cv"),
       col("nrm").as("cn"), col("cell"))
     ranked(q.join(c, Seq("cell"))
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
-        (graft.functions.GraftFunctions.dot(spark, col("qv"), col("cv")) /
+        (graft.functions.GraftFunctions.dot(col("qv"), col("cv")) /
           (col("qn") * col("cn"))).as("raw")))
   }
 
@@ -193,7 +193,7 @@ object Similarity {
     val planes = graft.dedup.Dedup.AnnPlanes
     val e = Tables.embeddings(spark, dir).select(
       col("vec_id"), col("embedding"),
-      graft.functions.GraftFunctions.l2norm(spark, col("embedding")).as("nrm"),
+      graft.functions.GraftFunctions.l2norm(col("embedding")).as("nrm"),
       lshBucket(col("embedding"), 64, planes).as("bucket"))
     val probes = array(col("bucket") +:
       (0 until planes).map(j => col("bucket").bitwiseXOR(lit(1L << j))): _*)
@@ -205,7 +205,7 @@ object Similarity {
     ranked(q.join(c, Seq("bucket"))
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
-        (graft.functions.GraftFunctions.dot(spark, col("qv"), col("cv")) /
+        (graft.functions.GraftFunctions.dot(col("qv"), col("cv")) /
           (col("qn") * col("cn"))).as("raw")))
   }
 
@@ -310,13 +310,12 @@ object Similarity {
   /** L2-normalize before encoding: on unit vectors ||a−b||² = 2−2·cos,
     * so ADC's squared-L2 ranking IS the cosine ranking the brute oracle
     * uses — without this, PQ would rank by a different metric entirely. */
-  private def unitVec(spark: SparkSession, v: org.apache.spark.sql.Column) =
-    let(graft.functions.GraftFunctions.l2norm(spark, v))(n =>
+  private def unitVec(v: org.apache.spark.sql.Column) =
+    let(graft.functions.GraftFunctions.l2norm(v))(n =>
       transform(v, x => x.cast("double") / n))
 
   def annPq(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    def unit(v: org.apache.spark.sql.Column) = unitVec(spark, v)
     // Corpus side: native codegen'd encode (PqEncodeExpr — one Java loop
     // per vector; the interpreted let(unit)(pqCodes) stays the executable
     // spec, equivalence-tested). Query side: interpreted LUT build is
@@ -324,10 +323,10 @@ object Similarity {
     // normalized array would be re-normalized at each of the M×K×dims
     // references — measured 9.6 s → sub-second at sf0.1).
     val c = e.select(col("vec_id").as("cid"),
-      graft.functions.GraftFunctions.pqEncode(spark, col("embedding")).as("codes"))
+      graft.functions.GraftFunctions.pqEncode(col("embedding")).as("codes"))
     val q = e.filter(col("vec_id") < QuerySet)
       .select(col("vec_id").as("qid"),
-        let(unit(col("embedding")))(u => pqLut(u)).as("lut"))
+        let(unitVec(col("embedding")))(u => pqLut(u)).as("lut"))
     broadcast(q).join(c, col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"), pqAdc(col("lut"), col("codes")).as("raw"))
       .withColumn("neighbor_rank",
@@ -347,10 +346,10 @@ object Similarity {
   def annIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     val c = e.select(col("vec_id").as("cid"), ivfCell(col("embedding")).as("cell"),
-      graft.functions.GraftFunctions.pqEncode(spark, col("embedding")).as("codes"))
+      graft.functions.GraftFunctions.pqEncode(col("embedding")).as("codes"))
     val q = e.filter(col("vec_id") < QuerySet)
       .select(col("vec_id").as("qid"), ivfCell(col("embedding")).as("cell"),
-        let(unitVec(spark, col("embedding")))(u => pqLut(u)).as("lut"))
+        let(unitVec(col("embedding")))(u => pqLut(u)).as("lut"))
     q.join(c, Seq("cell"))
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"), pqAdc(col("lut"), col("codes")).as("raw"))
@@ -365,6 +364,12 @@ object Similarity {
 
   val KmeansK = 8
 
+  /** Milli-quantize a vector: each component to floor(x·1000 + 0.5) as a
+    * BIGINT (the [[quantizeInt8]] midpoint rule), so every sum over it is
+    * an exact integer in both engines. */
+  private def quant(v: org.apache.spark.sql.Column) =
+    transform(v, x => floor(x.cast("double") * 1000.0 + 0.5).cast("long"))
+
   /** One Lloyd (k-means) iteration, made bit-exact across engines: vectors
     * quantize to integers (floor(x·1000 + 0.5), the [[quantizeInt8]]
     * midpoint convention), distances are exact BIGINT squared-L2 sums, and
@@ -378,8 +383,6 @@ object Similarity {
     * 100 TB clustering iteration (no shuffle of the corpus; each further
     * Lloyd round repeats the same broadcast-assign-agg pipeline). */
   def kmeansUpdate(spark: SparkSession, dir: String): DataFrame = {
-    def quant(v: org.apache.spark.sql.Column) =
-      transform(v, x => floor(x.cast("double") * 1000.0 + 0.5).cast("long"))
     val e = Tables.embeddings(spark, dir)
     val cents = e.filter(col("vec_id") < KmeansK)
       .agg(array_sort(collect_list(struct(
@@ -423,8 +426,6 @@ object Similarity {
     * shuffles its vectors. */
   def centroidOutliers(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def quant(v: org.apache.spark.sql.Column) =
-      transform(v, x => floor(x.cast("double") * 1000.0 + 0.5).cast("long"))
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), quant(col("embedding")).as("q"))
     val sums = e.select(col("label"), posexplode(col("q")).as(Seq("pos", "qv")))
@@ -488,8 +489,6 @@ object Similarity {
     * w ≤ rows·600·(64·600·1000) — BIGINT-safe far past this corpus
     * (DECIMAL(38,0) is the documented swap at 10¹² rows). */
   def pcaPower(spark: SparkSession, dir: String): DataFrame = {
-    def quant(v: org.apache.spark.sql.Column) =
-      transform(v, x => floor(x.cast("double") * 1000.0 + 0.5).cast("long"))
     val q = Tables.embeddings(spark, dir)
       .select(col("vec_id"), quant(col("embedding")).as("qv"))
     def dimSums(withDot: DataFrame): DataFrame =
@@ -563,7 +562,7 @@ object Similarity {
   def normAudit(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .select(col("label"),
-        floor(graft.functions.GraftFunctions.l2norm(spark, col("embedding"))
+        floor(graft.functions.GraftFunctions.l2norm(col("embedding"))
           * 1e6 + 0.5).cast("long").as("q"))
       .groupBy(col("label"))
       .agg(count(lit(1)).as("n_vectors"),
@@ -601,9 +600,9 @@ object Similarity {
         slice(col("embedding"), 1, d).as("cv"))
       ranked(broadcast(q).join(c, col("qid") =!= col("cid"))
         .select(col("qid"), col("cid"),
-          (GraftFunctions.dot(spark, col("qv"), col("cv")) /
-            (GraftFunctions.l2norm(spark, col("qv")) *
-              GraftFunctions.l2norm(spark, col("cv")))).as("raw")))
+          (GraftFunctions.dot(col("qv"), col("cv")) /
+            (GraftFunctions.l2norm(col("qv")) *
+              GraftFunctions.l2norm(col("cv")))).as("raw")))
         .select(lit(d).as("dims"), col("qid"), col("cid"))
     }
     frames.reduce(_ unionByName _)
@@ -650,8 +649,6 @@ object Similarity {
     * 100 TB. Two (label, half) hash aggs + a label-keyed join of two
     * #labels-row frames. */
   def embeddingDrift(spark: SparkSession, dir: String): DataFrame = {
-    def quant(v: org.apache.spark.sql.Column) =
-      transform(v, x => floor(x.cast("double") * 1000.0 + 0.5).cast("long"))
     val halves = Tables.embeddings(spark, dir)
       .select(col("label"), (col("vec_id") % 2 === 0).as("old_half"),
         quant(col("embedding")).as("q"))
@@ -831,7 +828,7 @@ object Similarity {
   def semanticDedup(spark: SparkSession, dir: String): DataFrame = {
     val raw = Tables.embeddings(spark, dir).select(
       col("vec_id"), col("embedding"),
-      graft.functions.GraftFunctions.l2norm(spark, col("embedding")).as("nrm"),
+      graft.functions.GraftFunctions.l2norm(col("embedding")).as("nrm"),
       ivfCell(col("embedding")).as("coarse"),
       graft.functions.TextHash.lshBucket(col("embedding"), 64, SemSubPlanes)
         .as("fine"))
@@ -860,7 +857,7 @@ object Similarity {
     val dropped = e.as("a").join(e.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .filter(round(
-          graft.functions.GraftFunctions.dot(spark, col("a.embedding"), col("b.embedding")) /
+          graft.functions.GraftFunctions.dot(col("a.embedding"), col("b.embedding")) /
             (col("a.nrm") * col("b.nrm")), 6) >= SemTau)
       .select(col("b.vec_id").as("vec_id"), col("b.cell").as("cell"))
       .distinct()
@@ -898,7 +895,7 @@ object Similarity {
     // reference — the [[semanticDedup]] defect class (guide §1.2).
     val e = base.select(
       col("vec_id"), col("embedding"),
-      graft.functions.GraftFunctions.l2norm(spark, col("embedding")).as("nrm"),
+      graft.functions.GraftFunctions.l2norm(col("embedding")).as("nrm"),
       lshBucket(col("embedding"), 64, planes).as("bucket"))
       .localCheckpoint()
     val q = e.select(col("vec_id").as("qid"), col("embedding").as("qv"),
@@ -907,7 +904,7 @@ object Similarity {
       col("nrm").as("cn"), col("bucket"))
     val pairs = q.join(c, Seq("bucket")).filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
-        (graft.functions.GraftFunctions.dot(spark, col("qv"), col("cv")) /
+        (graft.functions.GraftFunctions.dot(col("qv"), col("cv")) /
           (col("qn") * col("cn"))).as("raw"))
     val kth = pairs
       .withColumn("rn", row_number().over(
@@ -950,7 +947,7 @@ object Similarity {
   def tripletMining(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir).select(
       col("vec_id"), col("label"), col("embedding"),
-      graft.functions.GraftFunctions.l2norm(spark, col("embedding")).as("nrm"))
+      graft.functions.GraftFunctions.l2norm(col("embedding")).as("nrm"))
     val a = e.filter(col("vec_id") < TripletAnchors)
       .select(col("vec_id").as("anchor"), col("label").as("a_label"),
         col("embedding").as("av"), col("nrm").as("an"))
@@ -959,7 +956,7 @@ object Similarity {
           col("embedding").as("cv"), col("nrm").as("cn")),
         col("anchor") =!= col("cid"))
       .select(col("anchor"), col("a_label"), col("cid"), col("c_label"),
-        (graft.functions.GraftFunctions.dot(spark, col("av"), col("cv")) /
+        (graft.functions.GraftFunctions.dot(col("av"), col("cv")) /
           (col("an") * col("cn"))).as("raw"))
     // scan 1: BOTH extremes in one conditional aggregate — the Q×N pair
     // frame is never materialized (at corpus scale 40·N rows would be a
@@ -1025,7 +1022,7 @@ object Similarity {
     val b2 = lshBucket(col("embedding"), 64, 2 * planes)
     val e = base.select(
       col("vec_id"), col("embedding"),
-      graft.functions.GraftFunctions.l2norm(spark, col("embedding")).as("nrm"),
+      graft.functions.GraftFunctions.l2norm(col("embedding")).as("nrm"),
       (b2 % (1L << planes)).as("bucket1"),
       shiftright(b2, planes).as("bucket2"))
       .localCheckpoint(true)
@@ -1036,7 +1033,7 @@ object Similarity {
         col("nrm").as("cn"), col(bucket).as("b"))
       q.join(c, Seq("b")).filter(col("uid") =!= col("cid"))
         .select(col("uid"), col("cid"),
-          (graft.functions.GraftFunctions.dot(spark, col("qv"), col("cv")) /
+          (graft.functions.GraftFunctions.dot(col("qv"), col("cv")) /
             (col("qn") * col("cn"))).as("raw"))
         .withColumn("rn", row_number().over(
           Window.partitionBy(col("uid")).orderBy(col("raw").desc, col("cid"))))
@@ -1060,7 +1057,7 @@ object Similarity {
     ranked(cands.join(uf, Seq("uid")).join(cf, Seq("cand"))
       .filter(col("uid") < QuerySet)
       .select(col("uid").as("qid"), col("cand").as("cid"),
-        (graft.functions.GraftFunctions.dot(spark, col("uv"), col("fv")) /
+        (graft.functions.GraftFunctions.dot(col("uv"), col("fv")) /
           (col("un") * col("fn"))).as("raw")))
   }
 
@@ -1085,13 +1082,13 @@ object Similarity {
   def densityCores(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir).filter(col("vec_id") < DensityN)
       .select(col("vec_id"), col("embedding"),
-        graft.functions.GraftFunctions.l2norm(spark, col("embedding")).as("nrm"))
+        graft.functions.GraftFunctions.l2norm(col("embedding")).as("nrm"))
       .localCheckpoint(true)
     val b = e.select(col("vec_id").as("nbr"), col("embedding").as("bv"),
       col("nrm").as("bn"))
     val nbrs = e.as("a").join(broadcast(b), col("vec_id") =!= col("nbr"))
       .filter(round(
-          graft.functions.GraftFunctions.dot(spark, col("embedding"), col("bv")) /
+          graft.functions.GraftFunctions.dot(col("embedding"), col("bv")) /
             (col("nrm") * col("bn")), 6) >= DensityEps)
       .select(col("vec_id"), col("nbr"))
       .localCheckpoint(true)
@@ -1164,26 +1161,26 @@ object Similarity {
       slice(col("embedding"), 1, TruncDims).as("tv"))
     val q1 = trunc.filter(col("vec_id") < QuerySet)
       .select(col("vec_id").as("qid"), col("tv").as("qtv"),
-        graft.functions.GraftFunctions.l2norm(spark, col("tv")).as("qtn"))
+        graft.functions.GraftFunctions.l2norm(col("tv")).as("qtn"))
     val c1 = trunc.select(col("vec_id").as("cid"), col("tv").as("ctv"),
-      graft.functions.GraftFunctions.l2norm(spark, col("tv")).as("ctn"))
+      graft.functions.GraftFunctions.l2norm(col("tv")).as("ctn"))
     val cand = broadcast(q1).join(c1, col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
-        (graft.functions.GraftFunctions.dot(spark, col("qtv"), col("ctv")) /
+        (graft.functions.GraftFunctions.dot(col("qtv"), col("ctv")) /
           (col("qtn") * col("ctn"))).as("s1"))
       .withColumn("cand_rank", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("s1").desc, col("cid"))))
       .filter(col("cand_rank") <= candK)
       .select(col("qid"), col("cid"))
     val full = e.select(col("vec_id"), col("embedding"),
-      graft.functions.GraftFunctions.l2norm(spark, col("embedding")).as("nrm"))
+      graft.functions.GraftFunctions.l2norm(col("embedding")).as("nrm"))
     val qf = full.select(col("vec_id").as("qid"),
       col("embedding").as("qv"), col("nrm").as("qn"))
     val cf = full.select(col("vec_id").as("cid"),
       col("embedding").as("cv"), col("nrm").as("cn"))
     ranked(cand.join(broadcast(qf), Seq("qid")).join(cf, Seq("cid"))
       .select(col("qid"), col("cid"),
-        (graft.functions.GraftFunctions.dot(spark, col("qv"), col("cv")) /
+        (graft.functions.GraftFunctions.dot(col("qv"), col("cv")) /
           (col("qn") * col("cn"))).as("raw")))
   }
 }

@@ -612,24 +612,24 @@ object Streams {
     * cardinality at every gated SF (1 500 at sf0.1), so the batch face
     * runs in the sketch's exact regime and the oracle is the exact
     * per-type top-3. */
-  def topkUsers(spark: SparkSession, events: DataFrame): DataFrame =
+  def topkUsers(events: DataFrame): DataFrame =
     events
       .groupBy(col("event_type"))
       .agg(graft.functions.GraftFunctions
-        .topkSketch(spark, col("user_id").cast("string"), 4096, 3).as("top"))
+        .topkSketch(col("user_id").cast("string"), 4096, 3).as("top"))
       .select(col("event_type"), posexplode(col("top")))
       .select(col("event_type"), (col("pos") + 1).cast("int").as("rn"),
         col("col.word").as("user_key"), col("col.n").as("n"))
 
   def topkUsersBatch(spark: SparkSession, dir: String): DataFrame =
-    topkUsers(spark, Tables.events(spark, dir))
+    topkUsers(Tables.events(spark, dir))
       .orderBy(col("event_type"), col("rn"))
 
   /** The same aggregate over an unbounded source (complete output mode:
     * the state-store buffers are the MG partials; each micro-batch merges
     * new partials into them and re-emits the current top-3). */
-  def topkUsersStreaming(spark: SparkSession, events: DataFrame): DataFrame =
-    topkUsers(spark, events)
+  def topkUsersStreaming(events: DataFrame): DataFrame =
+    topkUsers(events)
 
   /** Watermark late-data accounting — the admission arithmetic Structured
     * Streaming applies, made exactly checkable: micro-batch assignment is

@@ -156,7 +156,7 @@ object TextAnalysis {
       // interpreted let(tokenHashes)→shingleHashes chain remains as the
       // executable spec (NativeExpressionsSpec equivalence)
       .select(explode(
-        graft.functions.GraftFunctions.shingleAll(spark, col("text"), n)).as("g"))
+        graft.functions.GraftFunctions.shingleAll(col("text"), n)).as("g"))
       .groupBy(col("g")).agg(count(lit(1)).as("c"))
       .agg(sum(col("c")).as("n_grams_total"),
         count(lit(1)).as("n_distinct"),
@@ -225,8 +225,8 @@ object TextAnalysis {
       md5(col("text").cast("binary")).as("md5_fp"),
       TextHash.rollHash(col("text")).as("roll_hash"),
       graft.functions.GraftFunctions
-        .simhash32(spark, graft.functions.GraftFunctions
-          .tokenHashes(spark, col("text"))).as("simhash"))
+        .simhash32(graft.functions.GraftFunctions
+          .tokenHashes(col("text"))).as("simhash"))
       .orderBy("doc_id")
 
   /** BPE-style pre-tokenization: the regex split a byte-pair-encoding
@@ -242,7 +242,7 @@ object TextAnalysis {
     // executable spec (NativeExpressionsSpec equivalence) and the oracle
     Tables.documents(spark, dir).select(
       col("doc_id"),
-      graft.functions.GraftFunctions.preTokenStats(spark, col("text")).as("s"))
+      graft.functions.GraftFunctions.preTokenStats(col("text")).as("s"))
       .select(col("doc_id"), col("s.n_pretokens").as("n_pretokens"),
         col("s.n_word").as("n_word"), col("s.n_number").as("n_number"),
         col("s.n_punct").as("n_punct"), col("s.n_vocab").as("n_vocab"))
@@ -564,7 +564,7 @@ object TextAnalysis {
     val grams = Tables.documents(spark, dir).select(
       col("doc_id"),
       explode(TextHash.let(
-        graft.functions.GraftFunctions.tokenHashes(spark, col("text")))(th =>
+        graft.functions.GraftFunctions.tokenHashes(col("text")))(th =>
         concat(
           transform(TextHash.shingleHashes(th, 2),
             x => struct(lit(2).as("n"), x.as("gram"))),
@@ -615,7 +615,7 @@ object TextAnalysis {
       // the corpus's gram rows)
       .filter(col("sh") < 80 || col("sh") >= 90)
       .select(col("doc_id"), col("sh"),
-        explode(graft.functions.GraftFunctions.shingleSet(spark, col("text"), 5))
+        explode(graft.functions.GraftFunctions.shingleSet(col("text"), 5))
           .as("gram"))
       .repartition(parts, col("gram"))
     // The train-distinct and the probe join prune different projections
@@ -689,7 +689,7 @@ object TextAnalysis {
     val docs = Tables.documents(spark, dir)
     val grams = docs
       .select(col("doc_id"),
-        explode(graft.functions.GraftFunctions.shingleSet(spark, col("text"), 3))
+        explode(graft.functions.GraftFunctions.shingleSet(col("text"), 3))
           .as("gram"))
       .repartition(gramBarrierParts(docs), col("gram"))
     val boiler = grams.groupBy(col("gram")).agg(count(lit(1)).as("df"))
@@ -803,7 +803,7 @@ object TextAnalysis {
     val docs = Tables.documents(spark, dir)
     val grams = docs
       .select(col("doc_id"),
-        explode(graft.functions.GraftFunctions.shingleSet(spark, col("text"), 3))
+        explode(graft.functions.GraftFunctions.shingleSet(col("text"), 3))
           .as("gram"))
       .repartition(gramBarrierParts(docs), col("gram"))
     val first = grams.groupBy(col("gram")).agg(min(col("doc_id")).as("first_doc"))
@@ -890,7 +890,7 @@ object TextAnalysis {
     // formulation remains as the executable spec (NativeExpressionsSpec)
     tainted.select(
         col("doc_id"),
-        graft.functions.GraftFunctions.piiScan(spark, col("text")).as("s"))
+        graft.functions.GraftFunctions.piiScan(col("text")).as("s"))
       .select(col("doc_id"), col("s.n_emails").as("n_emails"),
         col("s.n_phones").as("n_phones"),
         col("s.redacted_tail").as("redacted_tail"))
@@ -1457,7 +1457,7 @@ object TextAnalysis {
     Tables.documents(spark, dir)
       .select(explode(TextHash.tokens(col("text"))).as("word"))
       .agg(graft.functions.GraftFunctions
-        .topkSketch(spark, col("word"), 64, 10).as("top"))
+        .topkSketch(col("word"), 64, 10).as("top"))
       .select(posexplode(col("top")))
       .select((col("pos") + 1).cast("int").as("rn"),
         col("col.word").as("word"), col("col.n").as("n"))

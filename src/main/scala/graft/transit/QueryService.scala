@@ -138,7 +138,7 @@ object QueryService {
     * the same caveat). */
   def round2(df: DataFrame, cols: Seq[String]): DataFrame =
     cols.foldLeft(df)((d, c) =>
-      d.withColumn(c, graft.functions.GraftFunctions.pyRound(d.sparkSession, col(c), 2)))
+      d.withColumn(c, graft.functions.GraftFunctions.pyRound(col(c), 2)))
 
   /** Q2's serialization face: the four metric columns the reference runs
     * through `_round2`. */

@@ -9,10 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** [[Session]] is the engine's one session factory: its two profiles are
   * pinned to the confs `Bench.main` and `HttpServe.main` built by hand
   * before it existed, and a source guard keeps every other file — test
-  * sources included, bar one — from building a session or reading the
-  * two env vars it owns, keeps system-property reads, child sessions and
-  * temp views out of the engine, and pins the engine's whole env surface
-  * to those two plus `SPARK_GRAFT_ONLY`. */
+  * sources included — from building a session or reading the two env
+  * vars it owns, keeps system-property reads, child sessions, temp views
+  * and session function registration out of the engine, and pins the
+  * engine's whole env surface to those two plus `SPARK_GRAFT_ONLY`. */
 class SessionSpec extends AnyFunSuite {
 
   /** A dir whose only file is `bytes` long but sparse, so the data-sized
@@ -91,10 +91,7 @@ class SessionSpec extends AnyFunSuite {
     val main = sources(mainRoot, 40)
     val tests = sources(testRoot, 40)
     val owner = mainRoot.resolve("graft/Session.scala")
-    // the one test that must build its own session: extensions apply only
-    // to a fresh context built `withExtensions`
-    val extensions = testRoot.resolve("graft/functions/ExtensionsSpec.scala")
-    assert(main.contains(owner) && tests.contains(extensions))
+    assert(main.contains(owner))
     def lines(files: List[Path]) = for {
       f <- files
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
@@ -108,7 +105,7 @@ class SessionSpec extends AnyFunSuite {
     val offenders =
       offending(mainLines, Seq(builder, """"SPARK_GRAFT_CPUS"""".r,
         """"SPARK_GRAFT_SF_DIR"""".r), Set(owner)) ++
-        offending(lines(tests), Seq(builder), Set(extensions))
+        offending(lines(tests), Seq(builder), Set.empty)
     assert(offenders.isEmpty,
       "session built or CPUS/SF_DIR read outside graft.Session:\n" +
         offenders.mkString("\n"))
@@ -122,6 +119,15 @@ class SessionSpec extends AnyFunSuite {
       """create(OrReplace|Global)?TempView""".r), Set.empty)
     assert(scoped.isEmpty,
       "child session or temp view under src/main:\n" + scoped.mkString("\n"))
+    // no session function registry: a native expression is a plain Column
+    // (graft.functions.GraftFunctions), so nothing registers, injects or
+    // looks up a graft_* name, and no session is built with extensions
+    val registry = offending(mainLines, Seq("""call_function\s*\(\s*"graft_""".r,
+      """registerFunction\s*\(""".r, """injectFunction\s*\(""".r,
+      """spark\.sql\.extensions""".r), Set.empty)
+    assert(registry.isEmpty,
+      "function registration or spark.sql.extensions under src/main:\n" +
+        registry.mkString("\n"))
     // the whole env surface: every env read, in any file, names one of these
     val envRead = """sys\.env|System\.getenv""".r
     val envVars = Seq("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_ONLY")

@@ -52,7 +52,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     assert(got.nonEmpty, "fixture near-dups must reach tau")
     // ground truth: brute all-pairs exact Jaccard over the same shingle sets
     val sh = graft.sources.Tables.documents(spark, sf).select(col("doc_id"),
-      graft.functions.GraftFunctions.shingleSet(spark, col("text")).as("shs"))
+      graft.functions.GraftFunctions.shingleSet(col("text")).as("shs"))
     val brute = sh.as("a").join(sh.as("b"), col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"),
         size(col("a.shs")).as("n1"), size(col("b.shs")).as("n2"),

@@ -17,7 +17,7 @@ class NativeExpressionsSpec extends AnyFunSuite with SparkSpec {
       .toDF("text")
     val th = TextHash.tokenHashes(col("text"))
     val both = docs.select(
-      GraftFunctions.simhash32(spark, th).as("native"),
+      GraftFunctions.simhash32(th).as("native"),
       TextHash.simhash32(th).as("interp"))
     assert(both.filter(col("native") =!= col("interp")).count() == 0)
     // and codegen path == interpreted path of the native expr itself
@@ -34,7 +34,7 @@ class NativeExpressionsSpec extends AnyFunSuite with SparkSpec {
       .toDF("text")
     val shs = TextHash.shingleSet(col("text"))
     val both = docs.select(
-      GraftFunctions.minhash32(spark, shs).as("native"),
+      GraftFunctions.minhash32(shs).as("native"),
       TextHash.minhashSig(shs).as("interp"))
     assert(both.filter(col("native") =!= col("interp")).count() == 0)
     // empty shingle set → all-P signature, non-empty ones differ
@@ -50,7 +50,7 @@ class NativeExpressionsSpec extends AnyFunSuite with SparkSpec {
       "unicode tökens żółw 中文 here",
       "repeated repeated repeated").toDF("text")
     val both = docs.select(
-      GraftFunctions.tokenHashes(spark, col("text")).as("native"),
+      GraftFunctions.tokenHashes(col("text")).as("native"),
       TextHash.tokenHashes(col("text")).as("interp"))
     assert(both.filter(col("native") =!= col("interp")).count() == 0)
   }
@@ -63,11 +63,11 @@ class NativeExpressionsSpec extends AnyFunSuite with SparkSpec {
       "one two three", "short one", "",
       "alpha beta gamma delta epsilon zeta eta theta iota kappa").toDF("text")
     val both = docs.select(
-      GraftFunctions.shingleSet(spark, col("text")).as("native"),
+      GraftFunctions.shingleSet(col("text")).as("native"),
       TextHash.shingleSet(col("text")).as("interp"))
     assert(both.filter(col("native") =!= col("interp")).count() == 0)
     // non-degenerate: repeated-shingle doc actually exercised dedup
-    val sizes = docs.select(size(GraftFunctions.shingleSet(spark, col("text"))))
+    val sizes = docs.select(size(GraftFunctions.shingleSet(col("text"))))
       .collect().map(_.getInt(0))
     assert(sizes.contains(3) && sizes.contains(0))
   }
@@ -81,14 +81,14 @@ class NativeExpressionsSpec extends AnyFunSuite with SparkSpec {
       "alpha beta gamma delta epsilon zeta eta theta iota kappa").toDF("text")
     for (n <- Seq(3, 8)) {
       val both = docs.select(
-        GraftFunctions.shingleAll(spark, col("text"), n).as("native"),
+        GraftFunctions.shingleAll(col("text"), n).as("native"),
         TextHash.let(TextHash.tokenHashes(col("text")))(th =>
           TextHash.shingleHashes(th, n)).as("interp"))
       assert(both.filter(col("native") =!= col("interp")).count() == 0,
         s"n=$n mismatch")
     }
     // non-degenerate: the repeated-shingle doc keeps all 10 positions
-    val sizes = docs.select(size(GraftFunctions.shingleAll(spark, col("text"), 3)))
+    val sizes = docs.select(size(GraftFunctions.shingleAll(col("text"), 3)))
       .collect().map(_.getInt(0))
     assert(sizes.contains(10) && sizes.contains(0))
   }
@@ -102,11 +102,11 @@ class NativeExpressionsSpec extends AnyFunSuite with SparkSpec {
       "emoji 😀 pair and CamelCase X9Y8",
       "tabs\tand\nnewlinesvtff\rcr end").toDF("text")
     val both = docs.select(
-      GraftFunctions.preTokenStats(spark, col("text")).as("native"),
+      GraftFunctions.preTokenStats(col("text")).as("native"),
       graft.text.TextAnalysis.preTokenStatsInterp.as("interp"))
     assert(both.filter(col("native") =!= col("interp")).count() == 0)
     // non-degenerate: every class count exercised somewhere
-    val agg = docs.select(GraftFunctions.preTokenStats(spark, col("text")).as("s"))
+    val agg = docs.select(GraftFunctions.preTokenStats(col("text")).as("s"))
       .agg(sum($"s.n_word"), sum($"s.n_number"), sum($"s.n_punct"),
         sum($"s.n_pretokens"), sum($"s.n_vocab"))
       .collect().head
@@ -124,15 +124,15 @@ class NativeExpressionsSpec extends AnyFunSuite with SparkSpec {
       "unicode tökens 中文 then x@y.zz tail 😀 555-9999",
       long).toDF("text")
     val both = docs.select(
-      GraftFunctions.piiScan(spark, col("text")).as("native"),
+      GraftFunctions.piiScan(col("text")).as("native"),
       graft.text.TextAnalysis.piiScanInterp.as("interp"))
     assert(both.filter(col("native") =!= col("interp")).count() == 0)
     // non-degenerate: emails and phones both found, replacement visible
-    val r = docs.select(GraftFunctions.piiScan(spark, col("text")).as("s"))
+    val r = docs.select(GraftFunctions.piiScan(col("text")).as("s"))
       .agg(sum($"s.n_emails"), sum($"s.n_phones")).collect().head
     assert(r.getLong(0) >= 5 && r.getLong(1) >= 3)
     val tails = docs.select($"text",
-      GraftFunctions.piiScan(spark, col("text")).getField("redacted_tail"))
+      GraftFunctions.piiScan(col("text")).getField("redacted_tail"))
       .collect().map(_.getString(1))
     assert(tails.exists(_.contains("<EMAIL>")) && tails.exists(_.contains("<PHONE>")))
   }
@@ -142,16 +142,16 @@ class NativeExpressionsSpec extends AnyFunSuite with SparkSpec {
     val e = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.01")
     // the interpreted executable spec: let-bound unit vector → pqCodes
     val interp = TextHash.let(
-      TextHash.let(GraftFunctions.l2norm(spark, col("embedding")))(n =>
+      TextHash.let(GraftFunctions.l2norm(col("embedding")))(n =>
         transform(col("embedding"), x => x.cast("double") / n)))(u =>
       graft.similarity.Similarity.pqCodes(u))
     val both = e.select(
-      GraftFunctions.pqEncode(spark, col("embedding")).as("native"),
+      GraftFunctions.pqEncode(col("embedding")).as("native"),
       interp.as("interp"))
     assert(both.filter(col("native") =!= col("interp")).count() == 0)
     // non-degenerate: codes span more than one centroid index
     val distinct = e.select(explode(
-        GraftFunctions.pqEncode(spark, col("embedding"))))
+        GraftFunctions.pqEncode(col("embedding"))))
       .distinct().count()
     assert(distinct > 1)
   }
@@ -159,7 +159,7 @@ class NativeExpressionsSpec extends AnyFunSuite with SparkSpec {
   test("SimHash32Expr of empty token array is 0") {
     import spark.implicits._
     val r = Seq(Seq.empty[Long]).toDF("th")
-      .select(GraftFunctions.simhash32(spark, col("th")))
+      .select(GraftFunctions.simhash32(col("th")))
       .collect().head.getLong(0)
     assert(r == 0L)
   }
@@ -171,8 +171,8 @@ class NativeExpressionsSpec extends AnyFunSuite with SparkSpec {
     // agree (a null-propagating form would diverge on null documents)
     val docs = Seq(Some("a b c d"), None).toDF("text")
     val rows = docs.select(
-      GraftFunctions.shingleSet(spark, col("text")).as("ns"),
-      GraftFunctions.shingleAll(spark, col("text")).as("na"),
+      GraftFunctions.shingleSet(col("text")).as("ns"),
+      GraftFunctions.shingleAll(col("text")).as("na"),
       TextHash.shingleSet(col("text")).as("is")).collect()
     val nullRow = rows(1)
     assert(!nullRow.isNullAt(0) && nullRow.getSeq[Long](0).isEmpty)
@@ -189,7 +189,7 @@ class NativeExpressionsSpec extends AnyFunSuite with SparkSpec {
       (Seq(1.0f, 2.0f), Seq(3.0f))        // mismatch → NULL (spec: zip_with pads null)
     ).toDF("a", "b")
     val rows = df.select(
-      GraftFunctions.dot(spark, col("a"), col("b")).as("native"),
+      GraftFunctions.dot(col("a"), col("b")).as("native"),
       TextHash.dot(col("a"), col("b")).as("interp")).collect()
     assert(rows(0).getDouble(0) == 11.0 && rows(0).getDouble(1) == 11.0)
     assert(rows(1).isNullAt(0) && rows(1).isNullAt(1))

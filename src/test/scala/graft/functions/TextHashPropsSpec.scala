@@ -40,10 +40,9 @@ class TextHashPropsSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val pairs = docs(40).grouped(2).collect { case Seq(a, b) => (a, b) }.toSeq
     val df = pairs.toDF("a", "b").select(
-      GraftFunctions.minhash32(spark, TextHash.shingleSet(col("a"))).as("sa"),
-      GraftFunctions.minhash32(spark, TextHash.shingleSet(col("b"))).as("sb"),
-      GraftFunctions.minhash32(spark,
-        array_distinct(concat(TextHash.shingleSet(col("a")),
+      GraftFunctions.minhash32(TextHash.shingleSet(col("a"))).as("sa"),
+      GraftFunctions.minhash32(TextHash.shingleSet(col("b"))).as("sb"),
+      GraftFunctions.minhash32(array_distinct(concat(TextHash.shingleSet(col("a")),
           TextHash.shingleSet(col("b"))))).as("su"))
     for (r <- df.collect()) {
       val (sa, sb, su) =
@@ -60,8 +59,8 @@ class TextHashPropsSpec extends AnyFunSuite with SparkSpec {
       (d, scala.util.Random.shuffle(toks).mkString(" ")) // bit votes commute
     }
     val df = perms.toDF("a", "b").select(
-      GraftFunctions.simhash32(spark, TextHash.tokenHashes(col("a"))).as("ha"),
-      GraftFunctions.simhash32(spark, TextHash.tokenHashes(col("b"))).as("hb"))
+      GraftFunctions.simhash32(TextHash.tokenHashes(col("a"))).as("ha"),
+      GraftFunctions.simhash32(TextHash.tokenHashes(col("b"))).as("hb"))
     assert(df.collect().forall(r => r.getLong(0) == r.getLong(1)))
   }
 
@@ -71,15 +70,15 @@ class TextHashPropsSpec extends AnyFunSuite with SparkSpec {
       (Array.tabulate(16)(j => ((i * 7 + j * 13) % 19 - 9).toFloat),
         Array.tabulate(16)(j => ((i * 11 + j * 5) % 17 - 8).toFloat)))
     val df = vecs.toDF("a", "b").select(
-      (GraftFunctions.dot(spark, col("a"), col("b")) /
-        (GraftFunctions.l2norm(spark, col("a")) *
-          GraftFunctions.l2norm(spark, col("b")))).as("ab"),
-      (GraftFunctions.dot(spark, col("b"), col("a")) /
-        (GraftFunctions.l2norm(spark, col("b")) *
-          GraftFunctions.l2norm(spark, col("a")))).as("ba"),
-      (GraftFunctions.dot(spark, col("a"), col("a")) /
-        (GraftFunctions.l2norm(spark, col("a")) *
-          GraftFunctions.l2norm(spark, col("a")))).as("aa"))
+      (GraftFunctions.dot(col("a"), col("b")) /
+        (GraftFunctions.l2norm(col("a")) *
+          GraftFunctions.l2norm(col("b")))).as("ab"),
+      (GraftFunctions.dot(col("b"), col("a")) /
+        (GraftFunctions.l2norm(col("b")) *
+          GraftFunctions.l2norm(col("a")))).as("ba"),
+      (GraftFunctions.dot(col("a"), col("a")) /
+        (GraftFunctions.l2norm(col("a")) *
+          GraftFunctions.l2norm(col("a")))).as("aa"))
     for (r <- df.collect()) {
       assert(r.getDouble(0) == r.getDouble(1)) // exact: same fold order
       assert(math.abs(r.getDouble(0)) <= 1.0 + 1e-9)
@@ -91,7 +90,7 @@ class TextHashPropsSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val triples = docs(45).grouped(3).collect { case Seq(a, b, c) => (a, b, c) }.toSeq
     def sh(c: org.apache.spark.sql.Column) =
-      GraftFunctions.simhash32(spark, TextHash.tokenHashes(c))
+      GraftFunctions.simhash32(TextHash.tokenHashes(c))
     val df = triples.toDF("a", "b", "c").select(
       TextHash.hamming(sh(col("a")), sh(col("b"))).as("ab"),
       TextHash.hamming(sh(col("b")), sh(col("c"))).as("bc"),

@@ -7,7 +7,7 @@ import graft.SparkSpec
 class ThetaSketchSpec extends AnyFunSuite with SparkSpec {
 
   private def sketchOf(df: org.apache.spark.sql.DataFrame, lgK: Int): Array[Byte] =
-    df.agg(GraftFunctions.thetaSketch(spark, col("k"), lgK).as("sk"))
+    df.agg(GraftFunctions.thetaSketch(col("k"), lgK).as("sk"))
       .head.getAs[Array[Byte]](0)
 
   test("exact regime: estimate equals the distinct count, any partitioning") {

@@ -15,7 +15,7 @@ class TopKSketchSpec extends AnyFunSuite with SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1)))
     for (parts <- Seq(1, 7)) {
       val got = words.repartition(parts)
-        .agg(GraftFunctions.topkSketch(spark, col("word"), 64, 10).as("top"))
+        .agg(GraftFunctions.topkSketch(col("word"), 64, 10).as("top"))
         .select(posexplode(col("top")))
         .select(col("col.word"), col("col.n"))
         .collect().map(r => (r.getString(0), r.getLong(1)))
@@ -29,7 +29,7 @@ class TopKSketchSpec extends AnyFunSuite with SparkSpec {
     // hitter holds 40% of the stream — far above N/(k+1), must be rank 1
     val stream = (Seq.fill(2000)("heavy") ++ (1 to 3000).map(i => s"rare${i % 500}"))
     val df = stream.toDF("word").repartition(5)
-    val top = df.agg(GraftFunctions.topkSketch(spark, col("word"), 8, 3).as("top"))
+    val top = df.agg(GraftFunctions.topkSketch(col("word"), 8, 3).as("top"))
       .select(posexplode(col("top"))).select(col("col.word"), col("col.n"))
       .collect()
     assert(top.head.getString(0) == "heavy")

@@ -37,7 +37,7 @@ class BloomJoinSpec extends AnyFunSuite with SparkSpec {
     val total = Tables.lineitem(spark, dir).count()
     val kept = Tables.lineitem(spark, dir)
       .filter(graft.functions.GraftFunctions
-        .bloomContains(spark, col("l_orderkey"), bytes))
+        .bloomContains(col("l_orderkey"), bytes))
       .count()
     assert(kept < total / 2, s"bloom kept $kept of $total — not pruning")
   }
@@ -49,7 +49,7 @@ class BloomJoinSpec extends AnyFunSuite with SparkSpec {
     val missed = Tables.lineitem(spark, dir)
       .join(urgent, col("l_orderkey") === col("o_orderkey"), "left_semi")
       .filter(!graft.functions.GraftFunctions
-        .bloomContains(spark, col("l_orderkey"), bytes))
+        .bloomContains(col("l_orderkey"), bytes))
       .count()
     assert(missed == 0L)
   }

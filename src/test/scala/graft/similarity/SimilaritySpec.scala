@@ -17,13 +17,13 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     import org.apache.spark.sql.functions._
     val e = graft.sources.Tables.embeddings(spark, sf).select(
       col("vec_id"),
-      graft.functions.GraftFunctions.l2norm(spark, col("embedding")).as("nrm"),
+      graft.functions.GraftFunctions.l2norm(col("embedding")).as("nrm"),
       col("embedding"),
       Similarity.ivfCell(col("embedding")).as("cell"))
       .localCheckpoint(true)
     val nVecs = e.count()
     val cos = round(
-      graft.functions.GraftFunctions.dot(spark, col("a.embedding"), col("b.embedding")) /
+      graft.functions.GraftFunctions.dot(col("a.embedding"), col("b.embedding")) /
         (col("a.nrm") * col("b.nrm")), 6)
     // brute all-pairs at tau — the reference pair set the cells approximate
     val brutePairs = e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))

@@ -534,8 +534,7 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
     val (b1, rest) = evs.splitAt(evs.length / 3)
     val (b2, b3) = rest.splitAt(rest.length / 2)
     val stream = MemoryStream[(Long, String)]
-    val q = Streams.topkUsersStreaming(spark,
-        stream.toDF.toDF("user_id", "event_type"))
+    val q = Streams.topkUsersStreaming(stream.toDF.toDF("user_id", "event_type"))
       .writeStream.format("memory").queryName("topk_users_test")
       .outputMode("complete").start()
     try {
