@@ -59,17 +59,24 @@ object Bench {
   private[graft] def d3(x: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
 
-  /** Minimal JSON string escape for hand-assembled rows: face names in
-    * `failed` and `Verify`'s oracle SQL are arbitrary text, and an
-    * unescaped quote/backslash would write a malformed line that every
-    * later reader fails on (ADVICE r14). */
-  private[graft] def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"'           => "\\\""
-      case '\\'          => "\\\\"
-      case c if c < 0x20 => f"\\u${c.toInt}%04x"
-      case c             => c.toString
+  /** A JSON string literal (quotes included), escaped per RFC 8259 —
+    * the one escaper for hand-assembled JSON: HttpServe's responses, the
+    * `failed` list here and `Verify`'s oracle SQL are arbitrary text, and
+    * an unescaped quote, backslash or control character would write a
+    * malformed line that every later reader fails on (ADVICE r14). */
+  private[graft] def jstr(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"'           => b.append("\\\"")
+      case '\\'          => b.append("\\\\")
+      case '\n'          => b.append("\\n")
+      case '\r'          => b.append("\\r")
+      case '\t'          => b.append("\\t")
+      case c if c < ' '  => b.append(f"\\u${c.toInt}%04x")
+      case c             => b.append(c)
     }
+    b.append('"').toString
+  }
 
   private[graft] def sha8(line: String): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
@@ -77,13 +84,6 @@ object Bench {
       .take(8).map(b => f"$b%02x").mkString
   }
 
-  /** Write the full per-query map to every path this run owns and return
-    * (contractLine, fullLine). The contract line names the file actually
-    * written (`full_map`) and pins it by content hash (`full_map_sha256_8`)
-    * so the driver artifact VERIFIES the sidecar instead of trusting it —
-    * r11 hardcoded the reports path and spuriously mismatched on subset
-    * runs; r12's set-but-empty-ONLY skip was found only by inspection.
-    * `baseDir` exists for the spec (a temp dir), defaults to the repo cwd. */
   /** The reference's published single-node bar: Q1–Q4 each < 6 s on the
     * full GTA feed (~4.3 M stop_times; BASELINE.md). The engine's nearest
     * scale is sf1 (6 M-row fact), so the sf1 board carries the contract
@@ -103,7 +103,15 @@ object Bench {
     else None
   }
 
-  /** `results` are the faces that ran; `failed` names the faces that
+  /** Write the full per-query map to every path this run owns and return
+    * (contractLine, fullLine). The contract line names the file actually
+    * written (`full_map`) and pins it by content hash (`full_map_sha256_8`)
+    * so the driver artifact VERIFIES the sidecar instead of trusting it —
+    * r11 hardcoded the reports path and spuriously mismatched on subset
+    * runs; r12's set-but-empty-ONLY skip was found only by inspection.
+    * `baseDir` exists for the spec (a temp dir), defaults to the repo cwd.
+    *
+    * `results` are the faces that ran; `failed` names the faces that
     * threw. A failed face has no time to report, so it stays out of every
     * total and map and is listed under `failed` on both lines instead. */
   private[graft] def writeArtifacts(results: Seq[(String, Double, Double)],
@@ -123,7 +131,7 @@ object Bench {
     val full = results.map { case (n, c, w) =>
       "\"" + n + s"""":{"cold":${d3(c)},"warm":${d3(w)}}"""
     }.mkString("{", ",", "}")
-    val failedJson = failed.map(n => "\"" + jsonEscape(n) + "\"").mkString("[", ",", "]")
+    val failedJson = failed.map(jstr).mkString("[", ",", "]")
     // baseline-contract ratio, sf1 boards only (rides both lines: the
     // sidecar is the machine-read artifact, the contract line the archived
     // one)

@@ -240,8 +240,7 @@ object SparkEntry {
   private def snapshotServed(name: String, serve: QueryService => DataFrame)
       : (SparkSession, String) => DataFrame = (s, dir) => {
     val t = TransitTables.fromTpch(s, dir)
-    val snapDir = s"${sys.props("java.io.tmpdir")}/graft_snapshots_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
+    val snapDir = Scratch.dir("snapshots", dir)
     QueryService.buildSnapshot(t, snapDir, name)
     serve(new QueryService(t, Some(snapDir)))
   }

@@ -22,12 +22,12 @@ object Verify {
     }
     // every control char escaped: a tab or CR in an oracle SQL text
     // would otherwise make the driver's json.load fail and silently zero
-    // the round's correctness
-    def q(s: String): String = "\"" + Bench.jsonEscape(s) + "\""
-    // a subset run lists only its own keys, so tools/check.py can judge it
+    // the round's correctness. A subset run lists only its own keys, so
+    // tools/check.py can judge it
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => selected(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -638,20 +638,6 @@ object Dedup {
     labels
   }
 
-  /** Apply exact dedup: the surviving corpus after keeping one
-    * representative (min doc_id) per md5 group — the step that actually
-    * shrinks the training set. Output is the per-language survivor
-    * summary so the result is small at any scale; the semi-join against
-    * representatives is the full-corpus application. */
-  /** Canonical-document selection — the decision step after [[clusters]]:
-    * within every near-dup cluster keep the highest-quality member (score
-    * = lexical diversity × ln(1+tokens), the qualityDeciles score; ties →
-    * lowest doc_id, so byte-identical members resolve deterministically).
-    * Two-level max-then-min instead of an argmax-over-struct so both
-    * engines express the tie-break identically; score equality is
-    * bit-exact because MAX returns one of the per-row rounded values.
-    * Cost rides [[clusters]] plus one narrow score scan and two
-    * cluster-keyed aggs over cluster-membership-sized frames. */
   /** Quality score of a document's text — lexical diversity × ln(1+tokens),
     * 6-dp (the qualityDeciles score) — and the member-scoring semi-join,
     * SHARED by every face that picks a cluster canonical ([[canonical]],
@@ -674,6 +660,15 @@ object Dedup {
       .join(broadcast(members), "doc_id")
       .select(col("doc_id"), col("cluster_id"), qualityScore.as("score"))
 
+  /** Canonical-document selection — the decision step after [[clusters]]:
+    * within every near-dup cluster keep the highest-quality member (score
+    * = lexical diversity × ln(1+tokens), the qualityDeciles score; ties →
+    * lowest doc_id, so byte-identical members resolve deterministically).
+    * Two-level max-then-min instead of an argmax-over-struct so both
+    * engines express the tie-break identically; score equality is
+    * bit-exact because MAX returns one of the per-row rounded values.
+    * Cost rides [[clusters]] plus one narrow score scan and two
+    * cluster-keyed aggs over cluster-membership-sized frames. */
   def canonical(spark: SparkSession, dir: String): DataFrame = {
     val members = clusters(spark, dir).select("doc_id", "cluster_id")
     // membership-sized scored frame, consumed twice (best-score agg and the
@@ -725,6 +720,11 @@ object Dedup {
       .orderBy(col("lang"))
   }
 
+  /** Apply exact dedup: the surviving corpus after keeping one
+    * representative (min doc_id) per md5 group — the step that actually
+    * shrinks the training set. Output is the per-language survivor
+    * summary so the result is small at any scale; the semi-join against
+    * representatives is the full-corpus application. */
   def applyExact(spark: SparkSession, dir: String): DataFrame =
     // Single pass, no self-join: the survivor's (lang, n_chars) ride along
     // with the min-doc_id pick via min_by, so the fp shuffle carries four
@@ -809,12 +809,11 @@ object Dedup {
     * standing index is the multi-TB side — never re-shuffling it per
     * daily batch is the whole economics of incremental admission. */
   def standingProbeBase(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val b = bandsRaw(spark, dir).withColumn("is_new", col("doc_id") % 5 === 0)
     val idx = Writers.bucketedTable(
       b.filter(!col("is_new")).select(col("doc_id"), col("band"), col("band_hash")),
-      s"bands_bkt_$tag", Seq("band", "band_hash"), BucketCount,
-      s"${sys.props("java.io.tmpdir")}/graft_bands_$tag")
+      s"bands_bkt_${graft.Scratch.key(dir)}", Seq("band", "band_hash"), BucketCount,
+      graft.Scratch.dir("bands", dir))
     b.filter(col("is_new"))
       .select(col("doc_id").as("new_id"), col("band"), col("band_hash"))
       .hint("merge")

@@ -585,9 +585,6 @@ object MultimodalOracles {
        |FROM documents
        |ORDER BY doc_id""".stripMargin
 
-  /** Mirrors [[Multimodal.cdcChunkReuse]]: the same hex-unpacked byte
-    * list, rolling-window boundary test, and 31-fold chunk hash, with
-    * chunk spans derived from the starts list via list slicing. */
   /** Shared CDC prelude: bl (payload bytes as BIGINT list) → st (chunk
     * start offsets from the 4-byte rolling-window boundary rule) → ch
     * (one struct row per chunk with fold hash `h` and length `l`) —
@@ -632,6 +629,9 @@ object MultimodalOracles {
        |""".stripMargin
   }
 
+  /** Mirrors [[Multimodal.cdcChunkReuse]]: the same hex-unpacked byte
+    * list, rolling-window boundary test, and 31-fold chunk hash, with
+    * chunk spans derived from the starts list via list slicing. */
   val cdcChunks: String =
     cdcPrelude +
       """SELECT c.h AS chunk_hash, CAST(c.l AS INT) AS chunk_len,

@@ -1321,8 +1321,7 @@ object RelationalQueries {
     * this layout is the difference between scanning a day and scanning
     * years. */
   def partitionedSinkRead(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_events_byday_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
+    val path = graft.Scratch.dir("events_byday", dir)
     graft.sources.Writers.snapshotParquet(
       Tables.events(spark, dir)
         .withColumn("day", date_format(col("ts"), "yyyy-MM-dd")),
@@ -1353,8 +1352,7 @@ object RelationalQueries {
     * hash. Per-file stats are a #files-row frame; the window lag over it
     * is metadata-scale. */
   def rangeSnapshotCensus(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_orders_ranged_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
+    val path = graft.Scratch.dir("orders_ranged", dir)
     graft.sources.Writers.rangePartitionedSnapshot(
       Tables.orders(spark, dir).select(col("o_orderkey"), col("o_totalprice")),
       path, "o_orderkey", RangeSnapshotFiles)
@@ -1381,18 +1379,23 @@ object RelationalQueries {
     * assert ZERO Exchange operators on the join subplan before the
     * presentation agg/sort add theirs). */
   def bucketedJoinBase(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_bucketed_$tag"
-    val o = Writers.bucketedTable(
-      Tables.orders(spark, dir).select(col("o_custkey"), col("o_totalprice")),
-      s"orders_bkt_$tag", Seq("o_custkey"), BucketCount, s"$base/orders")
+    val o = bucketedOrders(spark, dir)
     val c = Writers.bucketedTable(
       Tables.customer(spark, dir).select(col("c_custkey"), col("c_mktsegment")),
-      s"customer_bkt_$tag", Seq("c_custkey"), BucketCount, s"$base/customer")
+      s"customer_bkt_${graft.Scratch.key(dir)}", Seq("c_custkey"), BucketCount,
+      s"${graft.Scratch.dir("bucketed", dir)}/customer")
     // merge hint: at test SF the customer side is broadcast-sized, which
     // would hide the point — production fact⋈fact is what's modeled here
     o.hint("merge").join(c, col("o_custkey") === col("c_custkey"))
   }
+
+  /** Orders landed bucketed+sorted on o_custkey — the one table both
+    * [[bucketedJoinBase]] and [[bucketedAgg]] read. */
+  private def bucketedOrders(spark: SparkSession, dir: String): DataFrame =
+    Writers.bucketedTable(
+      Tables.orders(spark, dir).select(col("o_custkey"), col("o_totalprice")),
+      s"orders_bkt_${graft.Scratch.key(dir)}", Seq("o_custkey"), BucketCount,
+      s"${graft.Scratch.dir("bucketed", dir)}/orders")
 
   /** Bucketed co-located join — the canonical recurring-join layout at
     * warehouse scale. Both sides land bucketed+sorted on the join key
@@ -1415,27 +1418,12 @@ object RelationalQueries {
     * satisfies the aggregate's required distribution; plan-asserted in
     * PlanQualitySpec). At warehouse scale this is every recurring
     * per-customer rollup running shuffle-free. */
-  def bucketedAgg(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_bucketed_$tag"
-    val o = Writers.bucketedTable(
-      Tables.orders(spark, dir).select(col("o_custkey"), col("o_totalprice")),
-      s"orders_bkt_$tag", Seq("o_custkey"), BucketCount, s"$base/orders")
-    o.groupBy(col("o_custkey"))
+  def bucketedAgg(spark: SparkSession, dir: String): DataFrame =
+    bucketedOrders(spark, dir).groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("n_orders"),
         round(sum(col("o_totalprice")), 2).as("spend"))
       .orderBy(col("o_custkey"))
-  }
 
-  /** CDC changelog compaction — replaying an ordered insert/update/delete
-    * stream into final table state, the core move of every lakehouse
-    * MERGE/compaction job. The changelog derives deterministically from
-    * orders (seq 1: insert every key; seq 2: re-price keys %10==2;
-    * seq 3: delete keys %10==4) so both engines build the identical log.
-    * Last-writer-wins is `max_by(struct(..), seq)` — ONE keyed
-    * aggregation with map-side partial combine, not a per-key window
-    * sort: at 100 TB the log shuffles once on the key and never
-    * materializes per-key orderings. */
   /** The deterministic I/U/D changelog [[cdcCompact]] replays — public so
     * the streaming face's spec (StreamsSpec) can feed the identical log
     * through `Streams.cdcCompactStreaming` and assert equivalence. */
@@ -1474,6 +1462,15 @@ object RelationalQueries {
       .orderBy(col("event_type"))
   }
 
+  /** CDC changelog compaction — replaying an ordered insert/update/delete
+    * stream into final table state, the core move of every lakehouse
+    * MERGE/compaction job. The changelog derives deterministically from
+    * orders (seq 1: insert every key; seq 2: re-price keys %10==2;
+    * seq 3: delete keys %10==4) so both engines build the identical log.
+    * Last-writer-wins is `max_by(struct(..), seq)` — ONE keyed
+    * aggregation with map-side partial combine, not a per-key window
+    * sort: at 100 TB the log shuffles once on the key and never
+    * materializes per-key orderings. */
   def cdcCompact(spark: SparkSession, dir: String): DataFrame = {
     cdcLog(spark, dir).groupBy(col("k"))
       .agg(max_by(struct(col("op"), col("status"), col("price")), col("seq"))
@@ -1847,8 +1844,7 @@ object RelationalQueries {
     * Scale: schema merge happens on file FOOTERS, not data; the read
     * stays one partition-pruned scan. */
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_schevo_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
+    val path = graft.Scratch.dir("schevo", dir)
     val o = Tables.orders(spark, dir)
     o.filter(col("o_orderkey") % 2 === 0)
       .select(col("o_orderkey"), col("o_totalprice"))
@@ -2288,8 +2284,7 @@ object RelationalQueries {
     * row to stay green. Price sums go through DECIMAL(18,2) — exact and
     * order-independent for 2-dp money, the suite's standard trick. */
   def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val out = s"target/tmp/orc_orders_$key"
+    val out = graft.Scratch.dir("orc_orders", dir)
     Tables.orders(spark, dir).write.mode("overwrite")
       .partitionBy("o_orderstatus").orc(out)
     spark.read.orc(out)

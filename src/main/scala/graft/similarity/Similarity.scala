@@ -139,8 +139,7 @@ object Similarity {
     * probe plan. At 100 TB this IS how an IVF index ships: lists are
     * files, probes are pruned scans, re-centering is a rewrite. */
   def annIvfPersisted(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_ivf_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
+    val path = graft.Scratch.dir("ivf", dir)
     val e = Tables.embeddings(spark, dir).select(
       col("vec_id"), col("embedding"),
       graft.functions.GraftFunctions.l2norm(col("embedding")).as("nrm"),
@@ -300,13 +299,6 @@ object Similarity {
       (s, m) => s + element_at(lut,
         (m * PqK + element_at(codes, m + 1) + 1).cast("int")))
 
-  /** Product-quantization ANN: corpus compressed to M byte-codes per
-    * vector, queries carry full precision + their ADC lookup table; the
-    * pair scan is M table lookups. Ranked by approximate distance
-    * ascending; [[knnBrute]] is the recall oracle (spec-measured). At
-    * scale this composes with IVF ([[annIvf]] picks the cells, PQ scans
-    * inside them); interpreted HOFs here — a native Expression is the
-    * codegen path if encoding ever dominates. */
   /** L2-normalize before encoding: on unit vectors ||a−b||² = 2−2·cos,
     * so ADC's squared-L2 ranking IS the cosine ranking the brute oracle
     * uses — without this, PQ would rank by a different metric entirely. */
@@ -314,6 +306,13 @@ object Similarity {
     let(graft.functions.GraftFunctions.l2norm(v))(n =>
       transform(v, x => x.cast("double") / n))
 
+  /** Product-quantization ANN: corpus compressed to M byte-codes per
+    * vector, queries carry full precision + their ADC lookup table; the
+    * pair scan is M table lookups. Ranked by approximate distance
+    * ascending; [[knnBrute]] is the recall oracle (spec-measured). At
+    * scale this composes with IVF ([[annIvf]] picks the cells, PQ scans
+    * inside them); interpreted HOFs here — a native Expression is the
+    * codegen path if encoding ever dominates. */
   def annPq(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     // Corpus side: native codegen'd encode (PqEncodeExpr — one Java loop
@@ -467,11 +466,6 @@ object Similarity {
       .orderBy(col("query_label"), col("neighbor_label"))
   }
 
-  /** Per-query ANN recall@k as a QUERY (not just a spec): exact top-k
-    * from [[knnBrute]] left-joined against [[annLsh]]'s answer set —
-    * per query, the fraction of true neighbors the approximate index
-    * found. This is the recall dashboard an ANN deployment watches; both
-    * sides are existing plans, the join keys are (qid, cid) pairs. */
   /** Top principal direction of the embedding cloud via TWO integer-exact
     * power iterations — the spectral health check (dominant-direction
     * collapse, whitening precursor) a representation pipeline runs over
@@ -616,6 +610,11 @@ object Similarity {
       .orderBy(col("dims"))
   }
 
+  /** Per-query ANN recall@k as a QUERY (not just a spec): exact top-k
+    * from [[knnBrute]] left-joined against [[annLsh]]'s answer set —
+    * per query, the fraction of true neighbors the approximate index
+    * found. This is the recall dashboard an ANN deployment watches; both
+    * sides are existing plans, the join keys are (qid, cid) pairs. */
   def annRecall(spark: SparkSession, dir: String): DataFrame = {
     val brute = knnBrute(spark, dir).select(col("qid"), col("cid"))
     val approx = annLsh(spark, dir).select(col("qid"), col("cid"))

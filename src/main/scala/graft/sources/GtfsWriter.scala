@@ -146,8 +146,7 @@ object GtfsWriter {
   private[graft] def writeCorruptFeed(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): String = {
     import spark.implicits._
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val feed = s"target/tmp/gtfs_corrupt_$key/stop_times.txt"
+    val feed = s"${graft.Scratch.dir("gtfs_corrupt", sfDir)}/stop_times.txt"
     val st = TransitTables.fromTpch(spark, sfDir).stopTimes
     val tid = col("trip_id")
     val c101 = tid % 101 === 0
@@ -239,12 +238,11 @@ object GtfsWriter {
   }
 
   /** Full round trip: derive the bundle from the TPC-H parquet, land it as
-    * a GTFS feed (under the build's scratch dir, keyed by SF so sf0.01
-    * verify and sf0.1 bench don't clobber each other), read it back through
-    * the real source path, and restore the long-id schema. */
+    * a GTFS feed (in the JVM's scratch dir, [[graft.Scratch]], keyed by
+    * SF), read it back through the real source path, and restore the
+    * long-id schema. */
   def roundtrip(spark: org.apache.spark.sql.SparkSession, sfDir: String): TransitTables = {
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val feedDir = s"target/tmp/gtfs_feed_$key"
+    val feedDir = graft.Scratch.dir("gtfs_feed", sfDir)
     writeFeed(TransitTables.fromTpch(spark, sfDir), feedDir)
     toTpchTypes(GtfsReader.readFeed(spark, feedDir))
   }

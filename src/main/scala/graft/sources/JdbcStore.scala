@@ -73,18 +73,17 @@ object JdbcStore {
     p
   }
 
-  /** Land the (sliced) bundle into an embedded Derby database under
-    * target/tmp, keyed by sf dir; idempotent via a marker file so the
-    * bench's cold/warm pair and repeated verify runs pay the one-time
-    * INSERT leg once. The marker records the fact's trip_id range so the
-    * partitioned read-back gets REAL stride bounds at any scale (hardcoded
-    * bounds stay correct — edge partitions are unbounded — but collapse
-    * the fan-out onto one connection when the key space outgrows them).
-    * Returns (url, (min, max)). */
+  /** Land the (sliced) bundle into an embedded Derby database in the
+    * JVM's scratch dir ([[graft.Scratch]]), keyed by sf dir; idempotent
+    * via a marker file so a face's cold and warm runs in one JVM pay the
+    * one-time INSERT leg once. The marker records the fact's trip_id
+    * range so the partitioned read-back gets REAL stride bounds at any
+    * scale (hardcoded bounds stay correct — edge partitions are
+    * unbounded — but collapse the fan-out onto one connection when the
+    * key space outgrows them). Returns (url, (min, max)). */
   def land(spark: SparkSession, sfDir: String): (String, (Long, Long)) = {
     dialectRegistered
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = new File(s"target/tmp/derby_$key").getAbsoluteFile
+    val base = new File(graft.Scratch.dir("derby", sfDir))
     base.mkdirs()
     // keep derby.log (and nothing else) out of the repo root
     System.setProperty("derby.system.home", base.getPath)
@@ -113,26 +112,9 @@ object JdbcStore {
       val (lo, hi) = if (b.isNullAt(0)) (0L, 0L) else (b.getLong(0), b.getLong(1))
       java.nio.file.Files.write(marker.toPath, s"$lo,$hi".getBytes("UTF-8"))
     }
-    val txt = new String(
-      java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8").trim
-    val bounds = txt.split(",") match {
-      // BOTH tokens must parse: a marker corrupted mid-write (the bounds
-      // upgrade below is not atomic) with a malformed second token must
-      // take the recompute arm, not crash every later run on b.toLong
-      case Array(a, b) if Seq(a, b).forall(t =>
-          t.nonEmpty && t.forall(c => c.isDigit || c == '-')) =>
-        (a.toLong, b.toLong)
-      case _ =>
-        // bounds-less marker (pre-range format): recompute from the parquet
-        // side and upgrade the marker in place — no re-landing needed
-        val b = TransitTables.fromTpch(spark, sfDir).stopTimes
-          .filter(col("trip_id") % SliceMod === 0L)
-          .agg(min(col("trip_id")), max(col("trip_id"))).collect().head
-        val (lo, hi) = if (b.isNullAt(0)) (0L, 0L) else (b.getLong(0), b.getLong(1))
-        java.nio.file.Files.write(marker.toPath, s"$lo,$hi".getBytes("UTF-8"))
-        (lo, hi)
-    }
-    (url, bounds)
+    val Array(lo, hi) = new String(
+      java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8").trim.split(",")
+    (url, (lo.toLong, hi.toLong))
   }
 
   private def write(df: DataFrame, url: String, table: String,

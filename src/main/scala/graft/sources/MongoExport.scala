@@ -40,8 +40,7 @@ object MongoExport {
   /** Write the export (overwrite; the measured sink leg, like the GTFS
     * feed write) and return (dir, schema-for-read-back). */
   def writeDocs(spark: SparkSession, sfDir: String): (String, org.apache.spark.sql.types.StructType) = {
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val dir = s"target/tmp/mongo_export_$key"
+    val dir = graft.Scratch.dir("mongo_export", sfDir)
     val d = docs(TransitTables.fromTpch(spark, sfDir))
     // gzip the JSONL: mongoimport reads --gzip directly and the per-line
     // wire format is unchanged. JSON text of low-entropy schedule data

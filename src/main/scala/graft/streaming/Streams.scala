@@ -350,19 +350,6 @@ object Streams {
       .start()
   }
 
-  /** Recursive delete for the streaming scratch dirs: the parquet sink
-    * APPENDS and its checkpoint skips already-seen source files, so a
-    * re-run (Bench's warm pass, repeated Verify) must start from a clean
-    * sink+checkpoint or it would double rows / emit nothing. */
-  private def deleteRec(path: String): Unit = {
-    val root = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(root)) {
-      java.nio.file.Files.walk(root)
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.delete(p))
-    }
-  }
-
   def clickAttributionOuterBatch(spark: SparkSession, dir: String): DataFrame =
     clickAttribution(Tables.events(spark, dir), "left_outer")
 
@@ -374,10 +361,12 @@ object Streams {
     * floor(value·1000) into an exact BIGINT — a float SUM's result
     * depends on reduction order, which neither engine pins. */
   def sinkCensusBatch(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val staging = s"target/tmp/stream_src_$tag"
-    val sinkDir = s"target/tmp/stream_sink_$tag"
-    deleteRec(sinkDir)
+    val staging = graft.Scratch.dir("stream_src", dir)
+    val sinkDir = graft.Scratch.dir("stream_sink", dir)
+    // the sink APPENDS and its checkpoint skips source files it has seen,
+    // so a re-run (a warm pass, a repeated Verify) must start from a clean
+    // sink and checkpoint or it would double rows / emit nothing
+    graft.Scratch.deleteRec(sinkDir)
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
@@ -401,10 +390,9 @@ object Streams {
     * Stateless append → the emitted pair set equals the batch probe's
     * exactly, so [[graft.dedup.DedupOracles.standingProbe]] binds. */
   def admissionStreamingBatch(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val staging = s"target/tmp/admission_new_$tag"
-    val outRoot = s"target/tmp/admission_out_$tag"
-    deleteRec(outRoot)
+    val staging = graft.Scratch.dir("admission_new", dir)
+    val outRoot = graft.Scratch.dir("admission_out", dir)
+    graft.Scratch.deleteRec(outRoot)
     val newDocs = graft.sources.Tables.documents(spark, dir)
       .filter(col("doc_id") % 5 === 0)
       .select(col("doc_id"), col("text"))

@@ -1252,8 +1252,7 @@ object TextAnalysis {
     * logical manifest. Split/shard formulas match [[splitAssign]] /
     * the writer contract. */
   def shardManifest(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_shards_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
+    val path = graft.Scratch.dir("shards", dir)
     val h = splitHash
     val docs = Tables.documents(spark, dir).select(
       col("doc_id"), col("text"),
@@ -1320,8 +1319,7 @@ object TextAnalysis {
     * escaping anywhere in the sink/source path breaks the hash against
     * the oracle's logical census of the base table. */
   def jsonlRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_jsonl_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
+    val path = graft.Scratch.dir("jsonl", dir)
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("source"))
     graft.sources.Writers.resultJson(docs, path)

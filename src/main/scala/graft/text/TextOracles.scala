@@ -268,8 +268,6 @@ object TextOracles {
        |FROM (SELECT *, ROW_NUMBER() OVER (ORDER BY w DESC, doc_id) AS rnk FROM w)
        |WHERE rnk <= 20 ORDER BY rnk""".stripMargin
 
-  /** Multi-round BPE: identical pair counts, (cnt DESC, pair) argmax,
-    * replace() rewrite per round. */
   /** The BPE training rounds as chained CTEs — shared by the train face
     * (emits the merge table) and the apply face (encodes with it). */
   private def bpeRoundCtes(k: Int): String = {
@@ -291,6 +289,8 @@ object TextOracles {
        |  FROM (SELECT unnest($toks) AS word FROM documents) GROUP BY 1),
        |${(1 to 3).map(bpeRoundCtes).mkString(",\n")}""".stripMargin
 
+  /** Multi-round BPE: identical pair counts, (cnt DESC, pair) argmax,
+    * replace() rewrite per round. */
   val bpeTrain: String =
     s"""WITH $bpeTrainCtes
        |SELECT round, pair, merged_count, new_symbol

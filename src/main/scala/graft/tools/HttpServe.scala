@@ -2,6 +2,7 @@ package graft.tools
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.DataFrame
+import graft.Bench.jstr
 import graft.transit._
 
 /** A REAL HTTP listener over the serving layer — the reference exposes its
@@ -73,21 +74,6 @@ object HttpServe {
     else
       try Some(java.lang.Long.parseLong(raw.trim).toString)
       catch { case _: NumberFormatException => None }
-
-  /** JSON string escape (RFC 8259 minimal set). */
-  private def jstr(s: String): String = {
-    val b = new StringBuilder("\"")
-    s.foreach {
-      case '"'           => b.append("\\\"")
-      case '\\'          => b.append("\\\\")
-      case '\n'          => b.append("\\n")
-      case '\r'          => b.append("\\r")
-      case '\t'          => b.append("\\t")
-      case c if c < ' '  => b.append(f"\\u${c.toInt}%04x")
-      case c             => b.append(c)
-    }
-    b.append('"').toString
-  }
 
   /** One query-string parse shared by every route (the JDK gives raw
     * query text only). Later duplicates win, matching Flask's
@@ -431,7 +417,7 @@ object HttpServe {
     val spark = graft.Session.serving()
 
     val t = TransitTables.fromTpch(spark, sfDir)
-    val snapDir = "target/tmp/http_serve_snapshots"
+    val snapDir = graft.Scratch.dir("http_serve_snapshots", sfDir)
     QueryService.buildAnalyticsSnapshots(t, snapDir)
     val svc = new QueryService(t, Some(snapDir), cacheSnapshots = true)
     // serving copy of the document store: the build runs wide (its own

@@ -498,13 +498,6 @@ object Queries {
       .transform(limit.apply)
   }
 
-  /** Headway analysis — the service-quality metric every transit agency
-    * computes: per (route, stop), gaps between consecutive departures of
-    * one service day, rolled up per route. One keyed window (lag) + one
-    * hash agg; the window partitions on (route, stop) so no key is ever a
-    * whole-feed sort — at 100 TB of stop_times this shuffles once on the
-    * composite key and aggregates map-side after. Gap values are diffs of
-    * the sorted multiset, so tie order cannot change the result. */
   /** The per-(route, stop) consecutive-departure gap frame SHARED by
     * [[headways]] and [[bunching]] — one definition, so the two KPIs can
     * never disagree about what a gap is (they were inline copies), and
@@ -523,6 +516,13 @@ object Queries {
       .select(col("route_id"), (col("dep_secs") - col("prev")).as("gap"))
   }
 
+  /** Headway analysis — the service-quality metric every transit agency
+    * computes: per (route, stop), gaps between consecutive departures of
+    * one service day, rolled up per route. One keyed window (lag) + one
+    * hash agg; the window partitions on (route, stop) so no key is ever a
+    * whole-feed sort — at 100 TB of stop_times this shuffles once on the
+    * composite key and aggregates map-side after. Gap values are diffs of
+    * the sorted multiset, so tie order cannot change the result. */
   def headways(t: TransitTables, service: ServiceFilter = ServiceFilter.Weekday): DataFrame = {
     gapFrame(t, service)
       .groupBy(col("route_id"))
@@ -1255,8 +1255,7 @@ object Queries {
     * keys + one BIGINT — never widths. */
   def feedUpsert(spark: SparkSession, sfDir: String): DataFrame = {
     val t = TransitTables.fromTpch(spark, sfDir)
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val snapPath = s"target/tmp/feed_v1_$key"
+    val snapPath = graft.Scratch.dir("feed_v1", sfDir)
     // MERGE requires unique match keys (Delta/Iceberg reject ambiguous
     // matches); the raw derivation has a handful of duplicate
     // (trip, stop, seq) slots, so the snapshot canonicalizes to slot
@@ -1476,26 +1475,6 @@ object Queries {
       .orderBy(col("svc_date"))
   }
 
-  /** Stress centrality — the betweenness-family measure that stays
-    * INTEGER-exact: the number of shortest paths passing through each
-    * stop, over all (sampled-source, target) pairs within a 3-hop
-    * horizon. Counting σ (shortest-path multiplicities) instead of
-    * Brandes' fractional δ keeps every intermediate a BIGINT, so the
-    * oracle binds bit-for-bit with no float-accumulation risk — the same
-    * trade [[pagerank]] makes with integer mass.
-    *
-    * Plan: shortest walks of length ≤3 via adjacency powers (a minimal-
-    * length walk cannot revisit a vertex, so walk counts ARE path
-    * counts): A² is one edge self-join, A³ one more join with A² — the
-    * wedge-join shape [[triangleCount]] already bounds at scale; (dist,
-    * σ) per pair is an argmin-struct over the three powers. The through-
-    * count is then pure relational algebra: σ(s,v)·σ(v,t) summed where
-    * dist(s,v)+dist(v,t) = dist(s,t), with the source side restricted to
-    * a deterministic 1-in-12 stop sample (the standard betweenness
-    * estimator at graph scale — widen the sample, not the algorithm).
-    * Every join is keyed on stop ids; nothing is quadratic in |stops|
-    * beyond the 3-hop reachability frame the fixpoint queries already
-    * materialize. */
   /** Symmetric backbone edge set: each stop's top-[[StressTopK]]
     * strongest corridors by co-occurrence weight — the [[triangleCount]]
     * sparsification. A transit-shaped graph is degree-bounded already;
@@ -1570,6 +1549,26 @@ object Queries {
       .orderBy(col("n_reachable_3hop").desc, col("stop_id"))
       .limit(20)
 
+  /** Stress centrality — the betweenness-family measure that stays
+    * INTEGER-exact: the number of shortest paths passing through each
+    * stop, over all (sampled-source, target) pairs within a 3-hop
+    * horizon. Counting σ (shortest-path multiplicities) instead of
+    * Brandes' fractional δ keeps every intermediate a BIGINT, so the
+    * oracle binds bit-for-bit with no float-accumulation risk — the same
+    * trade [[pagerank]] makes with integer mass.
+    *
+    * Plan: shortest walks of length ≤3 via adjacency powers (a minimal-
+    * length walk cannot revisit a vertex, so walk counts ARE path
+    * counts): A² is one edge self-join, A³ one more join with A² — the
+    * wedge-join shape [[triangleCount]] already bounds at scale; (dist,
+    * σ) per pair is an argmin-struct over the three powers. The through-
+    * count is then pure relational algebra: σ(s,v)·σ(v,t) summed where
+    * dist(s,v)+dist(v,t) = dist(s,t), with the source side restricted to
+    * a deterministic 1-in-12 stop sample (the standard betweenness
+    * estimator at graph scale — widen the sample, not the algorithm).
+    * Every join is keyed on stop ids; nothing is quadratic in |stops|
+    * beyond the 3-hop reachability frame the fixpoint queries already
+    * materialize. */
   def stressCentrality(t: TransitTables): DataFrame = {
     val d = shortestPaths3(backboneEdges(t))
     val fromS = d.filter(col("src") % 12 === 0)

@@ -165,12 +165,6 @@ object Timetable {
       .orderBy(col("departure_time"), col("trip_id"))
   }
 
-  /** `GET /get_timetable`: the full document grouped by
-    * (route_long_name, trip_headsign) with string-sorted time lists
-    * (reference `Mongo/app.py:64-112`). Unlike the arrivals endpoints this
-    * path applies NO service allow-list and NO NOT-IN-SERVICE exclusion —
-    * it renders the whole document; null group keys pass through as the
-    * reference's None keys do. */
   /** X29 promoted to an oracle row: the NESTED timetable document (GeoJSON
     * location struct + upcoming_services array-of-structs) through the
     * line-JSON result sink ([[graft.sources.Writers.resultJson]] — the
@@ -189,12 +183,17 @@ object Timetable {
     // keyed by (dir, stopId): a dir-only path collides when two
     // invocations for different stops run concurrently (parallel suites /
     // registered runs) — one writer clobbers the other mid-read
-    val path = s"${sys.props("java.io.tmpdir")}/graft_timetable_json_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") + s"_$stopId"
+    val path = graft.Scratch.dir(s"timetable_json_$stopId", dir)
     graft.sources.Writers.resultJson(doc, path)
     getTimetable(graft.sources.Writers.readJson(spark, path, doc.schema), stopId)
   }
 
+  /** `GET /get_timetable`: the full document grouped by
+    * (route_long_name, trip_headsign) with string-sorted time lists
+    * (reference `Mongo/app.py:64-112`). Unlike the arrivals endpoints this
+    * path applies NO service allow-list and NO NOT-IN-SERVICE exclusion —
+    * it renders the whole document; null group keys pass through as the
+    * reference's None keys do. */
   def getTimetable(timetables: DataFrame, stopId: Any): DataFrame =
     exploded(timetables.filter(col("stop_id") === lit(stopId)))
       .groupBy(

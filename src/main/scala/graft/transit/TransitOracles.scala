@@ -225,8 +225,6 @@ object TransitOracles {
        |FROM cal c JOIN per_svc p ON p.service_id = c.service_id
        |ORDER BY svc_date""".stripMargin
 
-  /** Mirrors [[Queries.stressCentrality]]: adjacency powers as chained
-    * CTEs, argmin-(dist, σ) per pair, integer through-count join. */
   /** Mirrors [[Queries.stopRules]]: same basket counts, same pinned
     * division order for support/confidence/lift. */
   def stopRules(minSupport: Long = 5): String =
@@ -429,6 +427,8 @@ object TransitOracles {
        |ORDER BY n_reachable_3hop DESC, stop_id
        |LIMIT 20""".stripMargin
 
+  /** Mirrors [[Queries.stressCentrality]]: adjacency powers as chained
+    * CTEs, argmin-(dist, σ) per pair, integer through-count join. */
   val stressCentrality: String =
     s"""$P, $spath3Ctes,
        |p1 AS (SELECT src AS s, dst AS v, dist AS d1, sigma AS sig1

@@ -50,6 +50,17 @@ class BenchContractSpec extends AnyFunSuite {
       Seq("target/bench.json"))
   }
 
+  test("jstr: quotes, backslashes, control and non-BMP characters parse back exactly") {
+    val cases = Seq("say \"hi\"", "C:\\dir\\", "two\nlines", "tab\tsep",
+      "ctl\u0001char", "rocket \uD83D\uDE80 end", "\"\\\n\t\u0001\uD83D\uDE80", "")
+    for (s <- cases) {
+      val lit = Bench.jstr(s)
+      assert(om.readValue(lit, classOf[String]) == s, lit)
+    }
+    // the short escapes HttpServe's responses have always carried
+    assert(Bench.jstr("a\nb\tc\rd\u0001") == "\"a\\nb\\tc\\rd\\u0001\"")
+  }
+
   private val results = Seq(
     ("transit_q1_weekday", 1.5, 1.2), ("transit_q2_weekday", 0.9, 0.7),
     ("dedup_exact", 0.4, 0.3), ("text_tokens", 0.2, 0.2))

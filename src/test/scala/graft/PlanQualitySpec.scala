@@ -398,10 +398,8 @@ class PlanQualitySpec extends AnyFunSuite with SparkSpec {
     // the exchange-free read depends on ONE file per bucket (multi-file
     // buckets lose the sortedness guarantee and can demote the scan) —
     // pin the landing layout itself, not just the resulting plan
-    val tag = sf.replaceAll("[^A-Za-z0-9]", "_")
     for (t <- Seq("orders", "customer")) {
-      val files = new java.io.File(
-        s"${sys.props("java.io.tmpdir")}/graft_bucketed_$tag/$t")
+      val files = new java.io.File(s"${Scratch.dir("bucketed", sf)}/$t")
         .listFiles().count(_.getName.endsWith(".parquet"))
       assert(files == graft.relational.RelationalQueries.BucketCount,
         s"$t landed $files files, want one per bucket")

@@ -10,9 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * pinned to the confs `Bench.main` and `HttpServe.main` built by hand
   * before it existed, and a source guard keeps every other file — test
   * sources included — from building a session or reading the two env
-  * vars it owns, keeps system-property reads, child sessions, temp views
-  * and session function registration out of the engine, and pins the
-  * engine's whole env surface to those two plus `SPARK_GRAFT_ONLY`. */
+  * vars it owns, keeps system-property reads, child sessions, temp views,
+  * session function registration and hand-built landing paths out of the
+  * engine, and pins the engine's whole env surface to those two plus
+  * `SPARK_GRAFT_ONLY`. */
 class SessionSpec extends AnyFunSuite {
 
   /** A dir whose only file is `bytes` long but sparse, so the data-sized
@@ -128,6 +129,14 @@ class SessionSpec extends AnyFunSuite {
     assert(registry.isEmpty,
       "function registration or spark.sql.extensions under src/main:\n" +
         registry.mkString("\n"))
+    // one landing policy: every path a face writes comes from graft.Scratch
+    // (one per-JVM root, one sf-dir sanitizer), so no two JVMs share a path
+    val scratch = mainRoot.resolve("graft/Scratch.scala")
+    assert(main.contains(scratch))
+    val landing = offending(mainLines, Seq("""java\.io\.tmpdir""".r, """"target/tmp""".r,
+      """replaceAll\("\[\^A-Za-z0-9""".r), Set(scratch))
+    assert(landing.isEmpty,
+      "landing path or sf-dir sanitizer outside graft.Scratch:\n" + landing.mkString("\n"))
     // the whole env surface: every env read, in any file, names one of these
     val envRead = """sys\.env|System\.getenv""".r
     val envVars = Seq("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_ONLY")
