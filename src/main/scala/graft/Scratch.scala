@@ -8,7 +8,9 @@ import java.nio.file.{Files, Path, Paths}
   * is one fresh `graft-<random>` directory per JVM under the JVM's temp
   * dir, made on first use and deleted at exit. So no two JVMs share a
   * path, a run leaves no files behind, and within one JVM a face's cold
-  * and warm runs land in the same place. */
+  * and warm runs land in the same place. The test suites take their
+  * private dirs from the same root ([[fresh]]), so they leave none
+  * either. */
 object Scratch {
 
   private lazy val root: Path = {
@@ -28,6 +30,11 @@ object Scratch {
   /** Where `name` lands for the tables under `sfDir`; the writer creates it. */
   def dir(name: String, sfDir: String): String =
     root.resolve(s"${name}_${key(sfDir)}").toString
+
+  /** A new empty directory `<root>/<prefix><random>`, for a caller that
+    * needs a private dir rather than a face's keyed landing path; it goes
+    * with the root at exit. */
+  def fresh(prefix: String): Path = Files.createTempDirectory(root, prefix)
 
   /** Recursive delete: the exit hook's, and the streaming faces' clear
     * of their sink and checkpoint before each run. */

@@ -921,10 +921,13 @@ object Dedup {
     * self-join (which this face also runs, as the oracle anchor and as the
     * cost contrast: at 100 TB the sketch path moves 20 × ~100 KB while
     * the exact path shuffles the full distinct (source, shingle) set).
-    * Theta (not HLL) because registers can't intersect — see
-    * [[graft.functions.ThetaSketchAgg]]. At gated SFs the sketches sit in
-    * their exact regime (θ=1, every hash retained), so the 5% gate is met
-    * with identity and the oracle pins exact counts + TRUE. */
+    * Theta (not HLL) because HLL registers merge only by max, so they can
+    * union but never intersect; a theta sketch keeps the hashes below its
+    * θ threshold, so it supports intersection. Sketch and estimate are
+    * Spark's own `theta_sketch_agg` (lgK 14) and `theta_intersection`:
+    * while a sketch holds fewer than 2^14 distinct hashes θ=1 and both are
+    * exact. At gated SFs the sketches sit in that regime, so the 5% gate
+    * is met with identity and the oracle pins exact counts + TRUE. */
   def thetaOverlap(spark: SparkSession, dir: String): DataFrame = {
     // repartition barrier: the exploded shingle pipeline feeds THREE
     // consumers in one plan (the sketch aggregation and both sides of the
@@ -935,13 +938,13 @@ object Dedup {
       explode(graft.functions.GraftFunctions.shingleSet(col("text"))).as("h"))
       .repartition(col("h"))
     val sk = sh.groupBy(col("source"))
-      .agg(graft.functions.GraftFunctions.thetaSketch(col("h")).as("sk"))
+      .agg(theta_sketch_agg(col("h"), 14).as("sk"))
     val est = sk.select(col("source").as("source_a"), col("sk").as("sk_a"))
       .join(sk.select(col("source").as("source_b"), col("sk").as("sk_b")),
         col("source_a") < col("source_b"))
       .select(col("source_a"), col("source_b"),
-        graft.functions.GraftFunctions
-          .thetaIntersect(col("sk_a"), col("sk_b")).as("est"))
+        theta_sketch_estimate(theta_intersection(col("sk_a"), col("sk_b")))
+          .as("est"))
     val dsh = sh.distinct()
     val exact = dsh.select(col("source").as("source_a"), col("h"))
       .join(dsh.select(col("source").as("source_b"), col("h")), Seq("h"))

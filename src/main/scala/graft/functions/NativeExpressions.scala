@@ -707,8 +707,12 @@ case class BloomMightContainExpr(child: Expression, bloomBytes: Array[Byte])
   * expression with the constructor and wraps it as a [[Column]], the way
   * Spark's own `functions` object does, so no session's function registry
   * is written or read: a face resolves to the same expressions in any
-  * session. The aggregates are wrapped with `toAggregateExpression()`, as
-  * the analyzer wraps a resolved aggregate call. */
+  * session. The aggregate is wrapped with `toAggregateExpression()`, as
+  * the analyzer wraps a resolved aggregate call. Sketches Spark ships
+  * (HLL, theta, KLL) are called from `org.apache.spark.sql.functions`
+  * directly; only the top-k sketch is native, because the top-k faces
+  * need ties ordered `(n desc, word asc)` and `approx_top_k` orders them
+  * arbitrarily. */
 object GraftFunctions {
 
   /** Codegen'd SimHash over an array<bigint> column of token hashes. */
@@ -742,28 +746,6 @@ object GraftFunctions {
     * string column, `k` counters per partial — see [[TopKSketchAgg]]. */
   def topkSketch(word: Column, k: Int, topN: Int): Column =
     column(TopKSketchAgg(expr(word), k, topN).toAggregateExpression())
-
-  /** Theta sketch aggregate (binary) over a BIGINT key — see
-    * [[ThetaSketchAgg]] for the intersection-capable set algebra. */
-  def thetaSketch(key: Column, lgK: Int = 14): Column =
-    column(ThetaSketchAgg(expr(key), lgK).toAggregateExpression())
-
-  /** |A ∩ B| estimate from two theta sketch columns. */
-  def thetaIntersect(a: Column, b: Column): Column =
-    column(ThetaIntersectExpr(expr(a), expr(b)))
-
-  /** KLL quantile sketch aggregate (binary) over a DOUBLE measure — see
-    * [[KllSketchAgg]] for the mergeable-quantiles rationale. */
-  def kllSketch(v: Column, k: Int = 200): Column =
-    column(KllSketchAgg(expr(v), k).toAggregateExpression())
-
-  /** Union of serialized KLL sketch partials — see [[KllMergeAgg]]. */
-  def kllMerge(sk: Column, k: Int = 200): Column =
-    column(KllMergeAgg(expr(sk), k).toAggregateExpression())
-
-  /** Quantile estimate at normalized rank `p` from a KLL sketch column. */
-  def kllQuantile(sk: Column, p: Column): Column =
-    column(KllQuantileExpr(expr(sk), expr(p)))
 
   /** Codegen'd per-token [[TextHash.strHash]] over a text column (split
     * with the canonical whitespace tokenizer first). */

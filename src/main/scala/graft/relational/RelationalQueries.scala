@@ -1914,7 +1914,16 @@ object RelationalQueries {
     * independently, union-merged per type, p50/p90/p99 estimated from the
     * merged sketch — the 100 TB replacement for exact percentiles when
     * shards (files/days/regions) are reduced separately and only
-    * O(k·log n)-byte sketches move.
+    * O(k·log n)-byte sketches move. The sketches are Spark's own
+    * `kll_sketch_agg_double` and `kll_merge_agg_double` (k = 200), read
+    * with `kll_sketch_get_quantile_double`, whose INCLUSIVE rank matches
+    * the ceil(p·n) order statistic on exact data.
+    *
+    * Empty-sketch edge, left unguarded: `kll_sketch_get_quantile_double`
+    * throws `KLL_INVALID_INPUT_SKETCH_BUFFER` on a sketch that saw no
+    * value (a group whose `value`s are all null). No registered input
+    * reaches it: `events.value` has no nulls at sf0.01 and sf0.1, and a
+    * group by `event_type` has at least one row by construction.
     *
     * KLL compaction is RANDOMIZED (coin-flip survivor parity), so the
     * estimate is not bit-stable across runs; what is stable is the proven
@@ -1925,19 +1934,18 @@ object RelationalQueries {
     * the sketch's error bound permits (same contract as [[hllShards]]'
     * 5% gate). All gate arithmetic is BIGINT cross-multiplication. */
   def kllQuantiles(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.GraftFunctions
     val ev = Tables.events(spark, dir)
       .select(col("event_type"), col("event_id"), col("value"))
     val est = ev
       .withColumn("shard", pmod(col("event_id"), lit(16L)))
       .groupBy(col("event_type"), col("shard"))
-      .agg(GraftFunctions.kllSketch(col("value")).as("sk"))
+      .agg(kll_sketch_agg_double(col("value"), 200).as("sk"))
       .groupBy(col("event_type"))
-      .agg(GraftFunctions.kllMerge(col("sk")).as("sk"))
+      .agg(kll_merge_agg_double(col("sk"), 200).as("sk"))
       .select(col("event_type"),
-        GraftFunctions.kllQuantile(col("sk"), lit(0.5)).as("e50"),
-        GraftFunctions.kllQuantile(col("sk"), lit(0.9)).as("e90"),
-        GraftFunctions.kllQuantile(col("sk"), lit(0.99)).as("e99"))
+        kll_sketch_get_quantile_double(col("sk"), lit(0.5)).as("e50"),
+        kll_sketch_get_quantile_double(col("sk"), lit(0.9)).as("e90"),
+        kll_sketch_get_quantile_double(col("sk"), lit(0.99)).as("e99"))
     val n = ev.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
     // exact order statistics at ceil(p·n) — integer rank targets, ties
     // broken by event_id so the selected VALUE is position-determined

@@ -66,7 +66,7 @@ class BenchContractSpec extends AnyFunSuite {
     ("dedup_exact", 0.4, 0.3), ("text_tokens", 0.2, 0.2))
 
   test("full-board artifacts: contract line parses, names the written file, sha verifies") {
-    val dir = java.nio.file.Files.createTempDirectory("bench_contract")
+    val dir = Scratch.fresh("bench_contract")
     try {
       val (line, fullLine) = Bench.writeArtifacts(
         results, "/x/testdata/sf0.1", subset = false, baseDir = dir.toString)
@@ -101,7 +101,7 @@ class BenchContractSpec extends AnyFunSuite {
   }
 
   test("subset artifacts: full_map names target/bench.json and no sidecar appears") {
-    val dir = java.nio.file.Files.createTempDirectory("bench_contract_sub")
+    val dir = Scratch.fresh("bench_contract_sub")
     try {
       val (line, fullLine) = Bench.writeArtifacts(
         results.take(1), "/x/testdata/sf0.1", subset = true, baseDir = dir.toString)
@@ -121,7 +121,7 @@ class BenchContractSpec extends AnyFunSuite {
     val times = Iterator(1.5, 1.3, 1.2)
     assert(Bench.timeFace("transit_q1_weekday")(() => times.next()) ==
       Right(("transit_q1_weekday", 1.5, 1.2)))
-    val dir = java.nio.file.Files.createTempDirectory("bench_contract_failed")
+    val dir = Scratch.fresh("bench_contract_failed")
     try {
       val (line, fullLine) = Bench.writeArtifacts(results, "/x/testdata/sf0.1",
         subset = false, baseDir = dir.toString, failed = Seq("dedup_boom"))
@@ -144,7 +144,7 @@ class BenchContractSpec extends AnyFunSuite {
   }
 
   test("baseline_ratio rides sf1 boards (both lines), absent elsewhere or on partial headlines") {
-    val dir = java.nio.file.Files.createTempDirectory("bench_contract_base")
+    val dir = Scratch.fresh("bench_contract_base")
     try {
       // full four-face headline at sf1: avg warm (1.2+1.8+1.2+1.8)/4 = 1.5,
       // ratio = 1.5 / 6.0 = 0.25 — the mechanical bench_vs_baseline number
@@ -177,7 +177,7 @@ class BenchContractSpec extends AnyFunSuite {
   }
 
   test("artifacts are locale-independent (comma-decimal default locale, ADVICE r15)") {
-    val dir = java.nio.file.Files.createTempDirectory("bench_contract_locale")
+    val dir = Scratch.fresh("bench_contract_locale")
     val prev = java.util.Locale.getDefault
     // fr_FR formats %.3f as "4,321" — before the Locale.ROOT fix that
     // corrupted every sidecar and contract line at once
@@ -196,7 +196,7 @@ class BenchContractSpec extends AnyFunSuite {
   }
 
   test("trailing-slash full board still writes its committed sidecar") {
-    val dir = java.nio.file.Files.createTempDirectory("bench_contract_slash")
+    val dir = Scratch.fresh("bench_contract_slash")
     try {
       val (line, _) = Bench.writeArtifacts(
         results, "/x/testdata_sf10/", subset = false, baseDir = dir.toString)

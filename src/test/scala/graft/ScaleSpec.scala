@@ -13,7 +13,7 @@ class ScaleSpec extends SparkSpec {
     * while the rows-sized grid (2.05M*64*8/64MB = 15) still sits under
     * this session's deadband (4*floor=16 at the test floor of 4). */
   private def withOrdersDir(prefix: String)(f: String => Unit): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    val dir = Scratch.fresh(prefix).toString
     try {
       spark.range(2050000L).selectExpr("id as o_orderkey",
         "cast(id % 997 as string) as o_comment")

@@ -23,6 +23,15 @@ class ScratchSpec extends AnyFunSuite with SparkSpec {
     assert(Scratch.key("/a/b-c.d") == "_a_b_c_d")
   }
 
+  test("fresh dirs are new, empty and inside the per-JVM root") {
+    val root = Paths.get(Scratch.dir("x", sf)).getParent
+    val a = Scratch.fresh("spec_")
+    val b = Scratch.fresh("spec_")
+    assert(a != b && a.getParent == root && b.getParent == root)
+    assert(a.getFileName.toString.startsWith("spec_"))
+    assert(Files.isDirectory(a) && a.toFile.list().isEmpty)
+  }
+
   test("a landed snapshot survives another JVM clearing the old shared tmp path") {
     val df = SparkEntry.queries("rel_range_snapshot_census")(spark, sf)
     // the fixed path every JVM used to land this snapshot at: another JVM

@@ -11,15 +11,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * before it existed, and a source guard keeps every other file — test
   * sources included — from building a session or reading the two env
   * vars it owns, keeps system-property reads, child sessions, temp views,
-  * session function registration and hand-built landing paths out of the
-  * engine, and pins the engine's whole env surface to those two plus
-  * `SPARK_GRAFT_ONLY`. */
+  * session function registration, hand-built landing paths and direct
+  * datasketches imports out of the engine, and pins the engine's whole
+  * env surface to those two plus `SPARK_GRAFT_ONLY`. */
 class SessionSpec extends AnyFunSuite {
 
   /** A dir whose only file is `bytes` long but sparse, so the data-sized
     * grid can be exercised without writing the bytes. */
   private def withSizedDir[A](bytes: Long)(f: String => A): A = {
-    val dir = Files.createTempDirectory("session_spec")
+    val dir = Scratch.fresh("session_spec")
     val raf = new java.io.RandomAccessFile(dir.resolve("t.parquet").toFile, "rw")
     try { raf.setLength(bytes); raf.close(); f(dir.toString) }
     finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
@@ -137,6 +137,11 @@ class SessionSpec extends AnyFunSuite {
       """replaceAll\("\[\^A-Za-z0-9""".r), Set(scratch))
     assert(landing.isEmpty,
       "landing path or sf-dir sanitizer outside graft.Scratch:\n" + landing.mkString("\n"))
+    // sketches come from Spark's own functions (HLL, theta, KLL); the
+    // engine keeps no copy of them over datasketches-java
+    val sketches = offending(mainLines, Seq("""org\.apache\.datasketches""".r), Set.empty)
+    assert(sketches.isEmpty,
+      "datasketches used directly under src/main:\n" + sketches.mkString("\n"))
     // the whole env surface: every env read, in any file, names one of these
     val envRead = """sys\.env|System\.getenv""".r
     val envVars = Seq("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_ONLY")

@@ -227,7 +227,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
       (1L, s"one two three $span four five six"),
       (2L, s"seven eight nine $span ten eleven twelve"),
       (3L, "lone words never repeated anywhere here"))
-    val dir = java.nio.file.Files.createTempDirectory("dupspans").toString
+    val dir = graft.Scratch.fresh("dupspans").toString
     import spark.implicits._
     docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
     val rows = Dedup.dupSpans(spark, dir).collect()

@@ -16,9 +16,7 @@ class GraftFunctionsSpec extends AnyFunSuite with SparkSpec {
     "graft_simhash32", "graft_minhash32", "graft_dot", "graft_token_hashes",
     "graft_shingle_set", "graft_shingle_all", "graft_pretoken_stats",
     "graft_pii_scan", "graft_pq_encode", "graft_pyround",
-    "graft_bloom_contains", "graft_topk_words", "graft_theta_sketch",
-    "graft_theta_intersect", "graft_kll_sketch", "graft_kll_merge",
-    "graft_kll_quantile")
+    "graft_bloom_contains", "graft_topk_words")
 
   test("building and running a graft column registers no function in the session") {
     val s = spark.newSession()

@@ -246,7 +246,7 @@ class RelationalOpsSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val T = 1000000000000000000L // ts is raw parquet nanos; day = 86400e9
     val day = 86400L * 1000000000L
-    val dir = java.nio.file.Files.createTempDirectory("decay").toString
+    val dir = graft.Scratch.fresh("decay").toString
     Seq(
       ("a", T, 2.0), ("a", T - day, 2.0),        // 2·2^0 + 2·2^-1 = 3.0
       ("b", T - 2 * day, 4.0),                   // 4·2^-2 = 1.0

@@ -328,7 +328,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val tripled = (0L to 2L).map(k =>
         src.withColumn("vec_id", col("vec_id") + lit(k * off)))
       .reduce(_ unionByName _)
-    val dir = java.nio.file.Files.createTempDirectory("drift3x").toString
+    val dir = graft.Scratch.fresh("drift3x").toString
     tripled.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val got = Similarity.embeddingDrift(spark, dir).collect()
       .map(r => r.get(0).toString -> (r.getLong(1), r.getLong(2), r.getLong(3)))

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 
@@ -9,7 +8,7 @@ class WritersSpec extends AnyFunSuite with SparkSpec {
   test("result CSV and parquet snapshots round-trip") {
     import spark.implicits._
     val df = Seq((1L, "a", 2.5), (2L, "b", 3.5)).toDF("id", "k", "v")
-    val dir = Files.createTempDirectory("graft-writers").toString
+    val dir = graft.Scratch.fresh("graft-writers").toString
 
     Writers.resultCsv(df, s"$dir/csv")
     val csvBack = spark.read.option("header", "true").csv(s"$dir/csv")
@@ -29,7 +28,7 @@ class WritersSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val df = Seq.tabulate(40)(i => (i.toLong, s"lang${i % 4}", i * 1.5))
       .toDF("id", "lang", "v")
-    val dir = Files.createTempDirectory("graft-prune").toString
+    val dir = graft.Scratch.fresh("graft-prune").toString
     Writers.snapshotParquet(df, s"$dir/pq", partitionBy = Seq("lang"))
     val q = spark.read.parquet(s"$dir/pq").filter($"lang" === "lang2")
     // the filter must reach the file index as a PartitionFilter (only the
@@ -47,7 +46,7 @@ class WritersSpec extends AnyFunSuite with SparkSpec {
     import org.apache.spark.sql.functions._
     val df = Seq.tabulate(1000)(i => ((i * 7919) % 1000L, s"p$i"))
       .toDF("k", "payload")
-    val dir = Files.createTempDirectory("graft-range").toString
+    val dir = graft.Scratch.fresh("graft-range").toString
     Writers.rangePartitionedSnapshot(df, s"$dir/pq", "k", 8)
     // per-file min/max must not overlap: that is what lets footer stats
     // prune whole files on a range predicate
@@ -77,7 +76,7 @@ class WritersSpec extends AnyFunSuite with SparkSpec {
     val df = Seq((1L, "a"), (1L, "b"), (2L, "c")).toDF("id", "tag")
       .groupBy($"id")
       .agg(collect_list(struct($"tag", length($"tag").as("n"))).as("tags"))
-    val dir = Files.createTempDirectory("graft-json").toString
+    val dir = graft.Scratch.fresh("graft-json").toString
     Writers.resultJson(df, s"$dir/j")
     val back = Writers.readJson(spark, s"$dir/j", df.schema)
     // JSON relaxes nullability on read (every field is optional in JSON);
@@ -93,7 +92,7 @@ class WritersSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val facts = (1L to 1000L).map(i => (i % 50, i, i * 1.5))
       .toDF("key", "id", "v")
-    val dir = Files.createTempDirectory("graft-bucketed").toString
+    val dir = graft.Scratch.fresh("graft-bucketed").toString
     val t = Writers.bucketedTable(facts, "graft_bucketed_facts", Seq("key"), 8, s"$dir/t")
     try {
       val agg = t.groupBy($"key").agg(org.apache.spark.sql.functions.sum($"v").as("s"))
@@ -106,7 +105,7 @@ class WritersSpec extends AnyFunSuite with SparkSpec {
 
   test("training shards: split dirs, deterministic hash shards, sorted within shard") {
     val sf = "/root/testdata/sf0.01"
-    val dir = Files.createTempDirectory("graft-shards").toString
+    val dir = graft.Scratch.fresh("graft-shards").toString
     val docs = graft.text.TextAnalysis.splitAssign(spark, sf)
       .join(graft.sources.Tables.documents(spark, sf), "doc_id")
       .select("doc_id", "split", "lang", "n_chars")

@@ -247,7 +247,7 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
     // checkpoint + the file sink's transaction log give exactly-once
     // across a stop/restart — batch 1 is not re-emitted, batch 2 (which
     // arrived while the query was DOWN) is not lost
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toFile
+    val dir = graft.Scratch.fresh("graft_ckpt_").toFile
     val out = new java.io.File(dir, "out").getAbsolutePath
     val ckpt = new java.io.File(dir, "ckpt").getAbsolutePath
     val stream = MemoryStream[(Long, String)]
@@ -394,7 +394,7 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
     val sdf = stream.toDF.toDF("event_id", "min", "user_id", "event_type")
       .select(col("event_id"), expr("timestamp_millis(min * 60000)").as("ts"),
         col("user_id"), col("event_type"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-feb").toString
+    val dir = graft.Scratch.fresh("graft-feb").toString
     val q = Streams.parquetSink(Streams.dedupStreaming(sdf), dir)
     try q.processAllAvailable() finally q.stop()
     val back = spark.read.parquet(s"$dir/data")

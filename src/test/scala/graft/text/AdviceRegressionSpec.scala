@@ -22,8 +22,7 @@ class AdviceRegressionSpec extends AnyFunSuite with SparkSpec {
   /** Write a documents.parquet fixture and return its dir. */
   private def fixture(rows: Seq[(Long, String, String, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-advice-fix").toString
+    val dir = graft.Scratch.fresh("graft-advice-fix").toString
     rows.toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -223,7 +223,7 @@ class TextOpsSpec extends AnyFunSuite with SparkSpec {
       spark.range(1).select(graft.functions.TextHash.strHash(lit(s"sc:$i:0")) % 5)
         .head().getLong(0) != 0L
     }.get
-    val dir = java.nio.file.Files.createTempDirectory("span_corruption")
+    val dir = graft.Scratch.fresh("span_corruption")
     try {
       Seq((id, "solitary")).toDF("doc_id", "text")
         .write.parquet(dir.resolve("documents.parquet").toString)

@@ -33,7 +33,7 @@ class HttpServeParitySpec extends SparkSpec {
   /** The snapshot-backed service the production listeners run:
     * analytics snapshots on disk, each read once and pinned. */
   private lazy val snapDir = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_parity_snap").toString
+    val dir = graft.Scratch.fresh("graft_parity_snap").toString
     QueryService.buildAnalyticsSnapshots(t, dir)
     dir
   }

@@ -15,7 +15,7 @@ class ServingResidencySpec extends SparkSpec {
 
   private lazy val t = GtfsFixture.tables(spark)
   private lazy val snapDir = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_residency_snap").toString
+    val dir = graft.Scratch.fresh("graft_residency_snap").toString
     QueryService.buildAnalyticsSnapshots(t, dir)
     dir
   }

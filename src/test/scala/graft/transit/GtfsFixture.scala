@@ -15,7 +15,7 @@ object GtfsFixture {
     Files.writeString(dir.resolve(name), content.stripMargin.trim + "\n")
 
   def feedDir(): String = {
-    val dir = Files.createTempDirectory("gtfs_fixture")
+    val dir = graft.Scratch.fresh("gtfs_fixture")
     write(dir, "calendar.txt",
       """service_id,monday,tuesday,wednesday,thursday,friday,saturday,sunday,start_date,end_date
         |1,1,1,1,1,1,0,0,20250101,20251231

@@ -29,7 +29,7 @@ class QueryServiceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("R4: snapshot-served q1 equals the live plan (weekday and whole-week)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_svc_spec").toString
+    val dir = graft.Scratch.fresh("graft_svc_spec").toString
     QueryService.buildAnalyticsSnapshots(t, dir)
     val svc = new QueryService(t, Some(dir))
     for (s <- Seq[ServiceFilter](ServiceFilter.Weekday, ServiceFilter.WholeWeek)) {
@@ -42,7 +42,7 @@ class QueryServiceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("R4: snapshot-served q2/q3/q4 equal their live plans (weekday)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_svc_spec2").toString
+    val dir = graft.Scratch.fresh("graft_svc_spec2").toString
     QueryService.buildAnalyticsSnapshots(t, dir)
     val svc = new QueryService(t, Some(dir))
     assert(collectSorted(svc.q2(ServiceFilter.Weekday)) ===
@@ -54,7 +54,7 @@ class QueryServiceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("R4: the snapshot read prunes to one service partition") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_svc_spec3").toString
+    val dir = graft.Scratch.fresh("graft_svc_spec3").toString
     QueryService.buildSnapshot(t, dir, QueryService.Q1)
     val plan = new QueryService(t, Some(dir)).q1(ServiceFilter.Weekday)
       .queryExecution.executedPlan.toString
@@ -100,7 +100,7 @@ class QueryServiceSpec extends AnyFunSuite with SparkSpec {
 
   test("R4: snapshot-served q1 skips a blank route_id, as the live plan does") {
     val blank = blankRouteFeed()
-    val dir = java.nio.file.Files.createTempDirectory("graft_svc_spec_blank").toString
+    val dir = graft.Scratch.fresh("graft_svc_spec_blank").toString
     QueryService.buildSnapshot(blank, dir, QueryService.Q1)
     val svc = new QueryService(blank, Some(dir))
     for (s <- Seq[ServiceFilter](ServiceFilter.Weekday, ServiceFilter.WholeWeek)) {
@@ -114,7 +114,7 @@ class QueryServiceSpec extends AnyFunSuite with SparkSpec {
     * served from Q1's table, equals live q3 for every service, both per
     * slice and in the cached listener's tagged superset. */
   private def q3ServedEqualsLive(tables: TransitTables): QueryService = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_svc_spec_q3").toString
+    val dir = graft.Scratch.fresh("graft_svc_spec_q3").toString
     QueryService.buildAnalyticsSnapshots(tables, dir)
     val svc = new QueryService(tables, Some(dir))
     val tagged = svc.taggedJson(QueryService.Q3)
@@ -140,7 +140,7 @@ class QueryServiceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("R4: the analytics build writes the Q1, Q2 and Q4 tables and no other") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_svc_spec_tables")
+    val dir = graft.Scratch.fresh("graft_svc_spec_tables")
     QueryService.buildAnalyticsSnapshots(t, dir.toString)
     val written = dir.toFile.listFiles().filter(_.isDirectory).map(_.getName).toSet
     assert(written === Set(QueryService.Q1, QueryService.Q2, QueryService.Q4))
